@@ -11,14 +11,15 @@ database, so an EtlPipeline can extract FROM and load INTO live
 RDBMSes exactly like the reference deployment — pipeline.load() is
 duck-typed over append/upsert, nothing else changes.
 
-Write protocol: the merged state is computed as ONE Spark plan (the
-same anti-join+union MERGE shape as ParquetSink — per-row dataset
-upserts were the reference's N+1 bottleneck), bulk-written via the
-Spark JDBC writer to a STAGING table, then swapped in with RENAME
-TABLE statements on a single JDBC connection — a crash leaves the old
-or the new table, never a half-written one. Engines without RENAME
-TABLE fall back to an in-place overwrite (documented window, same
-posture as the reference's own non-transactional load loop).
+Write protocol: the merged state is ONE Spark plan built by the shared
+merge plan in ``sources/sinks.py`` (``append_state`` / ``upsert_state``
+— per-row dataset upserts were the reference's N+1 bottleneck),
+bulk-written via the Spark JDBC writer to a STAGING table, then
+swapped in with RENAME TABLE statements on a single JDBC connection —
+a crash leaves the old or the new table, never a half-written one.
+Engines without RENAME TABLE fall back to an in-place overwrite
+(documented window, same posture as the reference's own
+non-transactional load loop).
 
 Scale notes: reads/writes go through Spark's JDBC partitioned IO —
 bulk INSERTs, optional partitionColumn-parallel reads. The merge plan
@@ -31,9 +32,8 @@ from __future__ import annotations
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .sinks import dense_ids
+from .sinks import append_state, upsert_state
 
 
 class _NoRenameDialect(Exception):
@@ -199,69 +199,17 @@ class JdbcSink:
         finally:
             conn.close()
 
-    def _with_ids(self, df: DataFrame, offset: int) -> DataFrame:
-        if self.id_col in df.columns:
-            return df
-        return dense_ids(df, self.id_col, offset)
-
     def append(self, df: DataFrame, ensure: bool | None = None,
                safe: bool = False) -> None:
-        """Append-insert load (easy_etl/__init__.py:96): ensure adds
-        new columns (default), ensure=False restricts to the target's
-        columns, safe=False drop-syncs stale target columns
-        (easy_etl/__init__.py:97-99,113-117)."""
-        current = self.read()
-        if current is None:
-            self._swap_write(self._with_ids(df, 0))
-            return
-        offset = current.agg(F.max(self.id_col)).first()[0] or 0
-        incoming = self._with_ids(df, offset)
-        keep_current = current
-        if not safe:
-            stale = [
-                c for c in current.columns
-                if c not in incoming.columns and c != self.id_col
-            ]
-            if stale:
-                keep_current = current.drop(*stale)
-        if ensure is False:
-            incoming = incoming.select(
-                *[c for c in incoming.columns if c in keep_current.columns]
-            )
-        self._swap_write(
-            keep_current.unionByName(incoming, allowMissingColumns=True)
-        )
+        """Append-insert load (``sinks.append_state``: ensure adds new
+        columns by default, ensure=False restricts to the target's
+        columns, safe=False drop-syncs stale target columns)."""
+        self._swap_write(append_state(self.read(), df, self.id_col, ensure, safe))
 
     def upsert(self, df: DataFrame, keys: list[str],
                ensure: bool | None = None, safe: bool = False) -> None:
-        """Keyed merge (easy_etl/__init__.py:93-94): update matches
+        """Keyed merge (``sinks.upsert_state``): update matches
         (surrogate ids preserved), insert the rest (fresh ids past the
-        current max) — the ParquetSink MERGE plan, bulk-written over
-        JDBC instead of the reference's per-row dataset.upsert."""
-        current = self.read()
-        if current is None:
-            self._swap_write(self._with_ids(df, 0))
-            return
-        offset = current.agg(F.max(self.id_col)).first()[0] or 0
-        src = df.drop(self.id_col) if self.id_col in df.columns else df
-        survivors = current.join(src.select(*keys), on=keys, how="left_anti")
-        id_map = current.select(self.id_col, *keys).dropDuplicates(keys)
-        matched = src.join(id_map, on=keys, how="inner")
-        inserts = dense_ids(
-            src.join(current.select(*keys), on=keys, how="left_anti"),
-            self.id_col, offset,
-        )
-        if not safe:
-            stale = [
-                c for c in survivors.columns
-                if c not in src.columns and c != self.id_col
-            ]
-            if stale:
-                survivors = survivors.drop(*stale)
-        merged = survivors.unionByName(matched, allowMissingColumns=True).unionByName(
-            inserts, allowMissingColumns=True
-        )
-        if ensure is False:
-            keep = set(current.columns)
-            merged = merged.select(*[c for c in merged.columns if c in keep])
-        self._swap_write(merged)
+        current max) — bulk-written over JDBC instead of the
+        reference's per-row dataset.upsert."""
+        self._swap_write(upsert_state(self.read(), df, keys, self.id_col, ensure, safe))

@@ -21,7 +21,8 @@ Semantics parity notes (documented deltas from the parquet sink):
   - vacuum() takes retention HOURS (Delta's contract) instead of the
     parquet sink's orphan-grace seconds; Delta enforces its own
     retention-safety check;
-  - upsert id assignment matches txn.py: matched keys keep their
+  - upsert ids come from the shared merge plan in sources/sinks.py
+    (``keyed_changes``, the MERGE source): matched keys keep their
     surrogate id, inserts get dense ids above the current max.
 """
 
@@ -30,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .sinks import dense_ids
+from .sinks import ids_past_max, keyed_changes
 
 
 class DeltaTableSink:
@@ -60,14 +61,6 @@ class DeltaTableSink:
 
         return DeltaTable.isDeltaTable(self.spark, self.path)
 
-    def _with_ids(self, df: DataFrame, current: DataFrame | None) -> DataFrame:
-        if self.id_col in df.columns:
-            return df
-        offset = 0
-        if current is not None and self.id_col in current.columns:
-            offset = current.agg(F.max(self.id_col)).first()[0] or 0
-        return dense_ids(df, self.id_col, offset)
-
     # -- commit log --------------------------------------------------
     def versions(self) -> list[int]:
         if not self._exists():
@@ -95,7 +88,7 @@ class DeltaTableSink:
 
     # -- writes ------------------------------------------------------
     def append(self, df: DataFrame) -> int:
-        incoming = self._with_ids(df, self.read())
+        incoming = ids_past_max(df, self.read(), self.id_col)
         (
             incoming.write.format("delta")
             .mode("append")
@@ -108,18 +101,7 @@ class DeltaTableSink:
         current = self.read()
         if current is None:
             return self.append(df)
-        src = df.drop(self.id_col) if self.id_col in df.columns else df
-        # surrogate-id plan lifted from txn.upsert: matched keys keep
-        # the target's id, inserts take dense ids above the current max
-        id_map = current.select(self.id_col, *keys).dropDuplicates(keys)
-        matched = src.join(id_map, on=keys, how="inner")
-        offset = current.agg(F.max(self.id_col)).first()[0] or 0
-        inserts = dense_ids(
-            src.join(current.select(*keys), on=keys, how="left_anti"),
-            self.id_col,
-            offset,
-        )
-        source = matched.unionByName(inserts, allowMissingColumns=True)
+        source = keyed_changes(current, df, keys, self.id_col)
         cond = " AND ".join(f"t.`{k}` <=> s.`{k}`" for k in keys)
         (
             self._table()

@@ -11,12 +11,20 @@ Reference parity (exit99/easy-etl):
   - auto-increment surrogate ``id`` (easy_etl/README.md:180)
 
 Spark-first design: the per-row INSERT/UPSERT loop becomes one
-distributed columnar write. Upsert-without-a-transactional-format is
-expressed as ``target.join(src, keys, "left_anti").unionByName(src)``
-then an atomic directory swap — the same logical plan a Delta MERGE
-compiles to (minus the transaction log). On a real deployment this
-class is swapped for Delta/Iceberg MERGE; the interface is format-
-agnostic on purpose.
+distributed columnar write. The merge plan lives here once, as
+module-level functions every sink (ParquetSink, JdbcSink,
+TransactionalParquetSink, DeltaTableSink) builds its load from:
+
+  - ``ids_past_max``: dense surrogate ids past the target's max id;
+  - ``keyed_changes``: the incoming rows with their ids resolved —
+    matched rows carry the target's id, inserts get fresh ids;
+  - ``append_state`` / ``upsert_state``: the full new table state,
+    ``target ⟕anti src ∪ changes`` for an upsert (the logical plan a
+    Delta MERGE compiles to), with ``ensure`` and drop-sync applied.
+
+Each sink keeps only its storage commit (directory swap, JDBC rename,
+commit-log claim, Delta MERGE); the interface is format-agnostic on
+purpose.
 
 Scale notes: the anti-join shuffles on the upsert keys — that is the
 unavoidable shuffle of any merge. Surrogate ids use a partition-offset
@@ -70,6 +78,91 @@ def dense_ids(df: DataFrame, id_col: str = "id", offset: int = 0) -> DataFrame:
         .drop("__pid", "__ord")
         .select(id_col, *df.columns)
     )
+
+
+def ids_past_max(df: DataFrame, current: DataFrame | None, id_col: str = "id") -> DataFrame:
+    """``df`` with dense ``id_col`` values continuing past the target's
+    max id (reference parity: auto-increment ``id``, README.md:180). A
+    frame that already carries ``id_col`` keeps its own ids, and the
+    ``max(id)`` job runs only when fresh ids are actually needed."""
+    if id_col in df.columns:
+        return df
+    offset = 0
+    if current is not None and id_col in current.columns:
+        offset = current.agg(F.max(id_col)).first()[0] or 0
+    return dense_ids(df, id_col, offset)
+
+
+def keyed_changes(current: DataFrame, df: DataFrame, keys: list[str], id_col: str = "id") -> DataFrame:
+    """The incoming rows of a keyed merge with their surrogate ids
+    resolved: matched rows carry the target's id (first match per
+    key), inserts get dense ids past the current max. When ``id_col``
+    is itself a key, the incoming ids are authoritative and kept."""
+    if id_col in keys:
+        return df
+    src = df.drop(id_col) if id_col in df.columns else df
+    id_map = current.select(id_col, *keys).dropDuplicates(keys)
+    matched = src.join(id_map, on=keys, how="inner")
+    inserts = ids_past_max(src.join(current.select(*keys), on=keys, how="left_anti"), current, id_col)
+    return matched.unionByName(inserts, allowMissingColumns=True)
+
+
+def append_state(
+    current: DataFrame | None, df: DataFrame, id_col: str = "id", ensure: bool | None = None, safe: bool = False
+) -> DataFrame:
+    """New table state of an append-insert load (easy_etl/__init__.py:96).
+
+    ensure=True/None → new columns are added to the target (schema
+    union, like dataset's ensure). ensure=False → incoming frame is
+    restricted to existing target columns. safe=False → drop-sync
+    stale target columns (easy_etl/__init__.py:97-99,113-117).
+    """
+    incoming = ids_past_max(df, current, id_col)
+    if current is None:
+        return incoming
+    if not safe:
+        # drop-sync: converge target schema to pipeline output (+id)
+        stale = [c for c in current.columns if c not in incoming.columns and c != id_col]
+        if stale:
+            current = current.drop(*stale)
+    if ensure is False:
+        incoming = incoming.select(*[c for c in incoming.columns if c in current.columns])
+    return current.unionByName(incoming, allowMissingColumns=True)
+
+
+def upsert_state(
+    current: DataFrame | None,
+    df: DataFrame,
+    keys: list[str],
+    id_col: str = "id",
+    ensure: bool | None = None,
+    safe: bool = False,
+) -> DataFrame:
+    """New table state of a keyed merge (easy_etl/__init__.py:93-94):
+    survivors = target ⟕anti src; result = survivors ∪ keyed_changes.
+    ``ensure``/``safe`` as in ``append_state``."""
+    if current is None:
+        return ids_past_max(df, None, id_col)
+    survivors = current.join(df.select(*keys), on=keys, how="left_anti")
+    if not safe:
+        stale = [c for c in survivors.columns if c not in df.columns and c != id_col]
+        if stale:
+            survivors = survivors.drop(*stale)
+    merged = survivors.unionByName(keyed_changes(current, df, keys, id_col), allowMissingColumns=True)
+    if ensure is False:
+        merged = merged.select(*[c for c in merged.columns if c in current.columns])
+    return merged
+
+
+def compaction_input(df: DataFrame, target_rows_per_file: int) -> DataFrame:
+    """``df`` re-partitioned to ~``target_rows_per_file`` rows per
+    output file. One count job sizes it; the rewrite is a shuffle-free
+    coalesce when shrinking, or a round-robin repartition when the file
+    count must grow (coalesce can only merge)."""
+    n_files = max(1, -(-df.count() // target_rows_per_file))  # ceil
+    if n_files > df.rdd.getNumPartitions():
+        return df.repartition(n_files)
+    return df.coalesce(n_files)
 
 
 class ParquetSink:
@@ -149,21 +242,32 @@ class ParquetSink:
         cur = self.read()
         return cur.columns if cur is not None else []
 
-    # -- surrogate keys ---------------------------------------------
-    def _with_ids(self, df: DataFrame, offset: int) -> DataFrame:
-        """Dense ids continuing from ``offset`` (reference parity:
-        auto-increment ``id``, README.md:180)."""
-        if self.id_col in df.columns:
-            return df
-        return dense_ids(df, self.id_col, offset)
-
     # -- writes -----------------------------------------------------
+    @staticmethod
+    def _swap_dir(staging: str, target: str, keep_as: str | None = None) -> None:
+        """Rename ``staging`` into ``target``: the old ``target`` (if
+        any) is moved aside first and rolled back in if the second
+        rename fails, so a crash at any point leaves either the old or
+        the new directory on disk, never neither. The old directory is
+        then deleted, or kept at ``keep_as`` (a retained snapshot)."""
+        old = keep_as or f"{staging}.__old"
+        had_target = os.path.exists(target)
+        if had_target:
+            os.replace(target, old)
+        try:
+            os.replace(staging, target)
+        except BaseException:
+            if had_target:
+                os.replace(old, target)  # roll the old directory back in
+            raise
+        if had_target and keep_as is None:
+            shutil.rmtree(old)
+
     def _swap_write(self, df: DataFrame) -> None:
-        """Write to a staging dir then swap it in — needed because the
-        plan may read the same path it replaces. The old table is moved
-        aside (rename, atomic) before staging moves in, so a crash at
-        any point leaves either the old or the new table on disk, never
-        neither; the leftover ``.__old`` dir is garbage-collectable."""
+        """Write to a staging dir then swap it in (``_swap_dir``) —
+        needed because the plan may read the same path it replaces. With
+        ``keep_versions`` the replaced table becomes the next ``.__v{k}``
+        snapshot and snapshots past the retention window are pruned."""
         staging = f"{self.path}.__staging_{uuid.uuid4().hex[:8]}"
         if self.cluster_by:
             cols = [F.col(c) for c in self.cluster_by]
@@ -172,50 +276,28 @@ class ParquetSink:
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
         writer.parquet(staging)
-        if self.keep_versions > 0:
-            vs = self.versions()
-            old = self._version_path((vs[-1] if vs else 0) + 1)
-        else:
-            old = f"{self.path}.__old_{uuid.uuid4().hex[:8]}"
-        had_target = os.path.exists(self.path)
-        if had_target:
-            os.replace(self.path, old)
-        try:
-            os.replace(staging, self.path)
-        except BaseException:
-            if had_target:
-                os.replace(old, self.path)  # roll the old table back in
-            raise
-        if had_target:
-            if self.keep_versions > 0:
-                # prune snapshots beyond the retention window
-                for v in self.versions()[: -self.keep_versions] or []:
-                    shutil.rmtree(self._version_path(v))
-            else:
-                shutil.rmtree(old)
+        if self.keep_versions <= 0:
+            self._swap_dir(staging, self.path)
+            return
+        vs = self.versions()
+        self._swap_dir(staging, self.path, keep_as=self._version_path((vs[-1] if vs else 0) + 1))
+        # prune snapshots beyond the retention window
+        for v in self.versions()[: -self.keep_versions]:
+            shutil.rmtree(self._version_path(v))
 
     def append(self, df: DataFrame, ensure: bool | None = None, safe: bool = False) -> None:
-        """Append-insert load (easy_etl/__init__.py:96).
-
-        ensure=True/None → new columns are added to the target (schema
-        union, like dataset's ensure). ensure=False → incoming frame is
-        restricted to existing target columns. safe=False → drop-sync
-        stale target columns (easy_etl/__init__.py:97-99,113-117).
-        """
+        """Append-insert load; the new state is ``append_state`` (see
+        there for ``ensure``/``safe``)."""
         current = self.read()
-        if current is None:
-            self._swap_write(self._with_ids(df, 0))
-            return
-        offset_row = current.agg(F.max(self.id_col).alias("m")).first()
-        offset = offset_row["m"] or 0
-        incoming = self._with_ids(df, offset)
+        incoming = ids_past_max(df, current, self.id_col)
 
         # partitioned fast path: when no schema sync is requested and
         # the schema already matches, append only the touched partition
         # directories instead of rewriting the table — the difference
         # between O(batch) and O(table) work on a 100 TB target.
         if (
-            self.partition_by
+            current is not None
+            and self.partition_by
             and safe
             and ensure is not False
             and dict(incoming.dtypes) == dict(current.dtypes)  # names AND types
@@ -226,63 +308,13 @@ class ParquetSink:
                 out = out.repartitionByRange(*cols).sortWithinPartitions(*cols)
             out.write.mode("append").partitionBy(*self.partition_by).parquet(self.path)
             return
-
-        keep_current = current
-        if not safe:
-            # drop-sync: converge target schema to pipeline output (+id)
-            stale = [c for c in current.columns if c not in incoming.columns and c != self.id_col]
-            if stale:
-                keep_current = current.drop(*stale)
-        if ensure is False:
-            incoming = incoming.select(*[c for c in incoming.columns if c in keep_current.columns])
-        merged = keep_current.unionByName(incoming, allowMissingColumns=True)
-        self._swap_write(merged)
+        self._swap_write(append_state(current, incoming, self.id_col, ensure, safe))
 
     def upsert(self, df: DataFrame, keys: list[str], ensure: bool | None = None, safe: bool = False) -> None:
-        """Keyed merge: update matching rows, insert the rest
-        (easy_etl/__init__.py:93-94). Matched rows keep their existing
-        surrogate id; inserts get fresh ids past the current max.
-
-        Logical plan = Delta MERGE without the txn log:
-        survivors = target ⟕anti src; updated = src ⨝ target-ids;
-        result = survivors ∪ updated ∪ inserts.
-        """
-        current = self.read()
-        if current is None:
-            self._swap_write(self._with_ids(df, 0))
-            return
-        offset = current.agg(F.max(self.id_col).alias("m")).first()["m"] or 0
-
-        if self.id_col in keys:
-            # the surrogate IS the natural key (keyed-on-id upsert):
-            # incoming ids are authoritative — no regeneration/mapping
-            src = df
-            survivors = current.join(src.select(*keys), on=keys, how="left_anti")
-            matched = src.join(current.select(*keys), on=keys, how="left_semi")
-            inserts = src.join(current.select(*keys), on=keys, how="left_anti")
-        else:
-            src = df.drop(self.id_col) if self.id_col in df.columns else df
-            survivors = current.join(src.select(*keys), on=keys, how="left_anti")
-            # carry existing ids onto updated rows (first match per key)
-            id_map = current.select(self.id_col, *keys).dropDuplicates(keys)
-            matched = src.join(id_map, on=keys, how="inner")
-            inserts = dense_ids(
-                src.join(current.select(*keys), on=keys, how="left_anti"),
-                self.id_col,
-                offset,
-            )
-
-        if not safe:
-            stale = [c for c in survivors.columns if c not in src.columns and c != self.id_col]
-            if stale:
-                survivors = survivors.drop(*stale)
-        merged = survivors.unionByName(matched, allowMissingColumns=True).unionByName(
-            inserts, allowMissingColumns=True
-        )
-        if ensure is False:
-            keep = set(current.columns)
-            merged = merged.select(*[c for c in merged.columns if c in keep])
-        self._swap_write(merged)
+        """Keyed merge: update matching rows, insert the rest. Matched
+        rows keep their existing surrogate id; inserts get fresh ids
+        past the current max (``upsert_state``)."""
+        self._swap_write(upsert_state(self.read(), df, keys, self.id_col, ensure, safe))
 
     # -- maintenance ------------------------------------------------
     def data_files(self) -> list[str]:
@@ -343,14 +375,7 @@ class ParquetSink:
             if self.partition_by and not keep.isEmpty():
                 writer = writer.partitionBy(*self.partition_by)
             writer.parquet(staging)
-            old = f"{p}.__vold_{uuid.uuid4().hex[:8]}"
-            os.replace(p, old)
-            try:
-                os.replace(staging, p)
-            except BaseException:
-                os.replace(old, p)
-                raise
-            shutil.rmtree(old)
+            self._swap_dir(staging, p)
 
     def delete_where(self, condition, purge_versions: bool = True) -> int:
         """Targeted delete (GDPR/right-to-be-forgotten purge, bad-batch
@@ -364,7 +389,7 @@ class ParquetSink:
         re-rendered from values), so Spark's partition-path escaping and
         NULL partitions resolve correctly. Each touched partition is
         rewritten to a staging dir and atomically swapped (same crash
-        posture as _swap_write); partitions whose rows are all purged
+        posture, via ``_swap_dir``); partitions whose rows are all purged
         are removed outright. Unpartitioned tables fall back to one
         full rewrite.
 
@@ -414,14 +439,7 @@ class ParquetSink:
                 continue
             staging = f"{self.path}.__pstage_{uuid.uuid4().hex[:8]}"
             keep.write.mode("overwrite").parquet(staging)
-            old = f"{self.path}.__pold_{uuid.uuid4().hex[:8]}"
-            os.replace(pdir, old)
-            try:
-                os.replace(staging, pdir)
-            except BaseException:
-                os.replace(old, pdir)
-                raise
-            shutil.rmtree(old)
+            self._swap_dir(staging, pdir)
         if purge_versions:
             self._purge_versions(hit)
         return n_deleted
@@ -436,21 +454,10 @@ class ParquetSink:
         load); clustered tables re-sort through the normal
         ``cluster_by`` path. Returns the new file count.
 
-        One count job sizes the output; the rewrite itself is one
-        shuffle-free coalesce when shrinking (or round-robin
-        repartition when growing parallelism is needed).
+        Sizing is ``compaction_input``.
         """
         current = self.read()
         if current is None:
             return 0
-        n = current.count()
-        n_files = max(1, -(-n // target_rows_per_file))  # ceil
-        if n_files > current.rdd.getNumPartitions():
-            # coalesce can only merge — growing the file count (fewer,
-            # fatter input partitions than targets) needs a round-robin
-            # repartition to actually split
-            df = current.repartition(n_files)
-        else:
-            df = current.coalesce(n_files)
-        self._swap_write(df)
+        self._swap_write(compaction_input(current, target_rows_per_file))
         return len(self.data_files())

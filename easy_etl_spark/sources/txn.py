@@ -22,7 +22,10 @@ design Delta Lake / Iceberg use, scaled down to one table:
 
 Writer protocol (optimistic concurrency, Delta-style):
   1. read the latest committed version N and its table state
-  2. compute the new state, write it to a fresh _data/<uuid> snapshot
+  2. compute the new state — for appends/upserts the shared merge plan
+     in sources/sinks.py (``append_state`` / ``upsert_state``); this
+     module adds only the commit — and write it to a fresh
+     _data/<uuid> snapshot
   3. try to commit as N+1; on conflict (another writer won N+1),
      REBASE: recompute the new state against the winner's table and
      retry at N+2. Appends/upserts/deletes are self-rebasing — the
@@ -52,7 +55,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .sinks import dense_ids
+from .sinks import append_state, compaction_input, upsert_state
 
 
 class CommitConflict(RuntimeError):
@@ -219,43 +222,20 @@ class TransactionalParquetSink:
             f"gave up after {self.max_retries} optimistic retries on {self.path}"
         )
 
-    def _with_ids(self, df: DataFrame, current: DataFrame | None) -> DataFrame:
-        if self.id_col in df.columns:
-            return df
-        offset = 0
-        if current is not None and self.id_col in current.columns:
-            offset = current.agg(F.max(self.id_col)).first()[0] or 0
-        return dense_ids(df, self.id_col, offset)
-
     def append(self, df: DataFrame) -> int:
-        """Append-insert as one atomic commit. Returns the version."""
+        """Append-insert as one atomic commit (``sinks.append_state``,
+        schema union, no drop-sync). Returns the version."""
         def compute(current: DataFrame | None) -> DataFrame:
-            incoming = self._with_ids(df, current)
-            if current is None:
-                return incoming
-            return current.unionByName(incoming, allowMissingColumns=True)
+            return append_state(current, df, self.id_col, safe=True)
 
         return self._commit_loop(compute, "append")
 
     def upsert(self, df: DataFrame, keys: list[str]) -> int:
         """Keyed merge (update matches, insert the rest) as one atomic
-        commit — the Delta MERGE plan: survivors ⟕anti src ∪ updated ∪
-        inserts, with surrogate ids preserved on matches."""
+        commit (``sinks.upsert_state``, schema union, no drop-sync),
+        with surrogate ids preserved on matches."""
         def compute(current: DataFrame | None) -> DataFrame:
-            if current is None:
-                return self._with_ids(df, None)
-            src = df.drop(self.id_col) if self.id_col in df.columns else df
-            survivors = current.join(src.select(*keys), on=keys, how="left_anti")
-            id_map = current.select(self.id_col, *keys).dropDuplicates(keys)
-            matched = src.join(id_map, on=keys, how="inner")
-            offset = current.agg(F.max(self.id_col)).first()[0] or 0
-            inserts = dense_ids(
-                src.join(current.select(*keys), on=keys, how="left_anti"),
-                self.id_col, offset,
-            )
-            return survivors.unionByName(matched, allowMissingColumns=True).unionByName(
-                inserts, allowMissingColumns=True
-            )
+            return upsert_state(current, df, keys, self.id_col, safe=True)
 
         return self._commit_loop(compute, "upsert")
 
@@ -284,11 +264,7 @@ class TransactionalParquetSink:
         def compute(current: DataFrame | None) -> DataFrame:
             if current is None:
                 raise ValueError("compact on an empty table")
-            n = current.count()
-            n_files = max(1, -(-n // target_rows_per_file))  # ceil
-            if n_files > current.rdd.getNumPartitions():
-                return current.repartition(n_files)
-            return current.coalesce(n_files)
+            return compaction_input(current, target_rows_per_file)
 
         return self._commit_loop(compute, "optimize")
 

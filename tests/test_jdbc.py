@@ -172,3 +172,38 @@ def test_jdbc_sink_through_pipeline_facade(spark, jdbc_url, tmp_path_factory):
     )
     pipe2.load(sink, upsert_fields=["order_id"])
     assert _rows(sink, "order_id", "amount") == [(2, 250.0), (3, 999.0)]
+
+
+# ----------------------------------------------------------------------
+# One load contract for every sink: all of them build their new table
+# state from the shared merge plan in sources/sinks.py
+# ----------------------------------------------------------------------
+
+def _contract_sink(kind, spark, tmp_path_factory):
+    if kind == "parquet":
+        return ParquetSink(spark, str(tmp_path_factory.mktemp("contract") / "t"))
+    if kind == "txn":
+        from easy_etl_spark.sources.txn import TransactionalParquetSink
+
+        return TransactionalParquetSink(spark, str(tmp_path_factory.mktemp("contract") / "t"))
+    return _sink(spark, tmp_path_factory, "T_CONTRACT")
+
+
+@pytest.mark.parametrize("kind", ["parquet", "txn", "jdbc"])
+def test_sink_contract_append_then_keyed_and_id_keyed_upsert(
+    spark, tmp_path_factory, kind
+):
+    sink = _contract_sink(kind, spark, tmp_path_factory)
+    sink.append(spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"))
+    assert _rows(sink, "id", "k", "v") == [(1, 1, "a"), (2, 2, "b")]
+    # natural-key upsert: the match keeps its id, the insert gets the next one
+    sink.upsert(spark.createDataFrame([(2, "B"), (3, "c")], "k int, v string"), ["k"])
+    assert _rows(sink, "id", "k", "v") == [(1, 1, "a"), (2, 2, "B"), (3, 3, "c")]
+    # id-keyed upsert: incoming ids are authoritative, for updates and inserts
+    sink.upsert(
+        spark.createDataFrame([(3, 3, "C"), (4, 4, "d")], "id long, k int, v string"),
+        ["id"],
+    )
+    assert _rows(sink, "id", "k", "v") == [
+        (1, 1, "a"), (2, 2, "B"), (3, 3, "C"), (4, 4, "d")
+    ]
