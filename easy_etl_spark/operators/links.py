@@ -31,7 +31,7 @@ Spark-first replacements:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 _ASOF_OPS = {">=", ">", "<=", "<"}

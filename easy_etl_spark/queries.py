@@ -6,7 +6,7 @@ This is the engine's public proof-of-capability surface
 easy_etl/README.md:18), the reference's own operators (links, as-of
 links, transforms, casts, defaults, merge/upsert, incremental
 watermark), and the scale extensions (dedup / similarity / text /
-events) registered by the sibling modules.
+events) registered by the family modules in ``catalog/``.
 
 Hash-safety conventions (driver compares order-insensitive value
 hashes, column-name aligned):
@@ -27,13 +27,7 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
-
-from .functions.exact import dec_avg, dec_sum, sql_avg, sql_sum
-from .operators.links import asof_link, link, with_surrogate_id
-from .session import load_table
-from .sources.readers import incremental_sql_extract
+from pyspark.sql import DataFrame, SparkSession
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -51,569 +45,16 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
-# ----------------------------------------------------------------------
-# Core relational surface (reference delegates these to the source SQL
-# engine — easy_etl/README.md:18; our source engine is Spark SQL)
-# ----------------------------------------------------------------------
-
-@register(
-    "q1_pricing_summary",
-    f"""
-    SELECT l_returnflag, l_linestatus,
-           {sql_sum('l_quantity')} AS sum_qty,
-           {sql_sum('l_extendedprice')} AS sum_base_price,
-           {sql_sum('l_extendedprice * (1 - l_discount)')} AS sum_disc_price,
-           {sql_sum('l_extendedprice * (1 - l_discount) * (1 + l_tax)')} AS sum_charge,
-           {sql_avg('l_quantity')} AS avg_qty,
-           {sql_avg('l_extendedprice')} AS avg_price,
-           {sql_avg('l_discount')} AS avg_disc,
-           count(*) AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '2000-12-01 00:00:00'
-    GROUP BY l_returnflag, l_linestatus
-    """,
-)
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1-style pricing summary. Single scan → partial-agg →
-    final agg: the filter and the 4-column projection push into the
-    parquet scan; map-side combine keeps the shuffle at |groups|."""
-    li = _t(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("2000-12-01 00:00:00").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            dec_sum("l_quantity").alias("sum_qty"),
-            dec_sum("l_extendedprice").alias("sum_base_price"),
-            dec_sum(disc_price).alias("sum_disc_price"),
-            dec_sum(disc_price * (1 + F.col("l_tax"))).alias("sum_charge"),
-            dec_avg("l_quantity").alias("avg_qty"),
-            dec_avg("l_extendedprice").alias("avg_price"),
-            dec_avg("l_discount").alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-@register(
-    "q3_top_orders",
-    f"""
-    SELECT o.o_orderkey,
-           {sql_sum('l.l_extendedprice * (1 - l.l_discount)')} AS revenue,
-           strftime(o.o_orderdate, '%Y-%m-%d')                   AS orderdate,
-           o.o_orderpriority
-    FROM customer c
-    JOIN orders o   ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    WHERE c.c_mktsegment = 'BUILDING'
-      AND o.o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
-      AND l.l_shipdate  > TIMESTAMP '1998-03-15 00:00:00'
-    GROUP BY o.o_orderkey, o.o_orderdate, o.o_orderpriority
-    ORDER BY revenue DESC, o_orderkey
-    LIMIT 10
-    """,
-)
-def q3_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3-style shipping priority. customer is dimension-sized →
-    broadcast into orders; only the orders⋈lineitem equi-join shuffles.
-    Deterministic top-10 via (revenue DESC, key) tiebreak."""
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < F.lit("1998-03-15").cast("timestamp"))
-    l = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > F.lit("1998-03-15").cast("timestamp"))
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
-        .select(
-            "o_orderkey",
-            "revenue",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
-            "o_orderpriority",
-        )
-        .orderBy(F.col("revenue").desc(), F.col("o_orderkey"))
-        .limit(10)
-    )
-
-
-@register(
-    "q5_region_volume",
-    f"""
-    SELECT n.n_name,
-           {sql_sum('l.l_extendedprice * (1 - l.l_discount)')} AS revenue
-    FROM customer c
-    JOIN orders o   ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    JOIN supplier s ON l.l_suppkey = s.s_suppkey AND c.c_nationkey = s.s_nationkey
-    JOIN nation n   ON s.s_nationkey = n.n_nationkey
-    JOIN region r   ON n.n_regionkey = r.r_regionkey
-    WHERE r.r_name = 'ASIA'
-      AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND o.o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
-    GROUP BY n.n_name
-    """,
-)
-def q5_region_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5-style local-supplier volume. All dims broadcast; the
-    only shuffles are lineitem⋈orders and the final 25-group agg."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
-    )
-    l = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(
-            F.broadcast(s),
-            (l.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey),
-        )
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("n_name")
-        .agg(dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
-    )
-
-
-@register(
-    "q6_revenue_delta",
-    f"""
-    SELECT {sql_sum('l_extendedprice * l_discount')} AS revenue
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
-      AND l_discount BETWEEN 0.05 AND 0.07
-      AND l_quantity < 24
-    """,
-)
-def q6_revenue_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6-style flat filter-agg: every predicate pushes to the
-    parquet scan (row-group pruning on shipdate at scale)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_discount") >= 0.05)
-            & (F.col("l_discount") <= 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(dec_sum(F.col("l_extendedprice") * F.col("l_discount")).alias("revenue"))
-    )
-
-
-@register(
-    "topk_per_group",
-    """
-    SELECT c_mktsegment, c_custkey, round(c_acctbal, 2) AS acctbal, rnk
-    FROM (
-      SELECT c_mktsegment, c_custkey, c_acctbal,
-             row_number() OVER (PARTITION BY c_mktsegment
-                                ORDER BY c_acctbal DESC, c_custkey) AS rnk
-      FROM customer
-    )
-    WHERE rnk <= 3
-    """,
-)
-def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-k per group via ranked window; Spark pushes a per-partition
-    top-k (WindowGroupLimit) below the shuffle, so the exchange carries
-    k rows per group, not the whole table."""
-    c = _t(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_mktsegment").orderBy(F.col("c_acctbal").desc(), F.col("c_custkey"))
-    return (
-        c.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select("c_mktsegment", "c_custkey", F.round("c_acctbal", 2).alias("acctbal"), "rnk")
-    )
-
-
-@register(
-    "running_total",
-    """
-    SELECT o_custkey, o_orderkey,
-           CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT))
-                OVER (PARTITION BY o_custkey
-                      ORDER BY o_orderdate, o_orderkey
-                      ROWS UNBOUNDED PRECEDING) AS DOUBLE) / 100.0 AS running_spend
-    FROM orders
-    """,
-)
-def running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-customer running spend. Partitioned window — parallel by
-    custkey, no global sort."""
-    o = _t(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        # exact integer-unit window sum: DuckDB evaluates windowed float
-        # aggregates with a segment tree (different addition order than
-        # Spark's running accumulator), so double sums here are not
-        # cross-engine stable even though each engine alone is ordered
-        (
-            F.sum(F.floor(F.col("o_totalprice") * 100.0 + 0.5).cast("bigint"))
-            .over(w)
-            .cast("double")
-            / 100.0
-        ).alias("running_spend"),
-    )
-
-
-@register(
-    "grouping_sets_rollup",
-    f"""
-    SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
-           coalesce(l_linestatus, 'ALL') AS linestatus,
-           {sql_sum('l_quantity')} AS sum_qty,
-           count(*)                      AS n
-    FROM lineitem
-    GROUP BY ROLLUP (l_returnflag, l_linestatus)
-    """,
-)
-def grouping_sets_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP aggregation (reference's delegated GROUP BY surface,
-    superset). Spark expands grouping sets in one pass."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(dec_sum("l_quantity").alias("sum_qty"), F.count(F.lit(1)).alias("n"))
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
-            "sum_qty",
-            "n",
-        )
-    )
-
-
-@register(
-    "set_ops_except",
-    """
-    SELECT c_custkey FROM customer
-    EXCEPT
-    SELECT o_custkey AS c_custkey FROM orders
-    """,
-)
-def set_ops_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customers with no orders: EXCEPT (≡ left-anti join; Catalyst
-    plans it as one)."""
-    c = _t(spark, sf_dir, "customer").select("c_custkey")
-    o = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("c_custkey"))
-    return c.exceptAll(o).distinct()
-
-
-@register(
-    "semi_anti_join",
-    """
-    SELECT p.p_brand, count(*) AS n_parts
-    FROM part p
-    WHERE p.p_partkey IN (SELECT l_partkey FROM lineitem WHERE l_quantity >= 45)
-    GROUP BY p.p_brand
-    """,
-)
-def semi_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-semi join (IN-subquery surface)."""
-    p = _t(spark, sf_dir, "part")
-    l = _t(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 45).select("l_partkey")
-    return (
-        p.join(l, p.p_partkey == l.l_partkey, "left_semi")
-        .groupBy("p_brand")
-        .agg(F.count(F.lit(1)).alias("n_parts"))
-    )
-
-
-# ----------------------------------------------------------------------
-# Reference operators (SURVEY.md §2.1)
-# ----------------------------------------------------------------------
-
-@register(
-    "transform_strings",
-    """
-    SELECT c_custkey,
-           upper(c_name)                                   AS name_upper,
-           replace(c_name, 'Customer#', 'C-')              AS name_replaced,
-           lower(trim(c_mktsegment))                       AS segment_lower,
-           upper(substr(lower(c_mktsegment), 1, 1)) ||
-             substr(lower(c_mktsegment), 2)                AS segment_title,
-           lpad(CAST(c_nationkey AS VARCHAR), 4, '0')      AS nation_padded
-    FROM customer
-    """,
-)
-def transform_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-field transform pipeline (O6): whitelisted native Column
-    expressions — zero Python in the hot path (cf. the reference's
-    per-row getattr dispatch, easy_etl/__init__.py:179-191)."""
-    c = _t(spark, sf_dir, "customer")
-    seg = F.lower(F.col("c_mktsegment"))
-    return c.select(
-        "c_custkey",
-        F.upper("c_name").alias("name_upper"),
-        F.replace(F.col("c_name"), F.lit("Customer#"), F.lit("C-")).alias("name_replaced"),
-        F.lower(F.trim(F.col("c_mktsegment"))).alias("segment_lower"),
-        F.concat(F.upper(F.substring(seg, 1, 1)), F.substring(seg, 2, 1000)).alias("segment_title"),
-        F.lpad(F.col("c_nationkey").cast("string"), 4, "0").alias("nation_padded"),
-    )
-
-
-@register(
-    "cast_types",
-    """
-    SELECT l_orderkey, l_linenumber,
-           CAST(l_quantity AS BIGINT)     AS qty_int,
-           CAST(l_orderkey AS VARCHAR)    AS orderkey_str,
-           round(CAST(l_extendedprice AS DOUBLE) / 100.0, 4) AS price_hundreds
-    FROM lineitem
-    """,
-)
-def cast_types(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """types= per-column casts (O4) as native Column casts."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        F.col("l_quantity").cast("bigint").alias("qty_int"),
-        F.col("l_orderkey").cast("string").alias("orderkey_str"),
-        F.round(F.col("l_extendedprice").cast("double") / 100.0, 4).alias("price_hundreds"),
-    )
-
-
-@register(
-    "default_falsy",
-    """
-    SELECT event_id,
-           CASE WHEN value IS NULL OR value = 0 THEN -1.0 ELSE value END AS value_defaulted,
-           CASE WHEN event_type IS NULL OR event_type = '' THEN 'unknown'
-                ELSE event_type END AS type_defaulted
-    FROM events
-    """,
-)
-def default_falsy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`default` builtin with reference falsy semantics (`data or x`,
-    easy_etl/__init__.py:147): 0/''/NULL all replaced, type-aware."""
-    from .functions.transforms import falsy_default
-
-    e = _t(spark, sf_dir, "events")
-    return e.select(
-        "event_id",
-        falsy_default(e, "value", -1.0).alias("value_defaulted"),
-        falsy_default(e, "event_type", "unknown").alias("type_defaulted"),
-    )
-
-
-@register(
-    "ignore_drop",
-    """
-    SELECT o_orderkey, o_custkey, o_orderstatus
-    FROM orders
-    """,
-)
-def ignore_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ignore (O11): column drop — compiles to a narrower projection
-    that prunes the parquet scan itself."""
-    o = _t(spark, sf_dir, "orders")
-    return o.drop("o_totalprice", "o_orderdate", "o_orderpriority")
-
-
-@register(
-    "python_source",
-    """
-    SELECT * FROM (VALUES ('widget', CAST(10 AS BIGINT), CAST(1.5 AS DOUBLE)),
-                          ('gadget', CAST(20 AS BIGINT), CAST(2.5 AS DOUBLE)),
-                          ('gizmo',  CAST(30 AS BIGINT), CAST(3.5 AS DOUBLE))) AS t(name, qty, weight)
-    """,
-)
-def python_source(spark_: SparkSession, sf_dir: str) -> DataFrame:
-    """extract_override (O3): arbitrary Python callable returning
-    list-of-dicts becomes a driver-local DataFrame."""
-    from .sources.readers import python_source as src
-
-    rows = lambda: [
-        {"name": "widget", "qty": 10, "weight": 1.5},
-        {"name": "gadget", "qty": 20, "weight": 2.5},
-        {"name": "gizmo", "qty": 30, "weight": 3.5},
-    ]
-    return src(spark_, rows).select("name", "qty", "weight")
-
-
-@register(
-    "link_customer_nation",
-    """
-    WITH dim AS (
-      SELECT row_number() OVER (ORDER BY n_nationkey) AS id, n_nationkey, n_name
-      FROM nation
-    )
-    SELECT c.c_custkey, c.c_name, d.id AS nation_id
-    FROM customer c LEFT JOIN dim d ON c.c_nationkey = d.n_nationkey
-    """,
-)
-def link_customer_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """link (O9): broadcast left equi-join projecting the dimension
-    surrogate id — replaces the reference's per-row SELECT loop
-    (easy_etl/__init__.py:119-136) with one hash join."""
-    c = _t(spark, sf_dir, "customer")
-    dim = with_surrogate_id(_t(spark, sf_dir, "nation"), "n_nationkey")
-    return link(c, dim, "c_nationkey", "n_nationkey", name="nation_id").select(
-        "c_custkey", "c_name", "nation_id"
-    )
-
-
-@register(
-    "link_closest_shipdate",
-    """
-    WITH dim AS (
-      SELECT row_number() OVER (ORDER BY d) AS id, d
-      FROM (SELECT DISTINCT o_orderdate AS d FROM orders)
-    ),
-    vals AS (SELECT DISTINCT l_shipdate AS v FROM lineitem),
-    best AS (
-      SELECT vals.v, min(dim.d) AS bd
-      FROM vals LEFT JOIN dim ON dim.d >= vals.v
-      GROUP BY vals.v
-    ),
-    map AS (
-      SELECT b.v, min(d2.id) AS date_id
-      FROM best b LEFT JOIN dim d2 ON d2.d = b.bd
-      GROUP BY b.v
-    )
-    SELECT l.l_orderkey, l.l_linenumber, m.date_id
-    FROM lineitem l LEFT JOIN map m ON l.l_shipdate = m.v
-    """,
-)
-def link_closest_shipdate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """link_closest (O10): directional as-of join — smallest order-date
-    ≥ each shipdate (date-dimension use case, easy_etl/README.md:161-173).
-    Late shipdates past the last order date yield NULL (no-match →
-    None parity)."""
-    li = _t(spark, sf_dir, "lineitem")
-    dim = with_surrogate_id(
-        _t(spark, sf_dir, "orders").select(F.col("o_orderdate").alias("d")).distinct(), "d"
-    )
-    out = asof_link(li, dim, "l_shipdate", "d", name="date_id", method=">=")
-    return out.select("l_orderkey", "l_linenumber", "date_id")
-
-
-@register(
-    "merge_upsert",
-    """
-    WITH src AS (
-      SELECT o_orderkey, o_custkey, round(o_totalprice + 100.0, 2) AS totalprice
-      FROM orders WHERE o_orderstatus = 'O'
-    ),
-    tgt AS (SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS totalprice FROM orders)
-    SELECT t.o_orderkey, t.o_custkey, t.totalprice
-    FROM tgt t WHERE t.o_orderkey NOT IN (SELECT o_orderkey FROM src)
-    UNION ALL
-    SELECT s.o_orderkey, s.o_custkey, s.totalprice FROM src s
-    """,
-)
-def merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Upsert (O13) as a pure relational plan: survivors (anti-join) ∪
-    updates — the same plan ParquetSink.upsert executes, minus the
-    write. The anti-join shuffles on the merge key only."""
-    o = _t(spark, sf_dir, "orders")
-    # +100.0 keeps 2-decimal money exact — multiplying would create
-    # half-cent boundaries where Spark's round (shortest-string
-    # BigDecimal) and DuckDB's round (binary value) legitimately differ.
-    src = o.filter(F.col("o_orderstatus") == "O").select(
-        "o_orderkey", "o_custkey", F.round(F.col("o_totalprice") + 100.0, 2).alias("totalprice")
-    )
-    tgt = o.select("o_orderkey", "o_custkey", F.round("o_totalprice", 2).alias("totalprice"))
-    survivors = tgt.join(src.select("o_orderkey"), "o_orderkey", "left_anti")
-    return survivors.unionByName(src)
-
-
-@register(
-    "incremental_watermark",
-    """
-    SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS totalprice
-    FROM orders
-    WHERE o_orderkey > (SELECT coalesce(max(o_orderkey), 0) FROM orders WHERE o_orderkey <= 5000)
-    """,
-)
-def incremental_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental extract (O2): MAX(pk)-watermark substituted into the
-    extract SQL's {} placeholder (easy_etl/__init__.py:77-87); the
-    resulting predicate pushes down to the scan."""
-    o = _t(spark, sf_dir, "orders")
-    o.createOrReplaceTempView("orders")
-    target = o.filter(F.col("o_orderkey") <= 5000)  # simulated loaded target
-    sql = (
-        "SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS totalprice "
-        "FROM orders WHERE o_orderkey > {}"
-    )
-    return incremental_sql_extract(spark, sql, target, "o_orderkey")
-
-
-# extension catalogs register themselves into QUERIES/ORACLES on import:
-# queries_ext = dedup / similarity / text / multimodal / event windows;
-# queries_more = deeper relational coverage + UDF/facade-in-the-gate
-from . import queries_ext  # noqa: E402,F401
-from . import queries_more  # noqa: E402,F401
-from . import queries_ops  # noqa: E402,F401
-from . import queries_wave3  # noqa: E402,F401
-from . import queries_wave4  # noqa: E402,F401
-from . import queries_wave5  # noqa: E402,F401
-from . import queries_wave6  # noqa: E402,F401
-from . import queries_wave7  # noqa: E402,F401
-from . import queries_wave8  # noqa: E402,F401
-from . import queries_wave9  # noqa: E402,F401
-from . import queries_wave10  # noqa: E402,F401
-from . import queries_wave11  # noqa: E402,F401
-from . import queries_wave12  # noqa: E402,F401
-from . import queries_wave13  # noqa: E402,F401
-from . import queries_wave14  # noqa: E402,F401
-from . import queries_wave15  # noqa: E402,F401
-from . import queries_wave16  # noqa: E402,F401
-from . import queries_wave17  # noqa: E402,F401
-from . import queries_wave18  # noqa: E402,F401
-from . import queries_wave19  # noqa: E402,F401
-from . import queries_wave20  # noqa: E402,F401
-from . import queries_wave21  # noqa: E402,F401
-from . import queries_wave22  # noqa: E402,F401
-from . import queries_wave23  # noqa: E402,F401
-from . import queries_wave24  # noqa: E402,F401
-from . import queries_wave25  # noqa: E402,F401
-from . import queries_wave26  # noqa: E402,F401
-from . import queries_wave27  # noqa: E402,F401
-from . import queries_wave28  # noqa: E402,F401
-from . import queries_wave29  # noqa: E402,F401
-from . import queries_wave30  # noqa: E402,F401
-from . import queries_wave31  # noqa: E402,F401
-from . import queries_wave32  # noqa: E402,F401
-from . import queries_wave33  # noqa: E402,F401
-from . import queries_wave34  # noqa: E402,F401
-from . import queries_wave35  # noqa: E402,F401
-from . import queries_wave36  # noqa: E402,F401
-from . import queries_wave37  # noqa: E402,F401
-from . import queries_wave38  # noqa: E402,F401
-from . import queries_wave39  # noqa: E402,F401
-from . import queries_wave40  # noqa: E402,F401
-from . import queries_wave41  # noqa: E402,F401
-from . import queries_wave42  # noqa: E402,F401
-from . import queries_wave43  # noqa: E402,F401
-from . import queries_wave44  # noqa: E402,F401
-from . import queries_wave45  # noqa: E402,F401
-from . import queries_wave46  # noqa: E402,F401
-from . import queries_wave47  # noqa: E402,F401
-from . import queries_wave48  # noqa: E402,F401
-from . import queries_wave49  # noqa: E402,F401
-from . import queries_wave50  # noqa: E402,F401
-from . import queries_wave51  # noqa: E402,F401
-from . import queries_wave52  # noqa: E402,F401
-from . import queries_wave53  # noqa: E402,F401
-from . import queries_wave54  # noqa: E402,F401
-from . import queries_wave55  # noqa: E402,F401
-from . import queries_wave56  # noqa: E402,F401
+# Each family module registers its queries on import, so this order is
+# the registration order (``__spark_entry__._PRIORITY`` fixes the head
+# of the driver-visible order).
+from .catalog import tpch  # noqa: E402,F401
+from .catalog import reference_ops  # noqa: E402,F401
+from .catalog import events  # noqa: E402,F401
+from .catalog import dedup  # noqa: E402,F401
+from .catalog import similarity  # noqa: E402,F401
+from .catalog import text  # noqa: E402,F401
+from .catalog import multimodal  # noqa: E402,F401
+from .catalog import graph  # noqa: E402,F401
+from .catalog import stats  # noqa: E402,F401
+from .catalog import sinks  # noqa: E402,F401

@@ -61,7 +61,7 @@ def file_scan(spark: SparkSession, path: str, fmt: str | None = None, **options:
     but required for the parquet star schema."""
     if fmt is None:
         ext = os.path.splitext(path)[1].lstrip(".").lower()
-        fmt = {"pq": "parquet"}.get(ext, ext or "parquet")
+        fmt = {"pq": "parquet", "txt": "text"}.get(ext, ext or "parquet")
     reader = spark.read
     if fmt == "csv":
         options.setdefault("header", "true")

@@ -164,3 +164,23 @@ def test_bench_headline_names_resolve():
         missing = [n for n in names if n not in QUERIES]
         assert not missing, f"bench headline names not registered: {missing}"
         assert len(names) == len(set(names))
+
+
+# sha256 of the registry's (name -> oracle SQL) pairs, its registered
+# names and the driver priority list. Any change to a registered name,
+# an oracle string or _PRIORITY moves it; moving a query between
+# catalog modules does not.
+REGISTRY_SHA256 = "8e8aaf1f60e7fa83c7b44b4dbaa310b8a40a295fb6335badc6ce2fe76121cb1b"
+
+
+def test_registry_identity():
+    import hashlib
+    import json
+
+    import __spark_entry__ as entry
+
+    from easy_etl_spark.queries import ORACLES
+
+    assert len(QUERIES) == 270 and len(ORACLES) == 263
+    blob = json.dumps([sorted(ORACLES.items()), sorted(QUERIES), entry._PRIORITY])
+    assert hashlib.sha256(blob.encode()).hexdigest() == REGISTRY_SHA256

@@ -400,7 +400,7 @@ def test_range_join_binned_keeps_null_user_group(spark, tmp_path):
     that probe rows are marked explicitly instead of via user_id IS NULL."""
     import pandas as pd
 
-    from easy_etl_spark import queries_wave35 as w35
+    from easy_etl_spark.catalog import events as w35
 
     ev = pd.DataFrame(
         {

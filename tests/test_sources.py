@@ -33,6 +33,22 @@ def test_parquet_format_inferred_from_extension(spark, sf_dir):
     assert df.count() == 5
 
 
+def test_format_inferred_from_each_extension(spark, tmp_path):
+    """No ``fmt``: the extension picks the reader for every format the
+    docstring promises, ``.txt`` included (Spark's source is ``text``)."""
+    src = spark.createDataFrame([(1, "a"), (2, "b")], "id long, name string")
+    src.write.option("header", "true").csv(str(tmp_path / "t.csv"))
+    src.write.json(str(tmp_path / "t.json"))
+    src.write.parquet(str(tmp_path / "t.parquet"))
+    src.select("name").write.text(str(tmp_path / "t.txt"))
+    for ext in ("csv", "json", "parquet"):
+        back = file_scan(spark, str(tmp_path / f"t.{ext}"))
+        assert sorted((r["id"], r["name"]) for r in back.collect()) == [(1, "a"), (2, "b")], ext
+    lines = file_scan(spark, str(tmp_path / "t.txt"))
+    assert lines.columns == ["value"]
+    assert sorted(r["value"] for r in lines.collect()) == ["a", "b"]
+
+
 def test_sliding_stream_job(spark, sf_dir, tmp_path):
     """Sliding-window streaming twin of windows.sliding."""
     import shutil

@@ -101,7 +101,7 @@ def test_semantic_dedup_kept_set_is_pairwise_distinct(spark, sf_dir):
     """Python replay over the collected quantized vectors: no two KEPT
     vectors in the same cell may be closer than the threshold, and
     every pruned vector must have a kept-or-smaller neighbor under it."""
-    from easy_etl_spark.queries_wave35 import _SD_T
+    from easy_etl_spark.catalog.similarity import _SD_T
 
     out = {r.vec_id: (r.cell, r.kept) for r in QUERIES["semantic_dedup"](spark, sf_dir).collect()}
     emb = load_table(spark, sf_dir, "embeddings").collect()

@@ -27,7 +27,7 @@ def test_cms_exact_when_no_collisions(spark):
     one distinct key there is nothing to collide with, so every row's
     landed counter equals the true count and the min does too."""
     from easy_etl_spark.operators.sketches import _md5_u32
-    from easy_etl_spark.queries_wave37 import CMS_D, CMS_W
+    from easy_etl_spark.catalog.stats import CMS_D, CMS_W
 
     ev = spark.range(137).select(F.lit(42).alias("user_id"))
     keyed = ev.select(
@@ -98,7 +98,7 @@ def test_lpa_disconnected_triangles(spark):
 def test_lpa_registered_histogram_accounts_all_nodes(spark, sf_dir):
     """The community-size histogram partitions the node set: sum of
     n_members * n_communities equals the number of graph nodes."""
-    from easy_etl_spark.queries_wave10 import _copurchase_edges
+    from easy_etl_spark.catalog.graph import _copurchase_edges
 
     rows = QUERIES["lpa_communities"](spark, sf_dir).collect()
     assert rows and all(r.n_members >= 1 for r in rows)
@@ -112,7 +112,7 @@ def test_jl_distortion_concentrates_around_one(spark, sf_dir):
     and the weighted mean ratio sits near 1.0 (E d2p = k * d2o for
     +-1 sign rows) — pinned loosely at [0.5, 2.0] since k=8 is a
     coarse sketch."""
-    from easy_etl_spark.queries_wave37 import JL_SAMPLE
+    from easy_etl_spark.catalog.similarity import JL_SAMPLE
 
     rows = QUERIES["jl_projection_distortion"](spark, sf_dir).collect()
     n_ids = (

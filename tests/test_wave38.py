@@ -62,7 +62,7 @@ def test_entropy_extremes_match_formula(spark, sf_dir):
     characters has entropy exactly qln(n) DIV 1 micro-nats = ln(n)
     within quantization. Computed through the same registered pipeline
     shape (explode -> counts -> quantized ln), on a temp table."""
-    import easy_etl_spark.queries_wave38 as w38
+    import easy_etl_spark.catalog.text as w38
 
     docs = spark.createDataFrame(
         [(1, "aaaaaaaaaaaaaaaa", "en", "t", 16), (2, "abcdefghijklmnop", "en", "t", 16)],

@@ -89,7 +89,7 @@ def test_prefix_filter_exact_threshold_boundary(spark):
     """The theorem's worst case: two 9-shingle docs sharing exactly 8
     shingles sit at Jaccard = 8/10 = 0.8000 — ON the threshold with
     tiny sets, where a sloppy prefix length would drop the pair."""
-    from easy_etl_spark.queries_wave39 import prefix_filtered_jaccard_pairs
+    from easy_etl_spark.catalog.dedup import prefix_filtered_jaccard_pairs
 
     t = [f"w{i}" for i in range(11)]
     doc_a = " ".join(t[:11])  # shingles (t0..t2)..(t8,t9,t10): 9

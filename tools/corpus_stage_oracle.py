@@ -1,7 +1,7 @@
 """Stage-wise, parquet-mediated DuckDB oracle for corpus_build_report
 (round 11, VERDICT r10 item 5).
 
-The registered monolithic oracle (queries_wave22.py) replays the whole
+The registered monolithic oracle (catalog/dedup.py) replays the whole
 corpus pipeline as ONE recursive CTE tree. At sf5 that query needs
 >90 GB of DuckDB spill (it filled the disk twice in round 10): every
 CTE — shingles, the quadratic shingle self-join, the pair-count hash
@@ -47,10 +47,10 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-BUDGET_PER_SOURCE = 5000  # queries_wave22.BUDGET_PER_SOURCE
+BUDGET_PER_SOURCE = 5000  # catalog.dedup.BUDGET_PER_SOURCE
 
 # ---- per-stage SQL (each fragment lifted verbatim from the registered
-# ---- monolithic oracle in queries_wave22.py, re-rooted on parquet) ----
+# ---- monolithic oracle in catalog/dedup.py, re-rooted on parquet) ----
 
 TOKS = "string_split(trim(text), ' ')"
 

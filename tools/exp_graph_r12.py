@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
 
 def lpa(spark, sf_dir: str, variant: str) -> DataFrame:
-    from easy_etl_spark.queries_wave10 import _copurchase_adjacency
+    from easy_etl_spark.catalog.graph import _copurchase_adjacency
     from easy_etl_spark.session import load_table
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
@@ -64,7 +64,7 @@ def lpa(spark, sf_dir: str, variant: str) -> DataFrame:
 
 
 def kcore(spark, sf_dir: str, variant: str) -> DataFrame:
-    from easy_etl_spark.queries_wave10 import _copurchase_adjacency
+    from easy_etl_spark.catalog.graph import _copurchase_adjacency
     from easy_etl_spark.session import load_table
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")

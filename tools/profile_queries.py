@@ -1,11 +1,14 @@
-"""Round-11 optimization profiler: time named queries end-to-end with
-the bench methodology (fresh session, sf0.001 warmup pass, noop sink,
-caches released between runs) and dump their `.explain("formatted")`
-plans to plans/r11/<query>_<tag>.txt.
+"""Optimization profiler: time named queries end-to-end with the bench
+methodology (fresh session, sf0.001 warmup pass, noop sink, caches
+released between runs) and dump their `.explain("formatted")` plans to
+plans/<round>/<query>_<tag>.txt.
 
 Usage:
-  python tools/profile_r11.py --tag before [--runs 3] [--sf-dir DIR] q1 q2 ...
-  python tools/profile_r11.py --tag before --section v3   # whole bench section
+  python tools/profile_queries.py --round r12 --tag before [--runs 3] [--sf-dir DIR] q1 q2 ...
+  python tools/profile_queries.py --round r12 --tag before --section v3   # whole bench section
+
+The file is not named profile.py: run as a script, that would shadow
+the stdlib `profile` module, which pyspark loads through cProfile.
 
 Prints one line per query: min/median wall seconds over the runs plus
 plan-shape counters (exchanges / SMJ / BHJ / Python-eval nodes), and a
@@ -23,18 +26,19 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-PLAN_DIR = os.path.join(REPO, "plans", "r11")
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*")
     ap.add_argument("--section", action="append", default=[])
-    ap.add_argument("--tag", default=None, help="write plans/r11/<q>_<tag>.txt")
+    ap.add_argument("--round", required=True, help="round label, e.g. r12")
+    ap.add_argument("--tag", default=None, help="write plans/<round>/<q>_<tag>.txt")
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--no-warm", action="store_true")
     args = ap.parse_args()
+    plan_dir = os.path.join(REPO, "plans", args.round)
 
     from bench import SECTIONS, _prime_ivf
     from easy_etl_spark.plans.explain import plan_facts
@@ -45,7 +49,7 @@ def main() -> None:
     for sec in args.section:
         names.extend(n for n in SECTIONS[sec] if n not in names)
 
-    spark = get_spark("profile-r11")
+    spark = get_spark(f"profile-{args.round}")
     warm_dir = "/root/testdata/sf0.001"
     if not args.no_warm and os.path.isdir(warm_dir):
         for name in names:
@@ -61,14 +65,14 @@ def main() -> None:
         QUERIES["link_closest_shipdate"](spark, args.sf_dir)
 
     if args.tag:
-        os.makedirs(PLAN_DIR, exist_ok=True)
+        os.makedirs(plan_dir, exist_ok=True)
 
     results = {}
     for name in names:
         fn = QUERIES[name]
         walls = []
         for _ in range(args.runs):
-            spark.sparkContext.setJobDescription(f"r11-profile: {name}")
+            spark.sparkContext.setJobDescription(f"{args.round}-profile: {name}")
             t0 = time.perf_counter()
             fn(spark, args.sf_dir).write.mode("overwrite").format("noop").save()
             walls.append(round(time.perf_counter() - t0, 3))
@@ -78,7 +82,7 @@ def main() -> None:
         facts = plan_facts(fn(spark, args.sf_dir))
         release_caches()
         if args.tag:
-            with open(os.path.join(PLAN_DIR, f"{name}_{args.tag}.txt"), "w") as fh:
+            with open(os.path.join(plan_dir, f"{name}_{args.tag}.txt"), "w") as fh:
                 fh.write(facts.text)
         walls.sort()
         med = walls[len(walls) // 2]
