@@ -11,8 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.exact import dec_sum, sql_sum
-from ..operators.packing import global_running_offset
-from ..operators.ranking import global_row_number
+from ..operators.ranking import global_row_number, global_running_offset
 from ..queries import register
 from ..session import load_table
 from ..streaming import windows
@@ -1310,7 +1309,7 @@ def classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: rows collapse to one group per DISTINCT score before any
     ranking, and the cumulative count-below is the BANDED exclusive
-    prefix sum (packing.global_running_offset) — range-partitioned
+    prefix sum (ranking.global_running_offset) — range-partitioned
     scores, driver-side prefix-merge of numPartitions partials, no
     single-partition sort even for an unbounded score domain.
     Everything else is one aggregate."""
@@ -1961,7 +1960,7 @@ def range_join_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookup of a span endpoint against the global multiset of incident
     endpoints — done by unioning probe rows into the per-timestamp
     count frame and taking a banded exclusive prefix sum
-    (packing.global_running_offset — fourth consumer; no
+    (ranking.global_running_offset — fourth consumer; no
     single-partition window). Strict vs inclusive comparison is an
     ordering tiebreak: probes sort BEFORE same-timestamp counts for
     `<`, AFTER them for `<=`. Work is O(|spans| + |incidents|) —

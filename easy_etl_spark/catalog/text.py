@@ -6,13 +6,13 @@ UDTF chunking and corpus statistics over the ``documents`` table
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.exact import sql_avg
+from ..functions.exact import qlog, sql_avg
 from ..operators import textops
 from ..operators.bpe import bpe_encode_oracle_sql, bpe_oracle_sql
-from ..operators.ranking import global_row_number
+from ..operators.ranking import global_row_number, global_running_offset
 from ..operators.scale import ensure_min_partitions
 from ..operators.textops import (
     destutter,
@@ -222,7 +222,7 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     512-token training sequence its first token lands in; per-sequence
     doc and token counts. The oracle's global window cumsum is
     replaced by the partition-offset prefix sum in
-    operators/packing.py — no single-partition stage."""
+    operators/ranking.py — no single-partition stage."""
     from ..operators.packing import pack_sequences
     from ..operators.textops import token_count
 
@@ -725,12 +725,10 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: token counting is map-side combined; rank and cumulative
     coverage ride the BANDED global machinery (ranking.
-    global_row_number over (c desc, tok), then packing.
+    global_row_number over (c desc, tok), then ranking.
     global_running_offset over the unique rank) — no single-partition
     sort even when the vocabulary itself is huge. The 3-way fan-out
     rides the ranked frame."""
-    from ..operators.packing import global_running_offset
-
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(F.explode(tokens(F.col("text"))).alias("tok"))
     freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
@@ -1163,10 +1161,7 @@ def mutual_information_lang_source(spark: SparkSession, sf_dir: str) -> DataFram
     cs = cells.groupBy("source").agg(F.sum("n").alias("ns"))
     tot = cells.agg(F.sum("n").alias("n_tot"))
 
-    def qln(x):
-        return F.floor(F.log(x) * 1e6 + F.lit(0.5)).cast("long")
-
-    units = qln(F.col("n").cast("double") * F.col("n_tot")) - qln(
+    units = qlog(F.col("n").cast("double") * F.col("n_tot")) - qlog(
         F.col("nl").cast("double") * F.col("ns")
     )
     return (
@@ -1255,9 +1250,6 @@ def doc_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n") >= 1)
     )
 
-    def qln(x: Column) -> Column:
-        return F.floor(F.log(x.cast("double")) * 1000000 + F.lit(0.5)).cast("bigint")
-
     cc = (
         ensure_min_partitions(d)
         .select(
@@ -1272,7 +1264,7 @@ def doc_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     qn_sql = "CAST(floor(ln(CAST(n AS DOUBLE)) * 1000000 + 0.5) AS BIGINT)"
     ent = (
         cc.groupBy("doc_id", "lang", "n")
-        .agg(F.sum(F.col("c") * qln(F.col("c"))).alias("s"))
+        .agg(F.sum(F.col("c") * qlog(F.col("c"))).alias("s"))
         .select(
             "lang",
             "n",
@@ -1599,9 +1591,6 @@ def collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.size("w") - 1).cast("bigint").alias("t_bi")
     )
 
-    def qln(x):
-        return F.floor(F.log(x) * 1e6 + F.lit(0.5)).cast("bigint")
-
     ua = ucnt.select(F.col("tok").alias("w1"), F.col("u").alias("u1"))
     ub = ucnt.select(F.col("tok").alias("w2"), F.col("u").alias("u2"))
     scored = (
@@ -1612,8 +1601,8 @@ def collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(btot))
         .withColumn(
             "units",
-            qln(F.col("b").cast("double") * F.col("t_toks") * F.col("t_toks"))
-            - qln(F.col("t_bi").cast("double") * F.col("u1") * F.col("u2")),
+            qlog(F.col("b").cast("double") * F.col("t_toks") * F.col("t_toks"))
+            - qlog(F.col("t_bi").cast("double") * F.col("u1") * F.col("u2")),
         )
     )
     return (
@@ -1817,8 +1806,6 @@ def mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exclusive below-count via the BANDED prefix sum — the frame is
     # value-domain-sized, but the catalog convention is that even
     # dims-sized cumulatives never compile to an unpartitioned window
-    from ..operators.packing import global_running_offset
-
     ranked = global_running_offset(byv, "t", "v", out_col="__below").withColumn(
         "below", F.col("__below").cast("bigint")
     )

@@ -15,9 +15,8 @@ from math import gcd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.exact import dec_avg, dec_sum, sql_avg, sql_sum
-from ..operators.packing import global_running_offset
-from ..operators.ranking import global_prior_max, global_row_number
+from ..functions.exact import dec_avg, dec_sum, qlog, sql_avg, sql_sum
+from ..operators.ranking import global_prior_max, global_row_number, global_running_offset
 from ..operators.scale import salted_join
 from ..queries import register
 from ..session import load_table, track_cache
@@ -2358,7 +2357,7 @@ def ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (binned, localization) with the classic distribution-free test.
 
     Scale: the cumulative counts run through the BANDED global prefix
-    sum (packing.global_running_offset — third consumer) over the
+    sum (ranking.global_running_offset — third consumer) over the
     distinct-value frame, so the CDF never funnels through one task
     even when |distinct values| ~ |rows|; the argmax is a bounded-heap
     TakeOrdered, and totals broadcast."""
@@ -2522,12 +2521,9 @@ def woe_information_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("k"),
     )
 
-    def qln(x):
-        return F.floor(F.log(x) * 1e6 + F.lit(0.5)).cast("long")
-
     pg = (F.col("n_good") + 1) / (F.col("g_tot") + F.col("k"))
     pb = (F.col("n_bad") + 1) / (F.col("b_tot") + F.col("k"))
-    units = qln(pg) - qln(pb)
+    units = qlog(pg) - qlog(pb)
     return bins.crossJoin(F.broadcast(tot)).select(
         "bucket",
         "n_good",
@@ -3427,7 +3423,7 @@ def kaplan_meier_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     natural shuffle key, no skew — order counts per customer are
     bounded), then every downstream cumulative over the week-count-
     sized aggregate rides the BANDED prefix primitives
-    (`packing.global_running_offset` / `ranking.global_prior_max`) —
+    (`ranking.global_running_offset` / `ranking.global_prior_max`) —
     no Sort→Exchange-SinglePartition stage anywhere, so the catalog's
     global-sort gate holds even though the frame is provably tiny.
     The log-hazard is quantized to integer micro-nats (the

@@ -47,6 +47,13 @@ def _q(col: Column | str, scale: int) -> Column:
     return F.floor(_c(col) * F.lit(float(10**scale)) + F.lit(0.5)).cast("bigint")
 
 
+def qlog(x: Column | str) -> Column:
+    """``ln(x)`` quantized to integer 10^-6 units (BIGINT): the per-row
+    log of the integer-space information scores (PMI, WoE, entropy).
+    DuckDB spelling: ``CAST(floor(ln(x) * 1000000 + 0.5) AS BIGINT)``."""
+    return _q(F.log(_c(x)), 6)
+
+
 def dec_sum(col: Column | str, scale: int = 2) -> Column:
     """Order-independent sum of a double column/expression, quantized
     per-row at `scale` decimal digits. Returns double (same output

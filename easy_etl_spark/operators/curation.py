@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import qlog
 from .dedup import dedup_exact, dedup_survivors, duplicate_clusters, minhash_lsh_pairs, ngram_jaccard_pairs
 from .textops import text_profile
 
@@ -201,12 +202,12 @@ def dsir_select(
 
     Exactness contract (the unigram_logprob pattern): per-token
     log-likelihood ratios are integer-quantized BEFORE summation —
-    lr_units(tok) = qln((c_t+1)/(T+V)) - qln((c_r+1)/(R+V)) with
-    qln(x) = floor(ln(x)*1e6 + 0.5) as BIGINT — so doc scores are
+    lr_units(tok) = qlog((c_t+1)/(T+V)) - qlog((c_r+1)/(R+V)) with
+    qlog(x) = floor(ln(x)*1e6 + 0.5) as BIGINT — so doc scores are
     exact integer sums, reproducible under any partitioning and
     bit-replayable by the DuckDB oracle. The Gumbel noise is
     derandomized the same way: u = (md5int(doc_id) % 1e6 + 0.5)/1e6,
-    g_units = -qln(-qln(u)/1e6); selection key = score_units +
+    g_units = -qlog(-qlog(u)/1e6); selection key = score_units +
     g_units (Gumbel-max ~ sampling w/o replacement proportional to
     exp(score)). All inputs to ln are rationals of integers, so both
     engines feed ln identical doubles.
@@ -218,9 +219,6 @@ def dsir_select(
     state, no global sort."""
     from .scale import ensure_min_partitions
     from .textops import tokens
-
-    def qln(x):
-        return F.floor(F.log(x) * 1e6 + F.lit(0.5)).cast("long")
 
     toks = ensure_min_partitions(
         docs.select(id_col, text_col, target_filter.alias("__is_t"))
@@ -240,8 +238,8 @@ def dsir_select(
     lr = cnt.crossJoin(F.broadcast(tot)).select(
         "tok",
         (
-            qln((F.col("__ct") + 1) / (F.col("__T") + F.col("__V")))
-            - qln((F.col("__cr") + 1) / (F.col("__R") + F.col("__V")))
+            qlog((F.col("__ct") + 1) / (F.col("__T") + F.col("__V")))
+            - qlog((F.col("__cr") + 1) / (F.col("__R") + F.col("__V")))
         ).alias("__lr"),
     )
     scored = (
@@ -261,7 +259,7 @@ def dsir_select(
         + F.lit(0.5)
     ) / 1e6
     keyed = scored.withColumn(
-        "key_units", F.col("score_units") - qln(-qln(u) / 1e6)
+        "key_units", F.col("score_units") - qlog(-qlog(u) / 1e6)
     )
     return (
         keyed.orderBy(F.desc("key_units"), id_col)

@@ -132,7 +132,8 @@ def _pair_intersections(idx: DataFrame) -> DataFrame:
     inverted index, id_a < id_b. Round 11 (guide §2.3/§2.4): the index
     self-join on the shingle key became ONE aggregation — group each
     shingle's sorted doc-id list and expand the (a < b) pairs IN-ROW
-    (the basket-pairs trick from queries_wave10), so the index is
+    (the basket-pairs trick of
+    catalog/common.py::_basket_pairs_per_order), so the index is
     shuffled once instead of twice and pair rows are born inside the
     task that owns the shingle, partially aggregated before the only
     pair-keyed exchange. Pair count (and hot-shingle skew) is
@@ -580,10 +581,6 @@ def simhash_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
-
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
 def embedding_dup_pairs(

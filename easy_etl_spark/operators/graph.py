@@ -153,7 +153,7 @@ def bfs_hops_adjacency(
 ) -> DataFrame:
     """Frontier BFS over an UNDIRECTED adjacency-list frame
     ``(v, ns: array)`` (round 11; see
-    queries_wave10._copurchase_adjacency — every edge must appear in
+    catalog/graph.py::_copurchase_adjacency — every edge must appear in
     both endpoints' lists). Returns (v, d) with the exact minimum hop
     distance (<= max_hops) from ``source`` (default: smallest node id).
 

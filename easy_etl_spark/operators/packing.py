@@ -4,91 +4,19 @@ sequences ("concat-and-split" packing). Each document is assigned the
 sequence its first token lands in, from its exclusive running token
 offset.
 
-The hard part at scale is the exact GLOBAL prefix sum: the naive
-``sum() OVER (ORDER BY id)`` window has an empty PARTITION BY, which
-funnels every row through one task — fatal at 100 TB. Instead we use
-the same partition-offset scheme as ``sources.sinks.dense_ids``
-(zipWithIndex in DataFrame terms):
-
-1. ``repartitionByRange`` on the order key — partition ranges are
-   globally ordered, rows stay distributed;
-2. a tiny per-partition aggregate (sum + min(order key), numPartitions
-   rows) is prefix-summed on the driver in range order;
-3. each row's offset = partition start + intra-partition running sum,
-   where the only window is PARTITION BY the partition id —
-   embarrassingly parallel.
-
-The range-partitioned frame is PINNED via eager localCheckpoint
-(session.pin_frame) before the stats pass — load-bearing, not an
-optimization: RangePartitioner's boundary sampling is seeded by the
-physical RDD id, so two separate actions over an unpinned plan can
-draw DIFFERENT boundaries once partitions exceed the sample size, and
-the driver-side prefix sums would misalign with the second pass's
-partitions (see operators/ranking.py for the full account). Beyond
-the reference's surface (exit99/easy-etl has no text pipeline); part
-of the BASELINE.json north-star extension set.
+The exact global prefix sum is ``ranking.global_running_offset`` —
+no single-partition window; operators/ranking.py holds the account of
+the partition-offset scheme and its pin. Beyond the reference's
+surface (exit99/easy-etl has no text pipeline); part of the
+BASELINE.json north-star extension set.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import pin_frame
-
-
-def global_running_offset(
-    df: DataFrame,
-    val_col: str,
-    order_col: str,
-    *,
-    out_col: str = "start_ofs",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Exclusive exact global prefix sum of ``val_col`` in ``order_col``
-    order, without a single-partition global window."""
-    if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-    # pin_frame (eager localCheckpoint), not a releasable cache: the
-    # driver-side prefix sums below are only valid against THIS
-    # physical instantiation of the range boundaries (see
-    # operators/ranking.py for the full account)
-    part = pin_frame(
-        df.repartitionByRange(num_partitions, F.col(order_col)).withColumn(
-            "__pid", F.spark_partition_id()
-        )
-    )
-    stats = (
-        part.groupBy("__pid")
-        .agg(F.sum(val_col).alias("s"), F.min(order_col).alias("lo"))
-        .collect()
-    )
-    if not stats:
-        return df.withColumn(out_col, F.lit(None).cast("long"))
-    starts: dict[int, int] = {}
-    acc = 0
-    for r in sorted(stats, key=lambda r: r["lo"]):
-        starts[r["__pid"]] = acc
-        acc += r["s"]
-    start_map = F.create_map(
-        *[lit for pid, s in starts.items() for lit in (F.lit(pid), F.lit(s))]
-    )
-    w = (
-        Window.partitionBy("__pid")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        part.withColumn(
-            out_col,
-            (
-                F.sum(val_col).over(w) - F.col(val_col) + start_map[F.col("__pid")]
-            ).cast("long"),
-        )
-        .drop("__pid")
-    )
+from .ranking import global_running_offset
 
 
 def pack_sequences(

@@ -1,26 +1,30 @@
-"""Banded (range-partitioned) global ranking primitives.
+"""Global offsets without a single-partition stage: dense surrogate
+ids, banded global rank, running sum and prior max.
 
-``row_number() OVER (ORDER BY ...)`` with an empty PARTITION BY plans
-as Sort -> Exchange SinglePartition: every row funnels through ONE
-task — fine on a dimension-sized frame at sf0.1, fatal when the frame
-is billions of rows at 100 TB. These helpers produce the identical
-values with no single-partition stage, the same partition-offset
-scheme as ``operators.packing.global_running_offset`` /
-``sources.sinks.dense_ids``:
+``row_number() OVER (ORDER BY ...)`` (and any running aggregate) with
+an empty PARTITION BY plans as Sort -> Exchange SinglePartition: every
+row funnels through ONE task — fine on a dimension-sized frame at
+sf0.1, fatal when the frame is billions of rows at 100 TB. Every
+helper here produces the identical values with the partition-offset
+scheme (RDD ``zipWithIndex`` in DataFrame terms), implemented once in
+``_prior``:
 
-1. ``repartitionByRange`` on the rank key — Spark's RangePartitioner
-   assigns globally ordered, non-overlapping key ranges to partitions
-   (partition id order == global key order), rows stay distributed;
-2. a numPartitions-row per-partition aggregate (count / max) is
-   collected and prefix-scanned on the driver — bounded metadata, not
-   data (the same collect contract as dense_ids);
-3. each row combines its partition's offset (a broadcast literal map)
-   with an intra-partition window PARTITIONED BY the partition id —
-   embarrassingly parallel.
+1. tag each row with its partition id ``__pid``, in global order:
+   ``repartitionByRange`` on the order key (Spark's RangePartitioner
+   assigns globally ordered, non-overlapping key ranges, so partition
+   id order == global key order; rows stay distributed) — or, for
+   ``dense_ids``, whose order is arbitrary, the frame's own partitions;
+2. a numPartitions-row per-partition aggregate (count / sum / max) is
+   collected and prefix-combined on the driver IN ``__pid`` ORDER —
+   bounded metadata, never data rows — and comes back as a literal
+   ``create_map(pid -> prior)[__pid]`` lookup;
+3. each row combines its partition's prior with an intra-partition
+   window PARTITIONED BY ``__pid`` — embarrassingly parallel.
 
 Correctness notes:
   - equal keys land in one partition (RangePartitioner binary-searches
-    boundary values), so ties never straddle an offset boundary;
+    boundary values), so ties never straddle an offset boundary; NULL
+    keys sort first and land in the first partition(s) like any key;
   - the range-partitioned frame is PINNED via an eager
     localCheckpoint (session.pin_frame) before the offsets pass. This
     is load-bearing, not an optimization: RangePartitioner's reservoir
@@ -33,10 +37,15 @@ Correctness notes:
     row). localCheckpoint materializes ONE instantiation and truncates
     lineage, so no later event — cache eviction, an intervening
     session.release_caches(), a re-plan — can ever re-draw the
-    boundaries; the blocks are GC-reclaimed when the frame dies.
+    boundaries; the blocks are GC-reclaimed when the frame dies;
+  - the offsets are eager on purpose: computing them lazily inside the
+    consuming plan (a broadcast join of the per-partition aggregate)
+    adds jobs to every sink write (15 instead of 12 per upsert).
 
-Reference parity: the reference delegates ranking wholesale to its
-source database (easy_etl/README.md:18); these are the scale-path
+Reference parity: the reference's load step gives every inserted row
+an auto-increment ``id`` (easy_etl/README.md:180) — ``dense_ids`` —
+and delegates ranking wholesale to its source database
+(easy_etl/README.md:18); the banded helpers are the scale-path
 equivalents of the SQL it would push down.
 """
 
@@ -65,6 +74,41 @@ def _banded(df: DataFrame, order_by: list[Column], num_partitions: int | None):
     )
 
 
+def _add(acc, v):
+    return acc + (v or 0)
+
+
+def _prior(part: DataFrame, value: Column, combine, first):
+    """The combined ``value`` of every partition before this row's, as
+    a Column lookup on ``__pid``, plus the combination over all
+    partitions. ``part`` carries ``__pid`` in global order; ``first``
+    is the prior of the first partition. A NULL prior (and an empty
+    ``part``) looks up as NULL."""
+    acc, entries = first, []
+    stats = part.groupBy("__pid").agg(value.alias("__v")).collect()
+    for pid, v in sorted(stats, key=lambda r: r[0]):
+        if acc is not None:
+            entries += [F.lit(pid), F.lit(acc)]
+        acc = combine(acc, v)
+    prior = F.create_map(*entries)[F.col("__pid")] if entries else F.lit(None)
+    return prior, acc
+
+
+def dense_ids(df: DataFrame, id_col: str = "id", offset: int = 0) -> DataFrame:
+    """Dense BIGINT ids ``offset + 1 ..`` in the frame's own partition
+    order (see the module docstring for the scheme). Requires a
+    deterministic input plan (the frame is evaluated twice);
+    parquet-backed lineage qualifies."""
+    part = df.withColumn("__pid", F.spark_partition_id()).withColumn(
+        "__ord", F.monotonically_increasing_id()
+    )
+    start, _ = _prior(part, F.count(F.lit(1)), _add, offset)
+    w = Window.partitionBy("__pid").orderBy("__ord")
+    return part.withColumn(
+        id_col, F.row_number().over(w).cast("long") + start
+    ).select(id_col, *df.columns)
+
+
 def global_row_number(
     df: DataFrame,
     order_by: list[Column],
@@ -79,24 +123,12 @@ def global_row_number(
     ``(df, total_rows)`` — the row count falls out of the offsets pass
     for free (saves callers a second scan for ``count(*) OVER ()``)."""
     part = _banded(df, order_by, num_partitions)
-    counts = part.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n")).collect()
-    if not counts:
-        out = df.withColumn(out_col, F.lit(None).cast("long"))
-        return (out, 0) if with_total else out
-    offsets: dict[int, int] = {}
-    acc = 0
-    # partition ids ARE in global rank order under range partitioning
-    for r in sorted(counts, key=lambda r: r["__pid"]):
-        offsets[r["__pid"]] = acc
-        acc += r["__n"]
-    off_map = F.create_map(
-        *[lit for pid, o in offsets.items() for lit in (F.lit(pid), F.lit(o))]
-    )
+    start, total = _prior(part, F.count(F.lit(1)), _add, 0)
     w = Window.partitionBy("__pid").orderBy(*order_by)
     out = part.withColumn(
-        out_col, (F.row_number().over(w) + off_map[F.col("__pid")]).cast("long")
+        out_col, F.row_number().over(w).cast("long") + start
     ).drop("__pid")
-    return (out, acc) if with_total else out
+    return (out, total) if with_total else out
 
 
 def global_prior_max(
@@ -109,36 +141,43 @@ def global_prior_max(
 ) -> DataFrame:
     """Exclusive global running max — ``max(val) OVER (ORDER BY ...
     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)`` — banded.
-    NULL for the globally-first rows, exactly like the window form.
-    The prefix-max across partitions is scanned on the driver from the
-    numPartitions-row per-partition maxima."""
+    NULL for the globally-first rows, exactly like the window form."""
     part = _banded(df, order_by, num_partitions)
-    stats = part.groupBy("__pid").agg(F.max(val_col).alias("__m")).collect()
-    if not stats:
-        return df.withColumn(out_col, F.lit(None))
-    prior: dict[int, object] = {}
-    acc = None
-    for r in sorted(stats, key=lambda r: r["__pid"]):
-        prior[r["__pid"]] = acc  # max over ALL earlier partitions
-        m = r["__m"]
-        if m is not None and (acc is None or m > acc):
-            acc = m
+    prior, _ = _prior(
+        part,
+        F.max(val_col),
+        lambda acc, m: acc if m is None or (acc is not None and acc >= m) else m,
+        None,
+    )
     w = (
         Window.partitionBy("__pid")
         .orderBy(*order_by)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    intra = F.max(val_col).over(w)
-    entries = [
-        lit
-        for pid, p in prior.items()
-        if p is not None
-        for lit in (F.lit(pid), F.lit(p))
-    ]
-    if entries:
-        # greatest() skips NULLs: rows with no intra-partition
-        # predecessor still see the cross-partition prefix max
-        out = F.greatest(F.create_map(*entries)[F.col("__pid")], intra)
-    else:
-        out = intra
+    # greatest() skips NULLs: rows with no intra-partition predecessor
+    # still see the cross-partition prefix max
+    out = F.greatest(prior, F.max(val_col).over(w))
     return part.withColumn(out_col, out).drop("__pid")
+
+
+def global_running_offset(
+    df: DataFrame,
+    val_col: str,
+    order_col: str,
+    *,
+    out_col: str = "start_ofs",
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """Exclusive exact global prefix sum of ``val_col`` in ``order_col``
+    order — ``sum(val) OVER (ORDER BY order_col ROWS BETWEEN UNBOUNDED
+    PRECEDING AND 1 PRECEDING)`` with 0 for the first row — banded."""
+    part = _banded(df, [F.col(order_col)], num_partitions)
+    start, _ = _prior(part, F.sum(val_col), _add, 0)
+    w = (
+        Window.partitionBy("__pid")
+        .orderBy(order_col)
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    return part.withColumn(
+        out_col, (F.sum(val_col).over(w) - F.col(val_col) + start).cast("long")
+    ).drop("__pid")

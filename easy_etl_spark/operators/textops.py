@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import track_cache
+from .ranking import global_row_number
 
 #: tiny deterministic "stopword" profiles over the synthetic corpus
 #: vocabulary — the language-ID heuristic scores token overlap per
@@ -219,50 +220,25 @@ def build_vocab(
     1..top_n by (count DESC, token ASC) — fully deterministic incl.
     ties. Corpus-side work is one explode + map-side-combined count.
 
-    Ranking is FULLY DISTRIBUTED — nothing ever lands on the driver, so
-    a 1M-entry vocab costs the same plan as a 100-entry one: range-
-    partition the (vocab-sized) count table on the rank key, assign
-    per-partition row_numbers (window partitioned by the shuffle
-    partition — embarrassingly parallel), and convert them to global
-    ranks by adding per-partition offsets. The offsets come from a
-    numPartitions-row prefix sum computed as a broadcast triangular
-    self-join — no single-partition sort exchange anywhere in the plan
-    (gated by test_plan_quality.test_vocab_rank_distributed)."""
-    from pyspark.sql import Window
-
-    # vocab-sized cache BEFORE repartitionByRange: the range exchange
-    # runs a boundary-sampling job over its child, which would
-    # otherwise re-execute the whole corpus tokenize+count pass just
-    # to pick split points (round 11, guide §1.2/§5 — the plan showed
-    # the documents scan 6x; the sample now reads this tiny cache)
+    The rank is ``ranking.global_row_number`` over the (vocab-sized)
+    count table: no single-partition sort anywhere in the plan (gated
+    by test_plan_quality.test_vocab_rank_distributed), and only
+    numPartitions rows of per-partition counts reach the driver, never
+    vocabulary rows."""
+    # vocab-sized cache BEFORE the range repartition: its boundary-
+    # sampling job runs over this child, which would otherwise
+    # re-execute the whole corpus tokenize+count pass just to pick
+    # split points (round 11, guide §1.2/§5 — the plan showed the
+    # documents scan 6x; the sample now reads this tiny cache)
     counts = track_cache(
         docs.select(F.explode(tokens(F.col(text_col))).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    # range partitions follow the rank order, so partition id order ==
-    # global rank order; persist so the offsets pass and the rank pass
-    # share one materialization (and one partition assignment)
-    part = counts.repartitionByRange(
-        F.col("cnt").desc(), F.col("tok")
-    ).withColumn("__pid", F.spark_partition_id())
-    part = track_cache(part)
-    pc = part.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n"))
-    a, b = pc.alias("a"), pc.alias("b")
-    offsets = (
-        a.join(F.broadcast(b), F.col("b.__pid") < F.col("a.__pid"), "left")
-        .groupBy(F.col("a.__pid").alias("__pid"))
-        .agg(F.coalesce(F.sum("b.__n"), F.lit(0)).alias("__off"))
+    ranked = global_row_number(
+        counts, [F.col("cnt").desc(), F.col("tok")], out_col="token_id"
     )
-    w = Window.partitionBy("__pid").orderBy(F.col("cnt").desc(), F.col("tok"))
-    return (
-        part.join(F.broadcast(offsets), "__pid")
-        .withColumn(
-            "token_id", (F.row_number().over(w) + F.col("__off")).cast("long")
-        )
-        .filter(F.col("token_id") <= top_n)
-        .select("tok", "token_id")
-    )
+    return ranked.filter(F.col("token_id") <= top_n).select("tok", "token_id")
 
 
 def encode_tokens(

@@ -233,9 +233,9 @@ def pin_frame(df: DataFrame) -> DataFrame:
     (``localCheckpoint(eager=True)``) so the physical partitioning can
     never be re-derived differently by a later action.
 
-    This is the correctness pin behind operators/ranking.py and
-    operators/packing.py: their repartitionByRange boundaries come
-    from an RDD-id-seeded reservoir sample, so any recomputation
+    This is the correctness pin behind operators/ranking.py: its
+    repartitionByRange boundaries come from an RDD-id-seeded
+    reservoir sample, so any recomputation
     (cache eviction, an unpersist between the offsets pass and the
     consuming action) could draw DIFFERENT boundaries and corrupt the
     banded ranks/prefix sums. After localCheckpoint there is no

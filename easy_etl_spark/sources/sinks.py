@@ -27,10 +27,9 @@ commit-log claim, Delta MERGE); the interface is format-agnostic on
 purpose.
 
 Scale notes: the anti-join shuffles on the upsert keys — that is the
-unavoidable shuffle of any merge. Surrogate ids use a partition-offset
-scheme (zipWithIndex-style via ``row_number`` over a cheap order or
-``monotonically_increasing_id``) rather than a global single-partition
-window.
+unavoidable shuffle of any merge. Surrogate ids come from
+``operators.ranking.dense_ids`` (re-exported here), whose module
+docstring holds the account of the partition-offset scheme.
 """
 
 from __future__ import annotations
@@ -39,45 +38,10 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def dense_ids(df: DataFrame, id_col: str = "id", offset: int = 0) -> DataFrame:
-    """Dense sequential ids starting at ``offset + 1`` without a global
-    single-partition window (the naive ``row_number() OVER (ORDER BY
-    ...)`` funnels every row through one task — fatal at scale).
-
-    Scheme (zipWithIndex in DataFrame terms): count rows per partition
-    (a tiny numPartitions-row aggregate), prefix-sum the counts on the
-    driver, then id = partition's start + intra-partition row_number.
-    The only window is partitioned by ``spark_partition_id`` — embar-
-    rassingly parallel. Requires a deterministic input plan (the frame
-    is evaluated twice); parquet-backed lineage qualifies.
-    """
-    part = df.withColumn("__pid", F.spark_partition_id()).withColumn(
-        "__ord", F.monotonically_increasing_id()
-    )
-    counts = {
-        r["__pid"]: r["n"]
-        for r in part.groupBy("__pid").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    starts: dict[int, int] = {}
-    acc = offset
-    for pid in sorted(counts):
-        starts[pid] = acc
-        acc += counts[pid]
-    if not starts:  # empty frame: id column still has to exist
-        return df.withColumn(id_col, F.lit(None).cast("long")).select(id_col, *df.columns)
-    start_map = F.create_map(
-        *[lit for pid, s in starts.items() for lit in (F.lit(pid), F.lit(s))]
-    )
-    w = Window.partitionBy("__pid").orderBy("__ord")
-    return (
-        part.withColumn(id_col, F.row_number().over(w) + start_map[F.col("__pid")])
-        .drop("__pid", "__ord")
-        .select(id_col, *df.columns)
-    )
+from ..operators.ranking import dense_ids
 
 
 def ids_past_max(df: DataFrame, current: DataFrame | None, id_col: str = "id") -> DataFrame:

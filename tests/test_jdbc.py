@@ -196,6 +196,7 @@ def test_sink_contract_append_then_keyed_and_id_keyed_upsert(
     sink = _contract_sink(kind, spark, tmp_path_factory)
     sink.append(spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"))
     assert _rows(sink, "id", "k", "v") == [(1, 1, "a"), (2, 2, "b")]
+    assert dict(sink.read().dtypes)["id"] == "bigint"
     # natural-key upsert: the match keeps its id, the insert gets the next one
     sink.upsert(spark.createDataFrame([(2, "B"), (3, "c")], "k int, v string"), ["k"])
     assert _rows(sink, "id", "k", "v") == [(1, 1, "a"), (2, 2, "B"), (3, 3, "c")]

@@ -133,7 +133,7 @@ def test_banded_rank_survives_release_caches(spark):
 
 
 def test_running_offset_survives_release_caches(spark):
-    from easy_etl_spark.operators.packing import global_running_offset
+    from easy_etl_spark.operators.ranking import global_running_offset
 
     df = spark.range(0, 12000).withColumn("w", F.col("id") % 7 + 1)
     out = global_running_offset(df, "w", "id", num_partitions=8)

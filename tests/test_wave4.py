@@ -125,7 +125,7 @@ def test_decontaminate_handchecked(spark):
 
 
 def test_global_running_offset_matches_naive(spark):
-    from easy_etl_spark.operators.packing import global_running_offset
+    from easy_etl_spark.operators.ranking import global_running_offset
 
     rows = [(i, (i * 7) % 13 + 1) for i in range(97)]
     df = spark.createDataFrame(rows, ["doc_id", "n"])
@@ -135,6 +135,15 @@ def test_global_running_offset_matches_naive(spark):
     for i, n in rows:
         assert got[i] == acc
         acc += n
+    # NULL order keys sort first, like the window form: a partition
+    # holding only NULL keys must still take its place in __pid order
+    nulls = spark.createDataFrame(
+        [(i, None if i < 400 else i, 1) for i in range(1000)],
+        "row long, doc_id long, n long",
+    )
+    got = global_running_offset(nulls, "n", "doc_id", num_partitions=8).collect()
+    assert sorted(r.start_ofs for r in got) == list(range(1000))
+    assert all(r.start_ofs == r.doc_id for r in got if r.doc_id is not None)
 
 
 def test_pack_sequences_boundaries(spark):
