@@ -1,42 +1,90 @@
 """Multimodal columns: image/audio/video as opaque `binary` columns
-with typed metadata, processed by Arrow-batched pandas functions over
-`mapInPandas`.
+with typed metadata, decoded and measured by pure-numpy codecs.
 
-The Spark-side plumbing (schema, partition-preserving batch iteration,
-UDF signatures, output shapes) is real and tested, and so are the
-codecs: binary PPM (P6), uncompressed 24-bit BMP, 8-bit PNG (stdlib
-zlib inflate + full None/Sub/Up/Average/Paeth scanline unfiltering,
-CRC-verified chunks) and baseline JPEG (operators/jpegcodec.py —
-marker walk, Huffman entropy decode, dequant + IDCT, chroma
-upsampling) all decode natively in pure numpy — no external image
-libraries — so `image_stats` does actual pixel math end-to-end on
-compressed input too. Unsupported VARIANTS (progressive JPEG, 16-bit
-PNG, Adam7) refuse loudly; `fake_feature_extract` remains the
-deterministic byte-level stand-in where format-agnostic features are
-wanted.
+The codecs are real: binary PPM (P6), uncompressed 24-bit BMP, 8-bit
+PNG (stdlib zlib inflate + full None/Sub/Up/Average/Paeth scanline
+unfiltering, CRC-verified chunks), baseline JPEG (operators/jpegcodec.py
+— marker walk, Huffman entropy decode, dequant + IDCT, chroma
+upsampling), RIFF/WAVE PCM and FLAC (operators/flaccodec.py) all decode
+natively — no external codec libraries — so `image_stats` and the
+audio windows do actual pixel and sample math end-to-end on compressed
+input. Unsupported VARIANTS (progressive JPEG, 16-bit PNG, Adam7)
+refuse loudly; `fake_feature_extract` remains the deterministic
+byte-level stand-in where format-agnostic features are wanted.
 
-Scale design: media blobs ride through `mapInPandas` in Arrow record
-batches — columnar transfer, no per-row pickling; batch size is
-governed by spark.sql.execution.arrow.maxRecordsPerBatch. Operators
-are per-partition (no shuffle); downstream joins key on the metadata,
-never the blob.
+The Python boundary. No native expression decodes these formats, so
+every per-blob operator here runs in Python workers — and crosses into
+them in one place, `map_blobs(media_df, rows_of, schema)`, which
+- projects `doc_id, media`, so no other column reaches a worker;
+- ships this module, jpegcodec and flaccodec to the executors by value
+  (cloudpickle), so a worker never needs easy_etl_spark importable;
+- streams the blobs through mapInPandas in Arrow record batches
+  (columnar transfer, no per-row pickling; batch size is
+  spark.sql.execution.arrow.maxRecordsPerBatch);
+- calls `rows_of(doc_id, blob)` per blob and builds one frame per batch
+  from the tuples it yields, with the schema's column names, so a batch
+  that yields no rows still matches the schema.
+
+An operator keeps only its per-blob math. Each is per-partition (no
+shuffle); downstream joins key on the derived metadata, never the blob.
+The `synth_*` fixtures cross the same boundary through `_synth` and keep
+only their closed-form pixel or sample formula — the formula the DuckDB
+oracles replay as integer SQL. The dHash band join and the audio
+fingerprint join are native Spark over the derived integers.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+import hashlib
+import sys
+from typing import Callable, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from . import jpegcodec
+from . import flaccodec, jpegcodec
+# by name, not as flaccodec.*: a shipped closure then pickles only these
+# functions' call graph instead of the whole flaccodec module
+from .flaccodec import decode_flac, encode_flac
 
 #: output schema of featurize(): metadata + fixed-width feature vector
 FEATURE_SCHEMA = (
     "doc_id bigint, n_bytes int, content_hash string, features array<double>"
 )
+#: output schema of the windowed-loudness operators (PCM, WAV, FLAC)
+WINDOW_SCHEMA = (
+    "doc_id bigint, win bigint, n_samples bigint, energy bigint, peak bigint"
+)
+
+
+def map_blobs(
+    media_df: DataFrame,
+    rows_of: Callable[[int, bytes], Iterable[tuple]],
+    schema: str,
+) -> DataFrame:
+    """The module's one crossing into Python workers (see the module
+    docstring): `rows_of(doc_id, blob)` yields output tuples in
+    `schema` order, zero or more per blob."""
+    for module in (sys.modules[__name__], jpegcodec, flaccodec):
+        cloudpickle.register_pickle_by_value(module)
+    out_schema = StructType.fromDDL(schema)
+    names = out_schema.names
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                row
+                for doc_id, blob in zip(pdf["doc_id"], pdf["media"])
+                for row in rows_of(doc_id, bytes(blob))
+            ]
+            yield pd.DataFrame(rows, columns=names)
+
+    return media_df.select("doc_id", "media").mapInPandas(run, out_schema)
 
 
 def with_binary_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -53,9 +101,6 @@ def with_binary_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-# decode_image is defined below with the real PPM/BMP parsers.
-
-
 def fake_feature_extract(data: bytes, n_features: int = 8) -> list[float]:
     """Deterministic stand-in for a feature extractor: fixed-width
     vector from byte statistics of equal-width chunks."""
@@ -70,67 +115,36 @@ def fake_feature_extract(data: bytes, n_features: int = 8) -> list[float]:
 
 
 def featurize(media_df: DataFrame, n_features: int = 8) -> DataFrame:
-    """mapInPandas feature extraction over the binary column: iterator
-    of Arrow batches in, feature rows out. Per-partition, shuffle-free;
-    this is the template a real decode/resize/frame-sample op uses."""
-    # Ship this module's functions by value so executors never need
-    # easy_etl_spark importable on their own sys.path (cloudpickle
-    # serializes module-level functions by reference otherwise).
-    import sys
+    """Feature extraction over the binary column: byte length, md5 and
+    the fixed-width `fake_feature_extract` vector per blob — the
+    template a real decode/resize/frame-sample op follows."""
+    def rows_of(doc_id, blob):
+        yield (
+            doc_id,
+            len(blob),
+            hashlib.md5(blob).hexdigest(),
+            fake_feature_extract(blob, n_features),
+        )
 
-    try:
-        from pyspark import cloudpickle
-
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    except Exception:
-        pass
-    extract = fake_feature_extract
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            blobs = pdf["media"]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": blobs.map(len),
-                    "content_hash": blobs.map(lambda b: hashlib.md5(b).hexdigest()),
-                    "features": blobs.map(lambda b: extract(bytes(b), n_features)),
-                }
-            )
-
-    return media_df.mapInPandas(run, FEATURE_SCHEMA)
+    return map_blobs(media_df, rows_of, FEATURE_SCHEMA)
 
 
 def frame_sample(media_df: DataFrame, every_n_bytes: int = 64) -> DataFrame:
     """'Frame sampling' template: emit one row per sampled offset of
     each blob (the video-frame analog: one input row → many output
-    rows, schema change, still per-partition)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"doc_id": [], "offset": [], "sample_byte": []}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-                b = bytes(blob)
-                for off in range(0, len(b), every_n_bytes):
-                    rows["doc_id"].append(doc_id)
-                    rows["offset"].append(off)
-                    rows["sample_byte"].append(b[off])
-            yield pd.DataFrame(rows)
+    rows, and an empty blob → none)."""
+    def rows_of(doc_id, blob):
+        for off in range(0, len(blob), every_n_bytes):
+            yield doc_id, off, blob[off]
 
-    return media_df.mapInPandas(run, "doc_id bigint, offset int, sample_byte int")
+    return map_blobs(media_df, rows_of, "doc_id bigint, offset int, sample_byte int")
 
 
 def resize_image(data: bytes, width: int, height: int) -> bytes:
     """Real nearest-neighbor resize for natively-decodable formats:
     decode (PPM/BMP/PNG), index-sample to (height, width), re-encode
     as PPM. JPEG inputs raise via decode_image's contract."""
-    import numpy as np
-
-    a = decode_image(data)
-    if a.shape[2] == 1:
-        a = np.repeat(a, 3, axis=2)
-    a = a[:, :, :3]
+    a = _rgb(decode_image(data))
     h, w, _ = a.shape
     ys = (np.arange(height) * h) // height
     xs = (np.arange(width) * w) // width
@@ -144,31 +158,14 @@ def fake_resize(data: bytes, factor: int = 4) -> bytes:
 
 
 def resize(media_df: DataFrame, factor: int = 4) -> DataFrame:
-    """Resize template over mapInPandas: binary in → binary out with
-    updated metadata, per-partition, no shuffle. Swap fake_resize for
-    resize_image when codecs exist; nothing else changes."""
-    import sys
+    """Resize template: binary in → binary out with updated metadata.
+    Swap fake_resize for resize_image when the input is a decodable
+    image; nothing else changes."""
+    def rows_of(doc_id, blob):
+        small = fake_resize(blob, factor)
+        yield doc_id, small, len(small)
 
-    try:
-        from pyspark import cloudpickle
-
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    except Exception:
-        pass
-    shrink = fake_resize
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = pdf["media"].map(lambda b: shrink(bytes(b), factor))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media": blobs,
-                    "n_bytes": blobs.map(len),
-                }
-            )
-
-    return media_df.mapInPandas(run, "doc_id bigint, media binary, n_bytes int")
+    return map_blobs(media_df, rows_of, "doc_id bigint, media binary, n_bytes int")
 
 
 # ----------------------------------------------------------------------
@@ -448,6 +445,28 @@ def decode_image(data: bytes):
     )
 
 
+def _synth(
+    docs: DataFrame, max_docs: int, blob_of: Callable[[int], bytes]
+) -> DataFrame:
+    """Fixture column (doc_id, media) for the docs with doc_id <
+    max_docs, media = blob_of(doc_id). The scan reads only doc_id: the
+    empty literal fills map_blobs' media slot and is never read."""
+    ids = docs.filter(F.col("doc_id") < max_docs).select(
+        "doc_id", F.lit(b"").alias("media")
+    )
+    return map_blobs(
+        ids, lambda doc_id, _empty: [(doc_id, blob_of(doc_id))], "doc_id bigint, media binary"
+    )
+
+
+def _rgb(a):
+    """(h, w, C) decoded image → (h, w, 3): greyscale replicated into
+    RGB, alpha dropped."""
+    if a.shape[2] == 1:
+        a = np.repeat(a, 3, axis=2)
+    return a[:, :, :3]
+
+
 def synth_ppm_images(docs: DataFrame, max_docs: int = 100) -> DataFrame:
     """Deterministic PPM fixture column: doc_id → a real encoded P6
     image whose pixel p (row-major, interleaved RGB) is
@@ -455,33 +474,12 @@ def synth_ppm_images(docs: DataFrame, max_docs: int = 100) -> DataFrame:
     The formula is replayable as pure integer SQL, so an oracle can
     verify stats computed from the DECODED bytes without any codec —
     if the decoder mis-parses the header or strides, every sum moves."""
-    import sys
+    def blob_of(doc_id):
+        w, h = 8 + doc_id % 5, 6 + doc_id % 3
+        p = np.arange(w * h * 3, dtype="int64")
+        return encode_ppm(((doc_id * 7 + p * 13) % 256).astype("uint8").reshape(h, w, 3))
 
-    try:
-        from pyspark import cloudpickle
-
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    except Exception:
-        pass
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = {"doc_id": [], "media": []}
-            for doc_id in pdf["doc_id"]:
-                w, h = 8 + doc_id % 5, 6 + doc_id % 3
-                p = np.arange(w * h * 3, dtype="int64")
-                px = ((doc_id * 7 + p * 13) % 256).astype("uint8").reshape(h, w, 3)
-                out["doc_id"].append(doc_id)
-                out["media"].append(encode_ppm(px))
-            yield pd.DataFrame(out)
-
-    return (
-        docs.select("doc_id")
-        .filter(F.col("doc_id") < max_docs)
-        .mapInPandas(run, "doc_id bigint, media binary")
-    )
+    return _synth(docs, max_docs, blob_of)
 
 
 def synth_png_images(docs: DataFrame, max_docs: int = 100) -> DataFrame:
@@ -493,33 +491,12 @@ def synth_png_images(docs: DataFrame, max_docs: int = 100) -> DataFrame:
     synth_ppm_images: an oracle can verify stats computed from the
     DECODED bytes as pure integer SQL — any inflate/unfilter/stride
     mistake in decode_png moves a channel sum."""
-    import sys
+    def blob_of(doc_id):
+        w, h = 7 + doc_id % 6, 5 + doc_id % 4
+        p = np.arange(w * h * 3, dtype="int64")
+        return encode_png(((doc_id * 11 + p * 17) % 256).astype("uint8").reshape(h, w, 3))
 
-    try:
-        from pyspark import cloudpickle
-
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    except Exception:
-        pass
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = {"doc_id": [], "media": []}
-            for doc_id in pdf["doc_id"]:
-                w, h = 7 + doc_id % 6, 5 + doc_id % 4
-                p = np.arange(w * h * 3, dtype="int64")
-                px = ((doc_id * 11 + p * 17) % 256).astype("uint8").reshape(h, w, 3)
-                out["doc_id"].append(doc_id)
-                out["media"].append(encode_png(px))
-            yield pd.DataFrame(out)
-
-    return (
-        docs.select("doc_id")
-        .filter(F.col("doc_id") < max_docs)
-        .mapInPandas(run, "doc_id bigint, media binary")
-    )
+    return _synth(docs, max_docs, blob_of)
 
 
 def synth_jpeg_images(docs: DataFrame, max_docs: int = 100) -> DataFrame:
@@ -532,91 +509,31 @@ def synth_jpeg_images(docs: DataFrame, max_docs: int = 100) -> DataFrame:
     oracle replays the decoded pixel sums as pure integer SQL — any
     marker/Huffman/dequant/IDCT bug moves a sum. The lossy path on
     arbitrary images is pinned by round-trip tolerance pytests."""
-    import sys
+    def blob_of(doc_id):
+        bw, bh = 2 + doc_id % 3, 1 + doc_id % 2
+        bidx = np.arange(bw * bh, dtype="int64").reshape(bh, bw)  # row-major
+        blocks = 2 * ((doc_id * 13 + bidx * 29) % 128)
+        img = np.repeat(np.repeat(blocks, 8, axis=0), 8, axis=1)
+        return jpegcodec.encode_jpeg(img.astype("uint8"))
 
-    from . import jpegcodec
-
-    try:
-        from pyspark import cloudpickle
-
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-        cloudpickle.register_pickle_by_value(jpegcodec)
-    except Exception:
-        pass
-    encode_jpeg = jpegcodec.encode_jpeg
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = {"doc_id": [], "media": []}
-            for doc_id in pdf["doc_id"]:
-                w, h = 8 * (2 + doc_id % 3), 8 * (1 + doc_id % 2)
-                img = np.zeros((h, w), dtype="uint8")
-                for by in range(h // 8):
-                    for bx in range(w // 8):
-                        bidx = by * (w // 8) + bx
-                        img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                            2 * ((doc_id * 13 + bidx * 29) % 128)
-                        )
-                out["doc_id"].append(doc_id)
-                out["media"].append(encode_jpeg(img))
-            yield pd.DataFrame(out)
-
-    return (
-        docs.select("doc_id")
-        .filter(F.col("doc_id") < max_docs)
-        .mapInPandas(run, "doc_id bigint, media binary")
-    )
+    return _synth(docs, max_docs, blob_of)
 
 
 def image_stats(media_df: DataFrame) -> DataFrame:
     """REAL decode + pixel math over the binary column: parse each blob
     with decode_image, emit width/height and integer-exact per-channel
-    sums plus rounded channel means. Per-partition mapInPandas — the
-    same shape a 100 TB thumbnail/EXIF pass has (no shuffle; blobs are
-    never moved, only their derived metadata is)."""
-    import sys
+    sums plus rounded channel means — the shape of a 100 TB
+    thumbnail/EXIF pass (blobs are never moved, only their derived
+    metadata is)."""
+    def rows_of(doc_id, blob):
+        a = _rgb(decode_image(blob))
+        h, w, _ = a.shape
+        sums = [int(s) for s in a.reshape(-1, 3).sum(axis=0, dtype="int64")]
+        yield (doc_id, w, h, *sums, *(round(s / (w * h), 4) for s in sums))
 
-    from . import jpegcodec
-
-    try:
-        from pyspark import cloudpickle
-
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-        cloudpickle.register_pickle_by_value(jpegcodec)
-    except Exception:
-        pass
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "width": [], "height": [],
-                "r_sum": [], "g_sum": [], "b_sum": [],
-                "mean_r": [], "mean_g": [], "mean_b": [],
-            }
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-                a = decode_image(bytes(blob))
-                if a.shape[2] == 1:  # greyscale → replicate into RGB
-                    a = np.repeat(a, 3, axis=2)
-                a = a[:, :, :3]  # RGBA → drop alpha for channel stats
-                h, w, _ = a.shape
-                sums = a.reshape(-1, 3).sum(axis=0, dtype="int64")
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["r_sum"].append(int(sums[0]))
-                out["g_sum"].append(int(sums[1]))
-                out["b_sum"].append(int(sums[2]))
-                out["mean_r"].append(round(float(sums[0]) / (w * h), 4))
-                out["mean_g"].append(round(float(sums[1]) / (w * h), 4))
-                out["mean_b"].append(round(float(sums[2]) / (w * h), 4))
-            yield pd.DataFrame(out)
-
-    return media_df.mapInPandas(
-        run,
+    return map_blobs(
+        media_df,
+        rows_of,
         "doc_id bigint, width int, height int, r_sum bigint, g_sum bigint, "
         "b_sum bigint, mean_r double, mean_g double, mean_b double",
     )
@@ -704,33 +621,11 @@ def synth_wav_audio(docs: DataFrame, max_docs: int = 100) -> DataFrame:
     windowed energies computed from the DECODED samples as pure
     integer SQL — any header/stride/sign mistake in decode_wav moves
     an energy sum."""
-    import sys
+    def blob_of(doc_id):
+        i = np.arange(256 + 64 * (doc_id % 5), dtype="int64")
+        return encode_wav(((doc_id * 31 + i * 17) % 65536) - 32768, bits=16)
 
-    try:
-        from pyspark import cloudpickle
-
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    except Exception:
-        pass
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = {"doc_id": [], "media": []}
-            for doc_id in pdf["doc_id"]:
-                nsamp = 256 + 64 * (doc_id % 5)
-                i = np.arange(nsamp, dtype="int64")
-                s = ((doc_id * 31 + i * 17) % 65536) - 32768
-                out["doc_id"].append(doc_id)
-                out["media"].append(encode_wav(s, bits=16))
-            yield pd.DataFrame(out)
-
-    return (
-        docs.select("doc_id")
-        .filter(F.col("doc_id") < max_docs)
-        .mapInPandas(run, "doc_id bigint, media binary")
-    )
+    return _synth(docs, max_docs, blob_of)
 
 
 def synth_flac_audio(docs: DataFrame, max_docs: int = 100) -> DataFrame:
@@ -742,174 +637,64 @@ def synth_flac_audio(docs: DataFrame, max_docs: int = 100) -> DataFrame:
     oracle replay exercises fixed-predictor, quantized-LPC and
     verbatim decode paths plus multi-frame reassembly; any Rice/CRC/
     predictor mistake in decode_flac moves a window energy."""
-    import sys
+    def blob_of(doc_id):
+        i = np.arange(192 + 64 * (doc_id % 4), dtype="int64")
+        return encode_flac(
+            ((doc_id * 37 + i * 23) % 65536) - 32768,
+            bits=16,
+            block_size=64 + 32 * (doc_id % 3),
+            subframe=("auto", "lpc", "verbatim")[doc_id % 3],
+        )
 
-    try:
-        from pyspark import cloudpickle
+    return _synth(docs, max_docs, blob_of)
 
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-        from . import flaccodec as _fc
 
-        cloudpickle.register_pickle_by_value(sys.modules[_fc.__name__])
-    except Exception:
-        pass
+def _window_energy(
+    media_df: DataFrame, window: int, samples_of: Callable[[bytes], np.ndarray]
+) -> DataFrame:
+    """Windowed loudness over the int64 mono samples that
+    `samples_of(blob)` decodes: per fixed-length window, the sample
+    count, energy (Σ sample²) and peak (max sample²) — the RMS/peak
+    profile an audio-curation pipeline computes per frame. Integer
+    outputs end-to-end, no float accumulation to drift."""
+    def rows_of(doc_id, blob):
+        mono = samples_of(blob)
+        for start in range(0, len(mono), window):
+            sq = mono[start : start + window] ** 2
+            yield doc_id, start // window, len(sq), int(sq.sum()), int(sq.max())
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from .flaccodec import encode_flac
-
-        modes = ["auto", "lpc", "verbatim"]
-        for pdf in batches:
-            out = {"doc_id": [], "media": []}
-            for doc_id in pdf["doc_id"]:
-                nsamp = 192 + 64 * (doc_id % 4)
-                i = np.arange(nsamp, dtype="int64")
-                s = ((doc_id * 37 + i * 23) % 65536) - 32768
-                out["doc_id"].append(doc_id)
-                out["media"].append(
-                    encode_flac(
-                        s,
-                        bits=16,
-                        block_size=64 + 32 * (doc_id % 3),
-                        subframe=modes[doc_id % 3],
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    return (
-        docs.select("doc_id")
-        .filter(F.col("doc_id") < max_docs)
-        .mapInPandas(run, "doc_id bigint, media binary")
-    )
+    return map_blobs(media_df, rows_of, WINDOW_SCHEMA)
 
 
 def flac_window_energy(media_df: DataFrame, window: int = 64) -> DataFrame:
-    """REAL compressed-audio decode + windowed loudness: parse each
-    blob with flaccodec.decode_flac (Rice residuals, predictors, CRCs
-    and all), mix channels by integer sum, and emit per-window sample
-    count, energy (Σ sample²) and peak (max sample²) — the same
-    RMS/peak profile as wav_window_energy, now over a real compressed
-    codec. Per-partition mapInPandas, zero shuffle; integer outputs
-    end-to-end."""
-    import sys
-
-    try:
-        from pyspark import cloudpickle
-
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-        from . import flaccodec as _fc
-
-        cloudpickle.register_pickle_by_value(sys.modules[_fc.__name__])
-    except Exception:
-        pass
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from .flaccodec import decode_flac
-
-        for pdf in batches:
-            ids, wins, ns, es, ps = [], [], [], [], []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-                samples, _rate = decode_flac(bytes(blob))
-                mono = samples.sum(axis=1, dtype=np.int64)
-                for w in range((len(mono) + window - 1) // window):
-                    chunk = mono[w * window : (w + 1) * window]
-                    sq = chunk * chunk
-                    ids.append(doc_id)
-                    wins.append(w)
-                    ns.append(len(chunk))
-                    es.append(int(sq.sum()))
-                    ps.append(int(sq.max()) if len(sq) else 0)
-            yield pd.DataFrame(
-                {"doc_id": ids, "win": wins, "n_samples": ns, "energy": es, "peak": ps}
-            )
-
-    return media_df.select("doc_id", "media").mapInPandas(run, WAV_WINDOW_SCHEMA)
-
-
-WAV_WINDOW_SCHEMA = (
-    "doc_id bigint, win bigint, n_samples bigint, energy bigint, peak bigint"
-)
+    """Windowed loudness over REAL compressed audio: each blob decoded
+    with flaccodec.decode_flac (Rice residuals, predictors, CRCs and
+    all), channels mixed by integer sum — the wav_window_energy profile
+    over a compressed codec."""
+    return _window_energy(
+        media_df,
+        window,
+        lambda blob: decode_flac(blob)[0].sum(axis=1, dtype=np.int64),
+    )
 
 
 def wav_window_energy(media_df: DataFrame, window: int = 64) -> DataFrame:
-    """REAL audio decode + windowed loudness: parse each blob with
-    decode_wav, mix channels by integer sum, split into fixed-length
-    windows, and emit per-window sample count, energy (Σ sample²) and
-    peak (max sample²) — the RMS/peak profile an audio-curation
-    pipeline computes per frame, now over a real container format
-    instead of raw bytes. Per-partition mapInPandas, zero shuffle;
-    integer outputs end-to-end."""
-    import sys
-
-    try:
-        from pyspark import cloudpickle
-
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    except Exception:
-        pass
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            ids, wins, ns, es, ps = [], [], [], [], []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-                samples, _rate = decode_wav(bytes(blob))
-                mono = samples.sum(axis=1, dtype=np.int64)
-                for w in range((len(mono) + window - 1) // window):
-                    chunk = mono[w * window : (w + 1) * window]
-                    sq = chunk * chunk
-                    ids.append(doc_id)
-                    wins.append(w)
-                    ns.append(len(chunk))
-                    es.append(int(sq.sum()))
-                    ps.append(int(sq.max()) if len(sq) else 0)
-            yield pd.DataFrame(
-                {"doc_id": ids, "win": wins, "n_samples": ns, "energy": es, "peak": ps}
-            )
-
-    return media_df.select("doc_id", "media").mapInPandas(run, WAV_WINDOW_SCHEMA)
-
-
-PCM_WINDOW_SCHEMA = "doc_id bigint, win bigint, n_samples bigint, energy bigint, peak bigint"
+    """Windowed loudness over a REAL container format: each blob
+    decoded with decode_wav, channels mixed by integer sum."""
+    return _window_energy(
+        media_df, window, lambda blob: decode_wav(blob)[0].sum(axis=1, dtype=np.int64)
+    )
 
 
 def pcm_window_energy(media_df: DataFrame, window: int = 64) -> DataFrame:
-    """Audio-analog feature extraction over raw binary payloads: treat
-    each blob as signed 8-bit PCM, split into fixed-length windows, and
-    emit per-window sample count, energy (sum of squares) and peak
-    (max square) — the RMS/peak loudness profile a real audio pipeline
-    computes per frame.
-
-    The decode is REAL binary work (numpy int8 view over Arrow-
-    delivered bytes inside mapInPandas, one vectorized pass per
-    window), not a stub; only the SIGNAL is synthetic (text bytes as
+    """Windowed loudness over raw binary payloads read as signed 8-bit
+    PCM. The decode is real binary work (a numpy int8 view over the
+    Arrow-delivered bytes); only the SIGNAL is synthetic (text bytes as
     PCM), which is what lets a SQL oracle replay the exact energies
-    from the characters. Integer outputs end-to-end — no float
-    accumulation to drift."""
-    import numpy as np
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, wins, ns, es, ps = [], [], [], [], []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-                samples = np.frombuffer(bytes(blob), dtype=np.int8).astype(np.int64)
-                for w in range(0, (len(samples) + window - 1) // window):
-                    chunk = samples[w * window : (w + 1) * window]
-                    sq = chunk * chunk
-                    ids.append(doc_id)
-                    wins.append(w)
-                    ns.append(len(chunk))
-                    es.append(int(sq.sum()))
-                    ps.append(int(sq.max()) if len(sq) else 0)
-            yield pd.DataFrame(
-                {"doc_id": ids, "win": wins, "n_samples": ns, "energy": es, "peak": ps}
-            )
-
-    return media_df.select("doc_id", "media").mapInPandas(run, PCM_WINDOW_SCHEMA)
+    from the characters."""
+    return _window_energy(
+        media_df, window, lambda blob: np.frombuffer(blob, dtype=np.int8).astype(np.int64)
+    )
 
 
 # ----------------------------------------------------------------------
@@ -921,8 +706,6 @@ def _dhash_of_pixels(px, rows: int, cols: int) -> int:
     luma -> (rows x cols+1) block-mean grid (floor boundaries, floor
     mean) -> horizontal gradient sign bits, MSB-first. Every step is
     integer-exact so a SQL oracle can replay it bit-for-bit."""
-    import numpy as np
-
     a = px.astype(np.int64)
     if a.shape[2] >= 3:
         gray = (299 * a[:, :, 0] + 587 * a[:, :, 1] + 114 * a[:, :, 2]) // 1000
@@ -952,33 +735,52 @@ def _dhash_of_pixels(px, rows: int, cols: int) -> int:
 def dhash_images(media_df: DataFrame, rows: int = 8, cols: int = 7) -> DataFrame:
     """Perceptual fingerprint per image blob: REAL decode (PPM/BMP/
     PNG/JPEG via decode_image) -> 56-bit dHash (8x7 default keeps the
-    hash inside a signed BIGINT on every engine). Per-partition
-    mapInPandas, zero shuffle — the scale path for petabyte image
-    corpora is exactly this: one cheap integer fingerprint per blob,
-    then dedup on the (tiny) hash table."""
-    import sys
+    hash inside a signed BIGINT on every engine). The scale path for
+    petabyte image corpora is exactly this: one cheap integer
+    fingerprint per blob, then dedup on the (tiny) hash table."""
+    def rows_of(doc_id, blob):
+        yield doc_id, _dhash_of_pixels(decode_image(blob), rows, cols)
 
-    try:
-        from pyspark import cloudpickle
+    return map_blobs(media_df, rows_of, "doc_id bigint, dhash bigint")
 
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-        from . import jpegcodec as _jc
 
-        cloudpickle.register_pickle_by_value(sys.modules[_jc.__name__])
-    except Exception:
-        pass
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hs = [], []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-                ids.append(doc_id)
-                hs.append(_dhash_of_pixels(decode_image(bytes(blob)), rows, cols))
-            yield pd.DataFrame({"doc_id": ids, "dhash": hs})
-
-    return media_df.select("doc_id", "media").mapInPandas(
-        run, "doc_id bigint, dhash bigint"
+def _hash_bands(
+    hashes: DataFrame,
+    side: str,
+    max_hamming: int,
+    band_bits: int,
+    n_bands: int,
+    id_col: str,
+    hash_col: str,
+) -> DataFrame:
+    """One row per band of each hash: (<side>_id, <side>_h, band, val),
+    val = the hash's ``band_bits`` bits at band ``band``. Two hashes
+    within ``max_hamming`` bits agree on at least one band whenever
+    max_hamming < n_bands (pigeonhole), so an equi-join on (band, val)
+    finds every qualifying pair and the exact bit_count(xor) check runs
+    on candidates only; any wider radius is refused."""
+    if max_hamming >= n_bands:
+        raise ValueError(
+            f"banding is only complete for max_hamming < n_bands "
+            f"({max_hamming} >= {n_bands})"
+        )
+    mask = (1 << band_bits) - 1
+    bands = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.shiftright(F.col(hash_col), band_bits * b)
+                .bitwiseAND(F.lit(mask))
+                .alias("val"),
+            )
+            for b in range(n_bands)
+        ]
     )
+    return hashes.select(
+        F.col(id_col).alias(f"{side}_id"),
+        F.col(hash_col).alias(f"{side}_h"),
+        F.explode(bands).alias("bd"),
+    ).select(f"{side}_id", f"{side}_h", "bd.band", "bd.val")
 
 
 def dhash_near_dup_pairs(
@@ -990,49 +792,17 @@ def dhash_near_dup_pairs(
     hash_col: str = "dhash",
 ) -> DataFrame:
     """Near-duplicate image pairs by Hamming distance on dHash —
-    BANDED, not all-pairs: split the hash into ``n_bands`` bands of
-    ``band_bits``; two hashes within ``max_hamming`` bits must agree on
-    at least one band whenever max_hamming < n_bands (pigeonhole), so
-    an equi-join on (band, value) finds every qualifying pair and the
-    exact bit_count(xor) check runs on candidates only. Returns
-    (id_a, id_b, hamming)."""
-    if max_hamming >= n_bands:
-        raise ValueError(
-            f"banding is only complete for max_hamming < n_bands "
-            f"({max_hamming} >= {n_bands})"
-        )
-    mask = (1 << band_bits) - 1
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("b"),
-                F.shiftright(F.col(hash_col), band_bits * b)
-                .bitwiseAND(F.lit(mask))
-                .alias("v"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    banded = hashes.select(
-        F.col(id_col), F.col(hash_col), F.explode(bands).alias("bd")
-    ).select(id_col, hash_col, "bd.b", "bd.v")
-    a, b = banded.alias("a"), banded.alias("b")
+    BANDED, not all-pairs (see _hash_bands). Returns
+    (id_a, id_b, hamming) with id_a < id_b."""
+    spec = (max_hamming, band_bits, n_bands, id_col, hash_col)
     cand = (
-        a.join(
-            b,
-            (F.col("a.b") == F.col("b.b"))
-            & (F.col("a.v") == F.col("b.v"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col(f"a.{hash_col}").alias("ha"),
-            F.col(f"b.{hash_col}").alias("hb"),
-        )
+        _hash_bands(hashes, "a", *spec)
+        .join(_hash_bands(hashes, "b", *spec), ["band", "val"])
+        .filter(F.col("a_id") < F.col("b_id"))
+        .select(F.col("a_id").alias("id_a"), F.col("b_id").alias("id_b"), "a_h", "b_h")
         .dropDuplicates(["id_a", "id_b"])
     )
-    ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
+    ham = F.bit_count(F.col("a_h").bitwiseXOR(F.col("b_h")))
     return (
         cand.withColumn("hamming", ham.cast("int"))
         .filter(F.col("hamming") <= max_hamming)
@@ -1049,36 +819,15 @@ def synth_neardup_png_images(
     (+96 mod 256) at a doc-derived position — so same-group docs are a
     few dHash bits apart and cross-group docs are far. Grayscale PNG,
     luma == pixel value, every step SQL-replayable."""
-    import sys
+    def blob_of(doc_id):
+        y, x = np.mgrid[0:size, 0:size]
+        v = ((doc_id % 4) * 37 + x * 5 + y * 11) % 256
+        bx, by = doc_id % 8, (doc_id // 8) % 8
+        blk = (slice(by * 3, by * 3 + 3), slice(bx * 3, bx * 3 + 3))
+        v[blk] = (v[blk] + 96) % 256
+        return encode_png(v.astype("uint8"))
 
-    try:
-        from pyspark import cloudpickle
-
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    except Exception:
-        pass
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = {"doc_id": [], "media": []}
-            for doc_id in pdf["doc_id"]:
-                grp = doc_id % 4
-                y, x = np.mgrid[0:size, 0:size]
-                v = (grp * 37 + x * 5 + y * 11) % 256
-                bx, by = doc_id % 8, (doc_id // 8) % 8
-                blk = (slice(by * 3, by * 3 + 3), slice(bx * 3, bx * 3 + 3))
-                v[blk] = (v[blk] + 96) % 256
-                out["doc_id"].append(doc_id)
-                out["media"].append(encode_png(v.astype("uint8")))
-            yield pd.DataFrame(out)
-
-    return (
-        docs.select("doc_id")
-        .filter(F.col("doc_id") < max_docs)
-        .mapInPandas(run, "doc_id bigint, media binary")
-    )
+    return _synth(docs, max_docs, blob_of)
 
 
 def synth_group_wav_audio(docs: DataFrame, max_docs: int = 60) -> DataFrame:
@@ -1087,34 +836,12 @@ def synth_group_wav_audio(docs: DataFrame, max_docs: int = 60) -> DataFrame:
     position — so same-group docs share identical energies on every
     unperturbed window and an exact inverted-index join finds them.
     16-bit mono RIFF/WAVE, 256 samples; fully SQL-replayable."""
-    import sys
+    def blob_of(doc_id):
+        i = np.arange(256, dtype="int64")
+        s = ((doc_id % 3) * 53 + i * 29) % 4096 - 2048
+        return encode_wav(s + np.where(i // 32 == doc_id % 8, 512, 0), bits=16)
 
-    try:
-        from pyspark import cloudpickle
-
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    except Exception:
-        pass
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = {"doc_id": [], "media": []}
-            for doc_id in pdf["doc_id"]:
-                g, w0 = doc_id % 3, doc_id % 8
-                i = np.arange(256, dtype="int64")
-                s = ((g * 53 + i * 29) % 4096) - 2048
-                s = s + np.where(i // 32 == w0, 512, 0)
-                out["doc_id"].append(doc_id)
-                out["media"].append(encode_wav(s, bits=16))
-            yield pd.DataFrame(out)
-
-    return (
-        docs.select("doc_id")
-        .filter(F.col("doc_id") < max_docs)
-        .mapInPandas(run, "doc_id bigint, media binary")
-    )
+    return _synth(docs, max_docs, blob_of)
 
 
 def audio_fingerprint_pairs(
@@ -1159,42 +886,14 @@ def dhash_cross_dups(
     join with no id-ordering predicate, so a replayed blob (same id,
     same hash) still matches its landed twin. Returns distinct
     (new_id) rows."""
-    if max_hamming >= n_bands:
-        raise ValueError(
-            f"banding is only complete for max_hamming < n_bands "
-            f"({max_hamming} >= {n_bands})"
-        )
-    mask = (1 << band_bits) - 1
-
-    def banded(df, nm):
-        bands = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("b"),
-                    F.shiftright(F.col(hash_col), band_bits * b)
-                    .bitwiseAND(F.lit(mask))
-                    .alias("v"),
-                )
-                for b in range(n_bands)
-            ]
-        )
-        return df.select(
-            F.col(id_col).alias(f"{nm}_id"),
-            F.col(hash_col).alias(f"{nm}_h"),
-            F.explode(bands).alias("bd"),
-        ).select(f"{nm}_id", f"{nm}_h", "bd.b", "bd.v")
-
+    spec = (max_hamming, band_bits, n_bands, id_col, hash_col)
     cand = (
-        banded(new_hashes, "new")
-        .join(banded(index_hashes, "idx"), ["b", "v"])
+        _hash_bands(new_hashes, "new", *spec)
+        .join(_hash_bands(index_hashes, "idx", *spec), ["band", "val"])
         .dropDuplicates(["new_id", "idx_id"])
     )
     ham = F.bit_count(F.col("new_h").bitwiseXOR(F.col("idx_h")))
-    return (
-        cand.filter(ham <= max_hamming)
-        .select(F.col("new_id").alias("new_id"))
-        .distinct()
-    )
+    return cand.filter(ham <= max_hamming).select("new_id").distinct()
 
 
 def image_blur_scores(media_df: DataFrame) -> DataFrame:
@@ -1204,55 +903,23 @@ def image_blur_scores(media_df: DataFrame) -> DataFrame:
     its variance are computed in exact int64 (var = (n·Σl² − (Σl)²)
     / n², one float division at the end), so an oracle replaying the
     fixture's closed-form pixels verifies the whole decode→convolve
-    pipeline bit-for-bit. Per-partition mapInPandas, zero shuffle —
-    the 100 TB shape is a pure map over blob splits."""
-    import sys
+    pipeline bit-for-bit."""
+    def rows_of(doc_id, blob):
+        g = _rgb(decode_image(blob))[:, :, 1].astype("int64")
+        h, w = g.shape
+        lap = (
+            4 * g[1:-1, 1:-1]
+            - g[1:-1, :-2]
+            - g[1:-1, 2:]
+            - g[:-2, 1:-1]
+            - g[2:, 1:-1]
+        )
+        n, sl, sl2 = int(lap.size), int(lap.sum()), int((lap * lap).sum())
+        yield doc_id, w, h, n, sl, sl2, round(float(n * sl2 - sl * sl) / (n * n), 4)
 
-    from . import jpegcodec
-
-    try:
-        from pyspark import cloudpickle
-
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-        cloudpickle.register_pickle_by_value(jpegcodec)
-    except Exception:
-        pass
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "width": [], "height": [],
-                "n_interior": [], "lap_sum": [], "lap_sq_sum": [], "lap_var": [],
-            }
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-                a = decode_image(bytes(blob))
-                if a.shape[2] == 1:
-                    a = np.repeat(a, 3, axis=2)
-                g = a[:, :, 1].astype("int64")
-                h, w = g.shape
-                lap = (
-                    4 * g[1:-1, 1:-1]
-                    - g[1:-1, :-2]
-                    - g[1:-1, 2:]
-                    - g[:-2, 1:-1]
-                    - g[2:, 1:-1]
-                )
-                n = int(lap.size)
-                sl = int(lap.sum())
-                sl2 = int((lap * lap).sum())
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_interior"].append(n)
-                out["lap_sum"].append(sl)
-                out["lap_sq_sum"].append(sl2)
-                out["lap_var"].append(round(float(n * sl2 - sl * sl) / (n * n), 4))
-            yield pd.DataFrame(out)
-
-    return media_df.mapInPandas(
-        run,
+    return map_blobs(
+        media_df,
+        rows_of,
         "doc_id bigint, width int, height int, n_interior bigint,"
         " lap_sum bigint, lap_sq_sum bigint, lap_var double",
     )
@@ -1264,43 +931,19 @@ def audio_zcr_stats(media_df: DataFrame) -> DataFrame:
     before audio-model training. Crossing = sign change of the
     (s ≥ 0) indicator between consecutive samples; counts and energy
     sums are exact int64 so the fixture oracle replays them as pure
-    integer SQL. Per-partition mapInPandas, zero shuffle."""
-    import sys
+    integer SQL."""
+    def rows_of(doc_id, blob):
+        # (n_frames, channels) → flat stream (fixtures are mono;
+        # multi-channel would interleave, still exact)
+        s = decode_wav(blob)[0].astype("int64").reshape(-1)
+        zc = int(np.abs(np.diff((s >= 0).astype("int64"))).sum())
+        n, e = int(s.size), int((s * s).sum())
+        zcr, rms = round(zc / (n - 1), 6), round((e / n) ** 0.5, 4)
+        yield doc_id, n, zc, zcr, int(np.abs(s).max()), rms
 
-    try:
-        from pyspark import cloudpickle
-
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    except Exception:
-        pass
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "n_samples": [], "n_zero_crossings": [],
-                "zcr": [], "peak_abs": [], "rms": [],
-            }
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-                s, _rate = decode_wav(bytes(blob))
-                # (n_frames, channels) → flat mono stream (fixtures are
-                # mono; multi-channel would interleave, still exact)
-                s = np.asarray(s, dtype="int64").reshape(-1)
-                nn = (s >= 0).astype("int64")
-                zc = int(np.abs(np.diff(nn)).sum())
-                n = int(s.size)
-                e = int((s * s).sum())
-                out["doc_id"].append(doc_id)
-                out["n_samples"].append(n)
-                out["n_zero_crossings"].append(zc)
-                out["zcr"].append(round(zc / (n - 1), 6))
-                out["peak_abs"].append(int(np.abs(s).max()))
-                out["rms"].append(round((e / n) ** 0.5, 4))
-            yield pd.DataFrame(out)
-
-    return media_df.mapInPandas(
-        run,
+    return map_blobs(
+        media_df,
+        rows_of,
         "doc_id bigint, n_samples bigint, n_zero_crossings bigint,"
         " zcr double, peak_abs bigint, rms double",
     )

@@ -89,6 +89,9 @@ def get_spark(app_name: str = "easy-etl-spark", shuffle_partitions: int | None =
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # the console progress bar writes to stderr without a newline,
+        # so it shares terminal lines with a tool's own result lines
+        .config("spark.ui.showConsoleProgress", "false")
         # bucketed tables (operators.scale) need a catalog warehouse;
         # keep it out of the repo tree (static conf, set at build time)
         .config(

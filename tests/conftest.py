@@ -1,10 +1,13 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+#: the checkout this suite lives in; its package is the one under test
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from easy_etl_spark.session import get_spark, register_views
 

@@ -17,10 +17,15 @@ Two 100 TB safety properties:
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
+import easy_etl_spark
 from easy_etl_spark.plans.explain import plan_facts
 from easy_etl_spark.queries import QUERIES
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # queries whose plan construction has side effects or needs tempdirs —
 # exercised by their own tests; plan smoke adds nothing
@@ -93,10 +98,17 @@ def test_global_sorts_only_where_whitelisted(all_dfs):
     assert not stale, f"whitelist entries without a global sort: {stale}"
 
 
+def test_suite_imports_its_own_checkout():
+    # tests/conftest.py puts this checkout first on sys.path; a suite
+    # run from a second clone must test that clone's package
+    pkg = os.path.abspath(easy_etl_spark.__file__)
+    assert pkg.startswith(os.path.join(REPO, "")), (pkg, REPO)
+
+
 def test_every_registered_query_documented_in_coverage():
     """COVERAGE.md is the judge-facing operator->query->test matrix;
     a registered query it never names is invisible coverage."""
-    cov = open("/root/repo/COVERAGE.md").read()
+    cov = open(os.path.join(REPO, "COVERAGE.md")).read()
     missing = [n for n in QUERIES if n not in cov]
     assert not missing, f"queries absent from COVERAGE.md: {missing}"
 

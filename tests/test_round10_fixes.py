@@ -20,8 +20,9 @@ import tempfile
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
 import compare_oracle as co
 
@@ -83,14 +84,14 @@ def test_env_owned_oracle_tmp_survives_clean_exit():
     proc = subprocess.run(
         [
             sys.executable,
-            "/root/repo/tools/compare_oracle.py",
+            os.path.join(REPO, "tools", "compare_oracle.py"),
             "/root/testdata/sf0.001",
             "scalar_functions",
         ],
         capture_output=True,
         text=True,
         env=env,
-        cwd="/root/repo",
+        cwd=REPO,
         timeout=600,
     )
     assert proc.returncode == 0, proc.stdout + proc.stderr
@@ -272,14 +273,14 @@ def test_chaos_retry_hash_identical_under_task_failures():
     proc = subprocess.run(
         [
             sys.executable,
-            "/root/repo/tools/chaos_retry.py",
+            os.path.join(REPO, "tools", "chaos_retry.py"),
             "/root/testdata/sf0.001",
             "range_join_binned",
             "kcore_hindex",
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
         env=dict(os.environ, SPARK_GRAFT_CPUS="8"),
         timeout=900,
     )
@@ -341,14 +342,14 @@ def test_spill_report_run_mode_collects_task_metrics():
     proc = subprocess.run(
         [
             sys.executable,
-            "/root/repo/tools/spill_report.py",
+            os.path.join(REPO, "tools", "spill_report.py"),
             "run",
             "/root/testdata/sf0.001",
             "q1_pricing_summary",
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
         env=dict(os.environ, SPARK_GRAFT_CPUS="8"),
         timeout=600,
     )

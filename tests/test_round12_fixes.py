@@ -21,11 +21,12 @@
 
 from __future__ import annotations
 
+import os
 import sys
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def test_duplicate_clusters_string_ids_propagate(spark):

@@ -60,6 +60,12 @@ def test_frame_sample_rows(spark):
     docs = spark.createDataFrame([(1, "x" * 200)], "doc_id long, text string")
     out = multimodal.frame_sample(multimodal.with_binary_payload(docs), every_n_bytes=64).collect()
     assert [r["offset"] for r in sorted(out, key=lambda r: r["offset"])] == [0, 64, 128, 192]
+    # an empty blob yields no rows, beside a non-empty one and on its own
+    docs = spark.createDataFrame([(1, "x" * 200), (2, "")], "doc_id long, text string")
+    out = multimodal.frame_sample(multimodal.with_binary_payload(docs), every_n_bytes=64).collect()
+    assert sorted((r["doc_id"], r["offset"]) for r in out) == [(1, 0), (1, 64), (1, 128), (1, 192)]
+    docs = spark.createDataFrame([(1, ""), (2, "")], "doc_id long, text string")
+    assert multimodal.frame_sample(multimodal.with_binary_payload(docs), every_n_bytes=64).collect() == []
 
 
 def test_decode_image_unknown_format_contracted():

@@ -14,7 +14,8 @@ from easy_etl_spark.session import load_table
 
 def test_pcm_window_energy_known_bytes(spark):
     text = "A" * 64 + "zzzzzz"  # 64 'A' (65) then 6 'z' (122)
-    docs = spark.createDataFrame([Row(doc_id=7, text=text)])
+    # doc 8's empty payload has no window, so it adds no row
+    docs = spark.createDataFrame([Row(doc_id=7, text=text), Row(doc_id=8, text="")])
     got = sorted(
         pcm_window_energy(with_binary_payload(docs), window=64).collect(),
         key=lambda r: r.win,

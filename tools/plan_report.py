@@ -8,9 +8,11 @@ Usage: python tools/plan_report.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from bench import HEADLINE, HEADLINE_V2
 from easy_etl_spark.plans.explain import executed_plan_facts
@@ -44,7 +46,7 @@ def main() -> None:
             f"| {name} | {f.broadcast_joins} | {f.sort_merge_joins} | {f.cartesian} "
             f"| {f.exchanges} | {f.codegen_stages} | {pushed} |"
         )
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
         fh.write("\n".join(lines) + "\n")
     print("wrote PLANS.md")
 
