@@ -233,19 +233,6 @@ def control_ref_for(sf_dir: str) -> float:
     )
 
 
-def _prime_ivf(spark, sf_dir: str) -> None:
-    """Train the IVF index for this corpus once, outside the timers —
-    the serving posture: an IVF index is trained by a build job and
-    then serves queries against frozen centroids, so the timed knn_ivf
-    measures SERVING cost (assignment + probe + re-rank), not a
-    retrain per call. The frame MUST be built via load_table — the
-    cache key includes the semantic plan hash."""
-    from easy_etl_spark.operators.similarity import trained_centroids
-    from easy_etl_spark.session import load_table
-
-    trained_centroids(load_table(spark, sf_dir, "embeddings"), n_lists=8)
-
-
 def run_section(names: list[str], sf_dir: str) -> dict[str, float]:
     """Build a fresh session, warm up THIS section's queries at
     sf0.001, then time each query end-to-end at sf_dir."""
@@ -271,12 +258,9 @@ def run_section(names: list[str], sf_dir: str) -> dict[str, float]:
             pass
     release_caches()
     spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
-    if any(n.startswith("knn_ivf") for n in names):
-        _prime_ivf(spark, sf_dir)
     if "link_closest_shipdate" in names:
         # constructing the query keys the date dimension into the
-        # surrogate cache (operators/links._SURROGATE_CACHE) — the same
-        # build-job-then-serve posture as the IVF priming above: a
+        # surrogate cache (operators/links._SURROGATE_CACHE): a
         # conformed dimension is keyed once, then serves every link, so
         # the timed number measures link cost, not dim keying.
         QUERIES["link_closest_shipdate"](spark, sf_dir)
@@ -372,18 +356,16 @@ def classify_window(c_start, c_end, limit: float) -> str:
 
 
 def load_history(paths: list[str] | None = None) -> dict[str, float]:
-    """Per-query wall-second floors across prior rounds' artifacts: the
-    min over every BENCH_r*.json v1 line and the committed
-    BENCH_DETAIL.json sections (which has per-query times for v2-v6 and
-    the sf1 rung). The min-across-rounds is the best idle-host estimate
-    we have; contaminated readings in any one round only raise, never
-    lower, a query's floor sensitivity."""
-    import glob as _glob
-
+    """Per-query wall-second floors: the min per query over the
+    artifacts in `paths` (a top-level `queries` table, and the
+    `sections` tables except the sf1 rung's). By default the floors
+    come from the committed BENCH_DETAIL.json alone, which has
+    per-query times for v1-v6; the BENCH_r*.json round files are not
+    read, because they were recorded on hosts with other core counts.
+    Contaminated readings in any one artifact only raise, never lower,
+    a query's floor sensitivity."""
     if paths is None:
-        paths = sorted(_glob.glob(os.path.join(REPO, "BENCH_r*.json")))
-        if os.path.exists(DETAIL_PATH):
-            paths.append(DETAIL_PATH)
+        paths = [DETAIL_PATH]
     floors: dict[str, float] = {}
 
     def _take(queries: dict):

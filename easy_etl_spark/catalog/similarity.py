@@ -54,30 +54,19 @@ def knn_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("knn_lsh_bucketed")  # rows-only: approximate by construction
-def knn_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 5)
-    return similarity.lsh_bucketed_neighbors(emb, queries_df, k=10).select(
-        "query_id", "neighbor_id", "cosine", "rnk"
-    )
-
-
-@register("knn_ivf")  # rows-only: approximate by construction
-def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 5)
-    return similarity.ivf_neighbors(emb, queries_df, k=10, n_lists=8, n_probe=3).select(
-        "query_id", "neighbor_id", "cosine", "rnk"
-    )
-
-
-# Engine-portable ANN twins: quantize to BIGINT (floor(x*1e6 + 0.5)),
-# integer squared-L2 distances, md5-derived ±1 planes — every decision
-# the Spark side makes is an exact integer the oracle recomputes
-# bit-for-bit (the dedup_simhash_md5 pattern applied to similarity).
+# k-NN oracles: quantize to BIGINT (floor(x*1e6 + 0.5)), md5-derived
+# ±1 planes, argmin integer-d² cells — every candidate decision the
+# Spark side makes is an exact integer the oracle recomputes
+# bit-for-bit (the dedup_simhash_md5 pattern applied to similarity);
+# the re-rank is integer d² or brute_force_topk's rounded cosine.
 
 _QV = "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT))"
+
+#: the cosine re-rank's per-vector columns: the double vector and its norm
+_E = (
+    ", [CAST(x AS DOUBLE) FOR x IN embedding] AS e,"
+    " sqrt(list_sum([CAST(x AS DOUBLE)*CAST(x AS DOUBLE) FOR x IN embedding])) AS nrm"
+)
 
 
 _PAIR_D2 = "CAST(list_sum(list_zip({a}, {b}).apply(p -> (p[1]-p[2])*(p[1]-p[2]))) AS BIGINT)"
@@ -89,67 +78,88 @@ _SIGN = (
 )
 
 
-def _lsh_int_oracle(n_planes: int = 8) -> str:
-    """DuckDB twin of similarity.int_lsh_neighbors: per-plane integer
-    Rademacher projections via the (x, i) indexed lambda."""
-    bucket = "\n           + ".join(
-        f"CASE WHEN list_sum(list_transform(q, (x, i) -> x * {_SIGN.format(p=p)})) >= 0"
-        f" THEN {1 << p} ELSE 0 END"
-        for p in range(n_planes)
-    )
-    return f"""
-    WITH v AS (SELECT vec_id, {_QV} AS q FROM embeddings),
-    b AS (
-      SELECT vec_id, q,
-           {bucket} AS bucket
-      FROM v
-    ),
-    scored AS (
-      SELECT qs.vec_id AS query_id, c.vec_id AS neighbor_id,
-             {_PAIR_D2.format(a="qs.q", b="c.q")} AS d2
-      FROM (SELECT * FROM b WHERE vec_id < 5) qs
-      JOIN b c ON c.bucket = qs.bucket AND c.vec_id != qs.vec_id
-    )
-    SELECT query_id, neighbor_id, d2, rnk FROM (
+def _rerank(cosine: bool, c: str) -> tuple[str, str, str]:
+    """The k-NN oracles' shared re-rank of candidate pairs (qs, c):
+    (the columns a vector row carries past q, the score column of
+    `scored`, the ranked top-10 over `scored`), by integer d² or by
+    brute_force_topk's rounded cosine."""
+    if cosine:
+        score = f"round(list_sum(list_zip(qs.e, {c}.e).apply(p -> p[1]*p[2])) / (qs.nrm*{c}.nrm), 6)"
+        carry, col, order = ", e, nrm", "cosine", "cosine DESC, neighbor_id"
+    else:
+        carry, col, order = "", "d2", "d2, neighbor_id"
+        score = _PAIR_D2.format(a="qs.q", b=f"{c}.q")
+    return carry, f"{score} AS {col}", f"""
+    SELECT query_id, neighbor_id, {col}, rnk FROM (
       SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY d2, neighbor_id) AS rnk
+                                   ORDER BY {order}) AS rnk
       FROM scored
     ) WHERE rnk <= 10
     """
 
 
-def _ivf_int_oracle(n_lists: int = 8) -> str:
-    """DuckDB twin of similarity.int_ivf_neighbors: pinned lowest-id
-    seeds, argmin integer-d² assignment (tie → lowest cell)."""
+def _lsh_int_oracle(n_planes: int = 8, cosine: bool = False) -> str:
+    """DuckDB twin of similarity.int_lsh_neighbors (or, with cosine,
+    lsh_bucketed_neighbors): per-plane integer Rademacher projections
+    via the (x, i) indexed lambda."""
+    bucket = "\n           + ".join(
+        f"CASE WHEN list_sum(list_transform(q, (x, i) -> x * {_SIGN.format(p=p)})) >= 0"
+        f" THEN {1 << p} ELSE 0 END"
+        for p in range(n_planes)
+    )
+    carry, score, top10 = _rerank(cosine, "c")
     return f"""
-    WITH v AS (SELECT vec_id, {_QV} AS q FROM embeddings),
+    WITH v AS (SELECT vec_id, {_QV} AS q{_E if cosine else ""} FROM embeddings),
+    b AS (
+      SELECT vec_id, q{carry},
+           {bucket} AS bucket
+      FROM v
+    ),
+    scored AS (
+      SELECT qs.vec_id AS query_id, c.vec_id AS neighbor_id,
+             {score}
+      FROM (SELECT * FROM b WHERE vec_id < 5) qs
+      JOIN b c ON c.bucket = qs.bucket AND c.vec_id != qs.vec_id
+    ){top10}"""
+
+
+def _ivf_int_oracle(n_lists: int = 8, n_probe: int = 1, cosine: bool = False) -> str:
+    """DuckDB twin of similarity.int_ivf_neighbors (or, with cosine,
+    ivf_neighbors): pinned lowest-id seeds, argmin integer-d²
+    assignment (tie → lowest cell); a query probes its n_probe
+    nearest cells under the same tie rule."""
+    carry, score, top10 = _rerank(cosine, "a")
+    qs = "SELECT * FROM assign WHERE vec_id < 5"
+    if n_probe > 1:
+        qs = f"""
+        SELECT vec_id, q{carry}, c AS cell FROM (
+          SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d2, c) AS rn
+          FROM dist WHERE vec_id < 5
+        ) WHERE rn <= {n_probe}
+      """
+    return f"""
+    WITH v AS (SELECT vec_id, {_QV} AS q{_E if cosine else ""} FROM embeddings),
     cent AS (
       SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c, q AS cq
       FROM (SELECT vec_id, q FROM v ORDER BY vec_id LIMIT {n_lists})
     ),
     dist AS (
-      SELECT v.vec_id, v.q, cent.c,
+      SELECT v.vec_id, v.q{carry}, cent.c,
              {_PAIR_D2.format(a="v.q", b="cent.cq")} AS d2
       FROM v, cent
     ),
     assign AS (
-      SELECT vec_id, q, c AS cell FROM (
+      SELECT vec_id, q{carry}, c AS cell FROM (
         SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d2, c) AS rn
         FROM dist
       ) WHERE rn = 1
     ),
     scored AS (
       SELECT qs.vec_id AS query_id, a.vec_id AS neighbor_id,
-             {_PAIR_D2.format(a="qs.q", b="a.q")} AS d2
-      FROM (SELECT * FROM assign WHERE vec_id < 5) qs
+             {score}
+      FROM ({qs}) qs
       JOIN assign a ON a.cell = qs.cell AND a.vec_id != qs.vec_id
-    )
-    SELECT query_id, neighbor_id, d2, rnk FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY d2, neighbor_id) AS rnk
-      FROM scored
-    ) WHERE rnk <= 10
-    """
+    ){top10}"""
 
 
 def _lsh_multi_oracle(n_planes: int = 8, n_tables: int = 2) -> str:
@@ -180,19 +190,36 @@ def _lsh_multi_oracle(n_planes: int = 8, n_tables: int = 2) -> str:
              {_PAIR_D2.format(a="qs.q", b="c.q")} AS d2
       FROM (SELECT * FROM b WHERE vec_id < 5) qs
       JOIN b c ON ({any_match}) AND c.vec_id != qs.vec_id
+    ){_rerank(False, "c")[2]}"""
+
+
+@register("knn_lsh_bucketed", _lsh_int_oracle(cosine=True))
+def knn_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Approximate cosine neighbors (similarity.lsh_bucketed_neighbors):
+    knn_lsh_int's bucket candidates re-ranked by exact cosine."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries_df = emb.filter(F.col("vec_id") < 5)
+    return similarity.lsh_bucketed_neighbors(emb, queries_df, k=10).select(
+        "query_id", "neighbor_id", "cosine", "rnk"
     )
-    SELECT query_id, neighbor_id, d2, rnk FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY d2, neighbor_id) AS rnk
-      FROM scored
-    ) WHERE rnk <= 10
-    """
+
+
+@register("knn_ivf", _ivf_int_oracle(n_probe=3, cosine=True))
+def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Approximate cosine neighbors (similarity.ivf_neighbors): the
+    query's 3 nearest of knn_ivf_int's 8 cells, re-ranked by exact
+    cosine."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries_df = emb.filter(F.col("vec_id") < 5)
+    return similarity.ivf_neighbors(emb, queries_df, k=10, n_lists=8, n_probe=3).select(
+        "query_id", "neighbor_id", "cosine", "rnk"
+    )
 
 
 @register("knn_lsh_int", _lsh_int_oracle())
 def knn_lsh_int(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-checked LSH neighbors (similarity.int_lsh_neighbors):
-    the value-hash-verified twin of knn_lsh_bucketed."""
+    """LSH neighbors by integer d² (similarity.int_lsh_neighbors):
+    knn_lsh_bucketed's candidates under the integer re-rank."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 5)
     return similarity.int_lsh_neighbors(emb, queries_df, k=10).select(
@@ -215,8 +242,8 @@ def knn_lsh_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("knn_ivf_int", _ivf_int_oracle())
 def knn_ivf_int(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-checked IVF neighbors (similarity.int_ivf_neighbors):
-    the value-hash-verified twin of knn_ivf."""
+    """IVF neighbors by integer d² (similarity.int_ivf_neighbors):
+    knn_ivf's cells, probing 1 cell, under the integer re-rank."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 5)
     return similarity.int_ivf_neighbors(emb, queries_df, k=10).select(

@@ -43,13 +43,13 @@ _ASOF_OPS = {">=", ">", "<=", "<"}
 # call both wastes the banding's two bounded-metadata jobs
 # (localCheckpoint + per-partition-count collect, ~0.3 s fixed
 # overhead each) and mismatches how a conformed dimension deploys.
-# The key mirrors similarity._corpus_identity: backing file list AND
-# semantic plan hash (files alone collide across filters/projections
-# of the same parquet; the hash alone collides across in-place
-# rewrites). Values hold a pinned (localCheckpoint) frame whose blocks
-# survive release_caches() and are GC-reclaimed when evicted here —
-# dim-sized storage, so clear_surrogate_cache() exists for tests and
-# for re-keying after a dimension rewrite in place.
+# The key holds both the backing file list AND the semantic plan hash
+# (files alone collide across filters/projections of the same parquet;
+# the hash alone collides across in-place rewrites). Values hold a
+# pinned (localCheckpoint) frame whose blocks survive release_caches()
+# and are GC-reclaimed when evicted here — dim-sized storage, so
+# clear_surrogate_cache() exists for tests and for re-keying after a
+# dimension rewrite in place.
 _SURROGATE_CACHE: dict[tuple, DataFrame] = {}
 
 

@@ -48,9 +48,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from . import flaccodec, jpegcodec
-# by name, not as flaccodec.*: a shipped closure then pickles only these
-# functions' call graph instead of the whole flaccodec module
+# by name, not as flaccodec.* / jpegcodec.*: a shipped closure then
+# pickles only these functions' call graph instead of the whole module
 from .flaccodec import decode_flac, encode_flac
+from .jpegcodec import decode_jpeg, encode_jpeg
 
 #: output schema of featurize(): metadata + fixed-width feature vector
 FEATURE_SCHEMA = (
@@ -438,7 +439,7 @@ def decode_image(data: bytes):
     if data[:8] == _PNG_SIG:
         return decode_png(data)
     if data[:2] == b"\xff\xd8":
-        return jpegcodec.decode_jpeg(data)
+        return decode_jpeg(data)
     raise NotImplementedError(
         "unrecognized image format; PPM (P6), 24-bit BMP, 8-bit PNG and "
         "baseline JPEG decode natively"
@@ -514,7 +515,7 @@ def synth_jpeg_images(docs: DataFrame, max_docs: int = 100) -> DataFrame:
         bidx = np.arange(bw * bh, dtype="int64").reshape(bh, bw)  # row-major
         blocks = 2 * ((doc_id * 13 + bidx * 29) % 128)
         img = np.repeat(np.repeat(blocks, 8, axis=0), 8, axis=1)
-        return jpegcodec.encode_jpeg(img.astype("uint8"))
+        return encode_jpeg(img.astype("uint8"))
 
     return _synth(docs, max_docs, blob_of)
 

@@ -1,18 +1,33 @@
 """Similarity search over embedding columns (`array<float>`).
 
-  - brute_force_topk: exact cosine top-k, query-set × corpus join +
-    ranked window. Baseline and verifier.
-  - lsh_bucketed_neighbors: random-hyperplane LSH (signed projections
-    onto deterministic pseudo-random planes) → candidates share a
-    bucket → exact re-rank within bucket. The 100 TB path: the corpus
-    is hashed once (linear scan), search cost ∝ bucket size.
+Every k-NN operator here is one shape (`_knn`): a candidate generator,
+then one shared exact re-rank and per-query top-k window. There are
+three kinds of candidate:
 
-Planes are generated from a seeded hash (no RNG state, reproducible
-across runs/executors). Dot products are double-precision Column
-algebra via zip_with/aggregate — JVM-side, no UDFs.
+  - all pairs: brute_force_topk, the exact baseline and verifier;
+  - an LSH bucket: the sign bits of md5-derived ±1 (Rademacher)
+    projections of the quantized vector, in one or more independent
+    tables (lsh_bucketed_neighbors, int_lsh_neighbors,
+    int_lsh_multi_neighbors). The corpus is hashed in one linear scan;
+    search cost per query is the size of its bucket;
+  - an IVF cell: the argmin integer-d² cell among pinned lowest-id
+    seed vectors; a query probes its n_probe nearest cells
+    (ivf_neighbors, int_ivf_neighbors). The cells are a column, so at
+    scale they become partition keys and probing is partition pruning.
+
+The float operators re-rank by exact cosine rounded to 6 digits, the
+int_* twins by exact integer squared-L2 over the quantized vectors;
+ties go to the lower neighbor id. Every candidate decision is integer
+arithmetic, so a DuckDB oracle replays each operator bit-for-bit. The
+vector math is Column algebra via zip_with/aggregate (JVM-side, no
+UDFs): the corpus streams past the broadcast query side, and the only
+shuffle is the top-k window.
 """
 
 from __future__ import annotations
+
+import operator
+from functools import partial, reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -29,6 +44,133 @@ def _normed(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     )
 
 
+def _top_k(scored: DataFrame, k: int, *order) -> DataFrame:
+    """The k first rows of each query_id in `order`, numbered in `rnk`.
+    WindowGroupLimit pushes the limit down to a partial top-k before
+    the exchange."""
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+
+
+def _side(df: DataFrame, id_col: str, vec_col: str, cosine: bool, keyed: bool) -> DataFrame:
+    """One side of the k-NN join: (__id, __q), the quantized vector, for
+    the integer re-rank; (__id, __v, __n), the double vector and its
+    norm, for cosine, plus __q when the candidates are keyed on it."""
+    if not cosine:
+        return df.select(F.col(id_col).alias("__id"), qvec(F.col(vec_col)).alias("__q"))
+    side = _normed(df, id_col, vec_col)
+    return side.withColumn("__q", qvec(F.col("__v"))) if keyed else side
+
+
+def _knn(
+    emb: DataFrame,
+    queries: DataFrame,
+    k: int,
+    cosine: bool,
+    id_col: str,
+    vec_col: str,
+    keys: list | tuple = (),
+) -> DataFrame:
+    """Candidates, then the shared re-rank. With no `keys` every
+    (query, corpus) pair except self is a candidate. Otherwise a pair
+    is a candidate when it shares a key in ANY of `keys`, each a
+    (column, corpus key, query key) triple whose keys are functions of
+    the quantized vector; a query key may explode to several values
+    (IVF probes). Output: query_id, neighbor_id, then cosine or d2, and
+    rnk."""
+    corpus = _side(emb, id_col, vec_col, cosine, bool(keys))
+    q = _side(queries, id_col, vec_col, cosine, bool(keys))
+    # query-side names: __id → __qid, __q → __qq, __v → __qv, __n → __qn
+    q = q.select(*[F.col(c).alias("__q" + c[2:]) for c in q.columns])
+    not_self = F.col("__qid") != F.col("__id")
+    if not keys:
+        pairs = corpus.join(F.broadcast(q), not_self)
+    else:
+        pairs = reduce(DataFrame.unionByName, [
+            corpus.withColumn(name, of_corpus(F.col("__q")))
+            .join(F.broadcast(q.withColumn(name, of_query(F.col("__qq")))), on=name)
+            .filter(not_self)
+            for name, of_corpus, of_query in keys
+        ])
+        if len(keys) > 1:
+            # a pair found by several tables must rank once: distinct on
+            # the pair key (carrying the vectors) before the re-rank
+            pairs = pairs.select(
+                "__qid", "__id", *q.columns[1:], *corpus.columns[1:]
+            ).dropDuplicates(["__qid", "__id"])
+    if cosine:
+        cos = _dot(F.col("__qv"), F.col("__v")) / (F.col("__qn") * F.col("__n"))
+        score, order = F.round(cos, 6).alias("cosine"), (F.col("cosine").desc(), "neighbor_id")
+    else:
+        score, order = _d2_int(F.col("__qq"), F.col("__q")).alias("d2"), ("d2", "neighbor_id")
+    scored = pairs.select(
+        F.col("__qid").alias("query_id"), F.col("__id").alias("neighbor_id"), score
+    )
+    return _top_k(scored, k, *order)
+
+
+def _lsh_keys(n_planes: int, n_tables: int, dim: int) -> list:
+    """One bucket key per LSH table. Bit p of table t's bucket is
+    [Σ_d s(g,d)·q_d ≥ 0], with g = t·n_planes + p the global plane
+    index (fresh signs per table) and s = rademacher_sign ∈ {±1}.
+    The sums are exact integers, so every engine agrees on every
+    bucket; the signs are constants folded into the plan."""
+
+    def bucket(vec: Column, planes: list) -> Column:
+        bits = []
+        for p, plane in enumerate(planes):
+            proj = F.aggregate(
+                F.zip_with(vec, plane, lambda x, s: x * s),
+                F.lit(0).cast("long"),
+                lambda acc, x: acc + x,
+            )
+            bits.append(F.when(proj >= 0, F.lit(1 << p)).otherwise(F.lit(0)))
+        return reduce(operator.add, bits).cast("long")
+
+    keys = []
+    for t in range(n_tables):
+        planes = [
+            F.array(*[F.lit(rademacher_sign(t * n_planes + p, d)) for d in range(1, dim + 1)])
+            for p in range(n_planes)
+        ]
+        of = partial(bucket, planes=planes)
+        keys.append(("__b", of, of))
+    return keys
+
+
+def _ivf_keys(emb: DataFrame, n_lists: int, n_probe: int, id_col: str, vec_col: str) -> list:
+    """The IVF cell key with pinned seeds: the centroids are the
+    n_lists lowest-id quantized vectors (a bounded n_lists-row
+    collect), a corpus vector's cell is its argmin integer-d² centroid
+    (tie → lowest cell), and a query probes its n_probe nearest cells
+    (argmin-n, the classic fix for the recall cliff at cell
+    boundaries). Each corpus vector lives in exactly one cell and a
+    query's probed cells are distinct, so no pair can repeat."""
+    seeds = (
+        emb.select(F.col(id_col).alias("__id"), qvec(F.col(vec_col)).alias("__q"))
+        .orderBy("__id").limit(n_lists).collect()
+    )
+    cents = [F.array(*[F.lit(int(c)) for c in r["__q"]]) for r in seeds]
+
+    def dists(vec: Column) -> Column:
+        return F.array(*[
+            F.struct(_d2_int(vec, cent).alias("d2"), F.lit(i).alias("c"))
+            for i, cent in enumerate(cents)
+        ])
+
+    def cell(vec: Column) -> Column:
+        return F.array_min(dists(vec))["c"]
+
+    def probes(vec: Column) -> Column:
+        # the struct array sorts by (d2, c): lexicographic struct order
+        # IS the tie rule of the single-cell path
+        return F.explode(
+            F.transform(F.slice(F.array_sort(dists(vec)), 1, n_probe), lambda s: s["c"])
+        )
+
+    return [("__cell", cell, cell if n_probe <= 1 else probes)]
+
+
 def brute_force_topk(
     emb: DataFrame,
     queries: DataFrame,
@@ -38,328 +180,8 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector (excluding
     self). queries is a (id, vec) frame — broadcast against the corpus,
-    so the corpus is scanned once with no shuffle; the only shuffle is
-    the per-query top-k window, which WindowGroupLimit pushes down to
-    partial top-k before the exchange."""
-    corpus = _normed(emb, id_col, vec_col)
-    q = _normed(queries, id_col, vec_col).select(
-        F.col("__id").alias("__qid"), F.col("__v").alias("__qv"), F.col("__n").alias("__qn")
-    )
-    scored = (
-        corpus.join(F.broadcast(q), F.col("__qid") != F.col("__id"))
-        .select(
-            F.col("__qid").alias("query_id"),
-            F.col("__id").alias("neighbor_id"),
-            F.round(_dot(F.col("__qv"), F.col("__v")) / (F.col("__qn") * F.col("__n")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
-
-
-def hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
-    """Deterministic pseudo-random hyperplanes: component (p, d) =
-    centered hash in [-1, 1). Stateless & reproducible on every
-    executor."""
-    import hashlib
-
-    planes = []
-    for p in range(n_planes):
-        row = []
-        for d in range(dim):
-            h = int.from_bytes(hashlib.md5(f"{p}:{d}".encode()).digest()[:8], "big")
-            row.append((h % 2_000_001) / 1_000_000.0 - 1.0)
-        planes.append(row)
-    return planes
-
-
-def bucket_ids(vec: Column, planes: list[list[float]]) -> Column:
-    """Pack sign(v·plane_p) bits into one bucket id."""
-    bits = [
-        F.when(
-            _dot(vec, F.array(*[F.lit(c) for c in plane])) >= 0, F.lit(1 << p)
-        ).otherwise(F.lit(0))
-        for p, plane in enumerate(planes)
-    ]
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out.cast("long")
-
-
-def kmeans_centroids(
-    emb: DataFrame,
-    n_lists: int = 8,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample_size: int = 100_000,
-) -> "list[list[float]]":
-    """Deterministic Lloyd k-means trained on a bounded sample, the
-    standard IVF training recipe: take the sample_size hash-smallest
-    vectors (a uniform reproducible sample — no RNG, no prior count),
-    run Lloyd locally in numpy, return the n_lists × dim centroid
-    table. ONE Spark job regardless of corpus size or iters — the
-    hash-order limit compiles to TakeOrdered (distributed per-partition
-    top-k, no full sort, no separate count scan); the full corpus is
-    only ever touched by the distributed *assignment* pass in
-    ivf_neighbors. Centroid quality needs sample representativeness,
-    not the full corpus: 100k vectors bound the centroid error at any
-    corpus scale."""
-    import numpy as np
-
-    rows = (
-        emb.select(
-            F.col(id_col).alias("__id"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__v"),
-        )
-        .orderBy(F.xxhash64(F.col("__id")), F.col("__id"))
-        .limit(sample_size)
-        .collect()
-    )
-    rows.sort(key=lambda r: r["__id"])  # stable order → deterministic seeds
-    mat = np.array([r["__v"] for r in rows], dtype="float64")
-    centroids = mat[:n_lists].copy()  # lowest-id seeds, reproducible
-    for _ in range(iters):
-        d = ((mat[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
-        assign = d.argmin(axis=1)
-        for c in range(len(centroids)):
-            members = mat[assign == c]
-            if len(members):
-                centroids[c] = members.mean(axis=0)
-    return centroids.tolist()
-
-
-def refine_centroids(
-    emb: DataFrame,
-    centroids: "list[list[float]]",
-    iters: int = 1,
-    vec_col: str = "embedding",
-) -> "list[list[float]]":
-    """Distributed Lloyd refinement over the FULL corpus: each
-    iteration is ONE mapInPandas pass emitting per-(partition, cell)
-    partial sums — numPartitions x n_lists rows of dim doubles, bounded
-    METADATA that never grows with corpus rows — reduced on the driver
-    and rebroadcast. This removes the driver-memory term of the
-    sample-based seeding (kmeans_centroids collects a 100k-vector
-    sample; here nothing proportional to sample x dim ever lands on the
-    driver) while letting every corpus vector pull its centroid.
-
-    Determinism: partial sums are computed per physical partition and
-    reduced in sorted (cell, partition) order, so float accumulation
-    order is repeatable — FOR A FIXED file set AND a fixed input-split
-    configuration (spark.sql.files.maxPartitionBytes / default
-    parallelism). Changing the split config re-cuts the physical
-    partitions, which reorders float accumulation and can perturb
-    centroids in the last ulps; within one configuration every run is
-    identical."""
-    import numpy as np
-
-    spark = emb.sparkSession
-    v = emb.select(
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__v")
-    )
-    cents = np.asarray(centroids, dtype="float64")
-    n_lists, dim = cents.shape
-    for _ in range(iters):
-        b_c = spark.sparkContext.broadcast(cents)
-
-        def partials(batches):
-            import pandas as pd
-            from pyspark import TaskContext
-
-            c = b_c.value
-            kk, dd = c.shape
-            s = np.zeros((kk, dd))
-            n = np.zeros(kk, dtype="int64")
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                m = np.stack(pdf["__v"].to_numpy())
-                d = ((m[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-                a = d.argmin(axis=1)
-                for cell in range(kk):
-                    mask = a == cell
-                    if mask.any():
-                        s[cell] += m[mask].sum(axis=0)
-                        n[cell] += int(mask.sum())
-            pid = TaskContext.get().partitionId()
-            yield pd.DataFrame(
-                {"pid": pid, "cell": range(kk), "n": n, "s": list(s)}
-            )
-
-        try:
-            rows = v.mapInPandas(
-                partials, "pid int, cell int, n bigint, s array<double>"
-            ).collect()
-        finally:
-            # one broadcast per iteration: free the executor-side copy
-            # before the next one lands, or iters iterations hold iters
-            # copies of the centroid table in executor memory
-            b_c.unpersist()
-        s = np.zeros_like(cents)
-        n = np.zeros(n_lists, dtype="int64")
-        for r in sorted(rows, key=lambda r: (r["cell"], r["pid"])):
-            s[r["cell"]] += np.asarray(r["s"])
-            n[r["cell"]] += r["n"]
-        nz = n > 0
-        nxt = cents.copy()
-        nxt[nz] = s[nz] / n[nz][:, None]  # empty cells keep their seed
-        cents = nxt
-    return cents.tolist()
-
-
-# Trained-centroid cache: (corpus identity, training params) -> the
-# n_lists x dim centroid table. An IVF index is TRAINED ONCE and then
-# SERVES many queries — retraining per ivf_neighbors call would both
-# waste a full-corpus Lloyd pass per invocation and mismatch how a real
-# index deploys. The key is the corpus's input file list (stable for a
-# parquet-backed frame) or, for in-memory frames, Spark's semantic plan
-# hash; values are n_lists x dim floats — bounded metadata, never
-# corpus-sized, so the cache needs no eviction (clear_centroid_cache()
-# exists for tests and for retraining after a corpus rewrite in place).
-_CENTROID_CACHE: dict[tuple, "list[list[float]]"] = {}
-
-
-def clear_centroid_cache() -> int:
-    n = len(_CENTROID_CACHE)
-    _CENTROID_CACHE.clear()
-    return n
-
-
-def _corpus_identity(emb: DataFrame, vec_col: str) -> tuple:
-    # BOTH the backing file list AND the semantic plan hash are in the
-    # key. Files alone are not enough: inputFiles() ignores filters /
-    # limits / projections, so emb.filter(...) over the same parquet
-    # would collide with the full corpus and silently serve the wrong
-    # centroids. The plan hash alone is not enough either: two scans
-    # of the same path have equal hashes even after the files were
-    # rewritten in place. Residual risk is only semanticHash collisions
-    # between genuinely different plans — a recall concern at worst
-    # (ANN is approximate by contract), never a correctness one.
-    files = tuple(sorted(emb.inputFiles()))
-    return ("corpus", files, emb.semanticHash(), vec_col)
-
-
-def trained_centroids(
-    emb: DataFrame,
-    n_lists: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample_size: int = 100_000,
-    refine_iters: int = 1,
-) -> "list[list[float]]":
-    """Sample-seeded + distributed-Lloyd-refined centroids, trained
-    ONCE per (corpus, params) and served from the module cache on every
-    later call — the deploy posture of a real IVF index (train job,
-    then query serving against frozen centroids)."""
-    key = _corpus_identity(emb, vec_col) + (n_lists, sample_size, refine_iters, id_col)
-    hit = _CENTROID_CACHE.get(key)
-    if hit is None:
-        hit = kmeans_centroids(
-            emb, n_lists=n_lists, id_col=id_col, vec_col=vec_col, sample_size=sample_size
-        )
-        if refine_iters > 0:
-            hit = refine_centroids(emb, hit, iters=refine_iters, vec_col=vec_col)
-        _CENTROID_CACHE[key] = hit
-    # deep-copy out: a caller mutating the returned table (normalizing,
-    # perturbing) must not poison the cached copy for later calls
-    return [row[:] for row in hit]
-
-
-def ivf_neighbors(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_lists: int = 8,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    refine_iters: int = 1,
-) -> DataFrame:
-    """IVF approximate nearest neighbors: coarse-quantize the corpus
-    into n_lists k-means cells, probe only the n_probe cells nearest
-    each query, exact cosine re-rank within them. Search cost per query
-    drops from |corpus| to n_probe/n_lists of it; the inverted lists
-    are just a `list_id` column, so at 100 TB they become partition
-    keys and probing is partition pruning.
-
-    Centroids: sample-seeded (bounded 100k TakeOrdered) then refined by
-    refine_iters distributed Lloyd passes over the full corpus
-    (refine_centroids) — no driver-memory term scales with the corpus
-    or the sample once seeding is done. Training runs ONCE per
-    (corpus, params) and is served from the trained_centroids cache on
-    repeat calls, matching how an IVF index actually deploys."""
-    import numpy as np
-
-    centroids = np.array(
-        trained_centroids(
-            emb, n_lists=n_lists, id_col=id_col, vec_col=vec_col, refine_iters=refine_iters
-        )
-    )
-    spark = emb.sparkSession
-    b_c = spark.sparkContext.broadcast(centroids)
-
-    def assign_one(batches):
-        import pandas as pd
-
-        c = b_c.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            m = np.stack(pdf["__v"].to_numpy())
-            d = ((m[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-            yield pd.DataFrame({"__id": pdf["__id"], "__v": pdf["__v"], "list_id": d.argmin(axis=1)})
-
-    def assign_probes(batches):
-        import pandas as pd
-
-        c = b_c.value
-        n = len(c)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            m = np.stack(pdf["__v"].to_numpy())
-            d = ((m[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-            probes = d.argsort(axis=1)[:, : min(n_probe, n)]
-            out = pdf.loc[pdf.index.repeat(probes.shape[1])].reset_index(drop=True)
-            out["list_id"] = probes.reshape(-1)
-            yield out[["__id", "__v", "list_id"]]
-
-    v = emb.select(
-        F.col(id_col).alias("__id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__v"),
-    )
-    corpus = v.mapInPandas(assign_one, "__id bigint, __v array<double>, list_id int").withColumn(
-        "__n", F.sqrt(_dot(F.col("__v"), F.col("__v")))
-    )
-    q = (
-        queries.select(
-            F.col(id_col).alias("__qid"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__v"),
-        )
-        .withColumnRenamed("__qid", "__id")
-        .mapInPandas(assign_probes, "__id bigint, __v array<double>, list_id int")
-        .select(
-            F.col("__id").alias("__qid"), F.col("__v").alias("__qv"), "list_id"
-        )
-        .withColumn("__qn", F.sqrt(_dot(F.col("__qv"), F.col("__qv"))))
-    )
-    scored = (
-        corpus.join(F.broadcast(q), on="list_id")
-        .filter(F.col("__qid") != F.col("__id"))
-        .select(
-            F.col("__qid").alias("query_id"),
-            F.col("__id").alias("neighbor_id"),
-            F.round(_dot(F.col("__qv"), F.col("__v")) / (F.col("__qn") * F.col("__n")), 6).alias("cosine"),
-        )
-        # no dedup needed: each corpus vector lives in exactly ONE list
-        # and a query's probed lists are distinct argsort indices, so a
-        # (query, neighbor) pair can only arise once — a distinct here
-        # would be a full extra shuffle of the scored pairs
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+    so the corpus is scanned once with no shuffle."""
+    return _knn(emb, queries, k, True, id_col, vec_col)
 
 
 def lsh_bucketed_neighbors(
@@ -371,31 +193,30 @@ def lsh_bucketed_neighbors(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Approximate top-k: corpus and queries hashed into 2^n_planes
-    sign buckets; exact cosine re-rank only within the query's bucket.
-    Recall < 1 by construction (approximate); cost per query drops from
-    |corpus| to |bucket|."""
-    planes = hyperplanes(dim, n_planes)
-    corpus = _normed(emb, id_col, vec_col).withColumn("__b", bucket_ids(F.col("__v"), planes))
-    q = (
-        _normed(queries, id_col, vec_col)
-        .withColumn("__b", bucket_ids(F.col("__v"), planes))
-        .select(
-            F.col("__id").alias("__qid"), F.col("__v").alias("__qv"),
-            F.col("__n").alias("__qn"), "__b",
-        )
-    )
-    scored = (
-        corpus.join(F.broadcast(q), on="__b")
-        .filter(F.col("__qid") != F.col("__id"))
-        .select(
-            F.col("__qid").alias("query_id"),
-            F.col("__id").alias("neighbor_id"),
-            F.round(_dot(F.col("__qv"), F.col("__v")) / (F.col("__qn") * F.col("__n")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+    """Approximate top-k cosine: candidates share the query's bucket
+    among 2^n_planes integer LSH buckets (int_lsh_neighbors' buckets),
+    re-ranked by brute_force_topk's exact cosine. Recall < 1 by
+    construction; cost per query drops from |corpus| to |bucket|."""
+    return _knn(emb, queries, k, True, id_col, vec_col, _lsh_keys(n_planes, 1, dim))
+
+
+def ivf_neighbors(
+    emb: DataFrame,
+    queries: DataFrame,
+    k: int = 10,
+    n_lists: int = 8,
+    n_probe: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """IVF approximate top-k cosine: candidates lie in the query's
+    n_probe nearest of n_lists pinned-seed cells (int_ivf_neighbors'
+    cells), re-ranked by brute_force_topk's exact cosine. Search cost
+    per query drops from |corpus| to about n_probe/n_lists of it;
+    n_probe = n_lists is exhaustive and returns brute_force_topk's
+    rows."""
+    keys = _ivf_keys(emb, n_lists, n_probe, id_col, vec_col)
+    return _knn(emb, queries, k, True, id_col, vec_col, keys)
 
 
 def quantize_int8(
@@ -426,16 +247,14 @@ def quantize_int8(
 
 
 # ----------------------------------------------------------------------
-# Engine-portable integer-exact twins (oracle-checked ANN)
+# Integer-exact twins
 # ----------------------------------------------------------------------
 #
-# The xxhash64/double-precision variants above are the production path;
-# these twins replay the SAME bucketing/assignment/rank plumbing in
-# arithmetic a SQL oracle reproduces bit-for-bit: components quantize
-# to BIGINT (floor(x*1e6 + 0.5)), projections use md5-derived ±1
-# Rademacher planes, and distances are integer squared-L2 — every sum
-# is an exact integer, so aggregation order cannot perturb the result
-# on any engine. Same pattern as dedup.md5_simhash32.
+# The same candidates as the cosine operators above, re-ranked with no
+# floating point at all: components quantize to BIGINT
+# (floor(x*1e6 + 0.5)) and distances are integer squared-L2, so every
+# sum is an exact integer and aggregation order cannot perturb the
+# result on any engine. Same pattern as dedup.md5_simhash32.
 
 #: Fixed-point scale for portable quantization (6 decimal digits).
 Q_SCALE = 1_000_000
@@ -469,6 +288,8 @@ def rademacher_sign(p: int, d: int) -> int:
     return 1 if h % 2 == 1 else -1
 
 
+
+
 def int_lsh_neighbors(
     emb: DataFrame,
     queries: DataFrame,
@@ -478,49 +299,9 @@ def int_lsh_neighbors(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """LSH bucketed top-k with integer Rademacher projections: bucket
-    bit p = [Σ_d s(p,d)·q_d ≥ 0] with s(p,d) ∈ {±1} md5-derived —
-    exact integer sums, so corpus and oracle agree on every bucket.
-    Candidates share a bucket; rank is (integer d², neighbor_id).
-    Same 100 TB shape as lsh_bucketed_neighbors: one linear hashing
-    pass over the corpus, search cost ∝ bucket size; the signs are
-    Python-computed constants folded into the plan (no runtime
-    hashing, JVM codegen end-to-end)."""
-    signs = [[rademacher_sign(p, d) for d in range(1, dim + 1)] for p in range(n_planes)]
-
-    def bucket(vec: Column) -> Column:
-        bits = []
-        for p in range(n_planes):
-            plane = F.array(*[F.lit(s) for s in signs[p]])
-            proj = F.aggregate(
-                F.zip_with(vec, plane, lambda x, s: x * s),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            )
-            bits.append(F.when(proj >= 0, F.lit(1 << p)).otherwise(F.lit(0)))
-        out = bits[0]
-        for b in bits[1:]:
-            out = out + b
-        return out.cast("long")
-
-    corpus = emb.select(
-        F.col(id_col).alias("__id"), qvec(F.col(vec_col)).alias("__q")
-    ).withColumn("__b", bucket(F.col("__q")))
-    q = (
-        queries.select(F.col(id_col).alias("__qid"), qvec(F.col(vec_col)).alias("__qq"))
-        .withColumn("__b", bucket(F.col("__qq")))
-    )
-    scored = (
-        corpus.join(F.broadcast(q), on="__b")
-        .filter(F.col("__qid") != F.col("__id"))
-        .select(
-            F.col("__qid").alias("query_id"),
-            F.col("__id").alias("neighbor_id"),
-            _d2_int(F.col("__qq"), F.col("__q")).alias("d2"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+    """LSH bucketed top-k by (integer d², neighbor_id): the one-table
+    int_lsh_multi_neighbors."""
+    return int_lsh_multi_neighbors(emb, queries, k, n_planes, 1, dim, id_col, vec_col)
 
 
 def int_lsh_multi_neighbors(
@@ -533,62 +314,15 @@ def int_lsh_multi_neighbors(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Multi-table LSH: n_tables INDEPENDENT plane sets (table t uses
-    global plane indices t*n_planes..), a candidate matches if it
-    shares a bucket in ANY table — the standard recall amplifier
-    (miss probability multiplies across tables: (1-p^b)^L). Candidates
-    are unioned across tables and de-duplicated BEFORE the exact-d²
-    re-rank, so recall@k is monotonically non-decreasing in n_tables
-    by construction. Cost: n_tables hash maps over the corpus + one
-    distinct on (query, neighbor) — still Σ bucket², never n².
-    Integer Rademacher projections keep every bucket decision exactly
-    replayable in SQL (the int_lsh_neighbors contract)."""
-    corpus = emb.select(
-        F.col(id_col).alias("__id"), qvec(F.col(vec_col)).alias("__q")
-    )
-    q = queries.select(
-        F.col(id_col).alias("__qid"), qvec(F.col(vec_col)).alias("__qq")
-    )
-
-    def bucket(vec: Column, table: int) -> Column:
-        bits = []
-        for p in range(n_planes):
-            gp = table * n_planes + p  # global plane index => fresh signs
-            plane = F.array(
-                *[F.lit(rademacher_sign(gp, d)) for d in range(1, dim + 1)]
-            )
-            proj = F.aggregate(
-                F.zip_with(vec, plane, lambda x, s: x * s),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            )
-            bits.append(F.when(proj >= 0, F.lit(1 << p)).otherwise(F.lit(0)))
-        out = bits[0]
-        for b in bits[1:]:
-            out = out + b
-        return out.cast("long")
-
-    cands = None
-    for t in range(n_tables):
-        c_t = corpus.withColumn("__b", bucket(F.col("__q"), t))
-        q_t = q.withColumn("__b", bucket(F.col("__qq"), t))
-        pairs_t = c_t.join(F.broadcast(q_t), on="__b").filter(
-            F.col("__qid") != F.col("__id")
-        )
-        cands = pairs_t if cands is None else cands.unionByName(pairs_t)
-    scored = (
-        # a pair found by several tables must rank once: distinct on the
-        # pair key (carrying the vectors) before the re-rank
-        cands.select("__qid", "__id", "__qq", "__q")
-        .dropDuplicates(["__qid", "__id"])
-        .select(
-            F.col("__qid").alias("query_id"),
-            F.col("__id").alias("neighbor_id"),
-            _d2_int(F.col("__qq"), F.col("__q")).alias("d2"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+    """Multi-table LSH: n_tables INDEPENDENT plane sets, a candidate
+    matches if it shares a bucket in ANY table — the standard recall
+    amplifier (miss probability multiplies across tables: (1-p^b)^L).
+    Candidates are unioned across tables and de-duplicated BEFORE the
+    exact-d² re-rank, so recall@k is monotonically non-decreasing in
+    n_tables by construction. Cost: n_tables hash maps over the corpus
+    + one distinct on (query, neighbor) — still Σ bucket², never n²."""
+    keys = _lsh_keys(n_planes, n_tables, dim)
+    return _knn(emb, queries, k, False, id_col, vec_col, keys)
 
 
 def int_ivf_neighbors(
@@ -600,65 +334,12 @@ def int_ivf_neighbors(
     vec_col: str = "embedding",
     n_probe: int = 1,
 ) -> DataFrame:
-    """IVF with pinned seeds: centroids are the n_lists lowest-id
-    vectors (quantized), every vector assigns to the argmin integer-d²
-    centroid (tie → lowest cell id), queries probe their n_probe
-    NEAREST cells (argmin-n — the classic fix for the recall cliff at
-    cell boundaries), and ranking is (integer d², neighbor_id) — the
-    full coarse-quantize / probe / re-rank plumbing of ivf_neighbors
-    with every decision exactly replayable in SQL. The centroid fetch
-    is a bounded n_lists-row collect (8 rows), the assignment is pure
-    Column algebra folded into one map pass, and the probe join
-    broadcasts the (query × n_probe)-row side — no extra shuffle vs
-    the production kmeans path. A (query, neighbor) pair can only
-    arise once: each corpus vector lives in exactly ONE cell and a
-    query's probed cells are distinct."""
-    corpus = emb.select(F.col(id_col).alias("__id"), qvec(F.col(vec_col)).alias("__q"))
-    seeds = corpus.orderBy("__id").limit(n_lists).collect()
-    cents = [list(r["__q"]) for r in seeds]
-
-    def dists(vec: Column) -> Column:
-        alts = [
-            F.struct(
-                _d2_int(vec, F.array(*[F.lit(int(c)) for c in cent])).alias("d2"),
-                F.lit(i).alias("c"),
-            )
-            for i, cent in enumerate(cents)
-        ]
-        return F.array(*alts)
-
-    def cell(vec: Column) -> Column:
-        return F.array_min(dists(vec))["c"]
-
-    assigned = corpus.withColumn("__cell", cell(F.col("__q")))
-    q = queries.select(
-        F.col(id_col).alias("__qid"), qvec(F.col(vec_col)).alias("__qq")
-    )
-    if n_probe <= 1:
-        q = q.withColumn("__cell", cell(F.col("__qq")))
-    else:
-        # argmin-n: struct array sorts by (d2, c) — lexicographic
-        # struct ordering IS the tie rule the single-cell path uses
-        q = q.withColumn(
-            "__cell",
-            F.explode(
-                F.transform(
-                    F.slice(F.array_sort(dists(F.col("__qq"))), 1, n_probe),
-                    lambda s: s["c"],
-                )
-            ),
-        )
-    scored = (
-        assigned.join(F.broadcast(q), on="__cell")
-        .filter(F.col("__qid") != F.col("__id"))
-        .select(
-            F.col("__qid").alias("query_id"),
-            F.col("__id").alias("neighbor_id"),
-            _d2_int(F.col("__qq"), F.col("__q")).alias("d2"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+    """IVF top-k by (integer d², neighbor_id) over ivf_neighbors'
+    pinned-seed cells. The assignment is pure Column algebra folded
+    into one map pass, and the probe join broadcasts the
+    (query × n_probe)-row side."""
+    keys = _ivf_keys(emb, n_lists, n_probe, id_col, vec_col)
+    return _knn(emb, queries, k, False, id_col, vec_col, keys)
 
 
 def hard_negatives(
@@ -695,10 +376,7 @@ def hard_negatives(
             _dot(F.col("__qv"), F.col("__v")) / (F.col("__qn") * F.col("__n")), 6
         ).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("negative_id")
-    )
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+    return _top_k(scored, k, F.col("cosine").desc(), "negative_id")
 
 
 MMR_SCHEMA = (
@@ -1217,8 +895,7 @@ def int_pq_neighbors(
             adc.alias("adc_d2"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy("adc_d2", "neighbor_id")
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+    return _top_k(scored, k, "adc_d2", "neighbor_id")
 
 
 def int_k_center_select(

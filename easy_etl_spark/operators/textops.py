@@ -52,21 +52,14 @@ def stopword_ratio_arr(t: Column) -> Column:
     return stops.cast("double") / F.size(t).cast("double")
 
 
-def stopword_ratio(text: Column) -> Column:
-    return stopword_ratio_arr(tokens(text))
-
-
 def quality_score_arr(t: Column) -> Column:
+    """Deterministic [0,1] quality heuristic over a pre-split token
+    array: length saturation × (1 - stopword ratio). Mirrors the shape
+    of production quality filters (length/punct/stopword mix) with
+    reproducible arithmetic."""
     n = F.size(t).cast("double")
     stops = F.size(F.filter(t, lambda x: x.isin(*STOPWORDS))).cast("double")
     return F.round(F.least(n / 100.0, F.lit(1.0)) * (1.0 - stops / n), 4)
-
-
-def quality_score(text: Column) -> Column:
-    """Deterministic [0,1] quality heuristic: length saturation ×
-    (1 - stopword ratio). Mirrors the shape of production quality
-    filters (length/punct/stopword mix) with reproducible arithmetic."""
-    return quality_score_arr(tokens(text))
 
 
 def lang_scores_arr(t: Column) -> dict[str, Column]:
@@ -76,10 +69,6 @@ def lang_scores_arr(t: Column) -> dict[str, Column]:
         return F.size(F.filter(t, lambda x: x.isin(*words)))
 
     return {lang: profile_count(words) for lang, words in LANG_PROFILES.items()}
-
-
-def lang_scores(text: Column) -> dict[str, Column]:
-    return lang_scores_arr(tokens(text))
 
 
 def lang_id_arr(t: Column) -> Column:

@@ -39,88 +39,12 @@ def test_ivf_deterministic(spark, sf_dir):
     assert a == b
 
 
-# ----------------------------------------------------------------------
-# round 7: direct refine_centroids coverage + train-once centroid cache
-# ----------------------------------------------------------------------
-
-
-def _emb_mat(spark, sf_dir):
-    import numpy as np
-
-    rows = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding").collect()
-    rows.sort(key=lambda r: r["vec_id"])
-    return np.array([[float(x) for x in r["embedding"]] for r in rows], dtype="float64")
-
-
-def _sq_err(mat, cents):
-    import numpy as np
-
-    c = np.asarray(cents, dtype="float64")
-    d = ((mat[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-    return float(d.min(axis=1).mean())
-
-
-def test_refine_centroids_empty_cell_keeps_seed(spark, sf_dir):
-    """A centroid that captures no corpus vector must survive the
-    refinement pass bit-for-bit (no NaN, no drift toward 0)."""
+def test_ivf_probing_every_cell_is_exact(spark, sf_dir):
+    """n_probe = n_lists probes every cell, so the candidates are all
+    pairs and the cosine re-rank must return brute_force_topk's rows."""
     emb = load_table(spark, sf_dir, "embeddings")
-    near = similarity.kmeans_centroids(emb, n_lists=4)
-    far = [1e6] * len(near[0])  # no vector can be nearest to this
-    refined = similarity.refine_centroids(emb, near + [far], iters=2)
-    assert refined[-1] == far
-
-
-def test_refine_centroids_error_non_increase(spark, sf_dir):
-    """One Lloyd pass over the full corpus must not worsen the
-    quantization objective vs the sample-trained seeds (Lloyd's
-    assignment+mean steps are each monotone non-increasing)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    seeds = similarity.kmeans_centroids(emb, n_lists=8)
-    refined = similarity.refine_centroids(emb, seeds, iters=1)
-    mat = _emb_mat(spark, sf_dir)
-    assert _sq_err(mat, refined) <= _sq_err(mat, seeds) + 1e-12
-
-
-def test_refine_centroids_determinism(spark, sf_dir):
-    """Bit-equal across repeat runs on the same physical layout (the
-    sorted (cell, pid) reduction pins float accumulation order); a
-    DIFFERENT partition layout regroups float sums, so it is only
-    guaranteed equal to ~ulp accumulation noise — assert tight
-    closeness there, bit-equality on the fixed layout."""
-    import numpy as np
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    seeds = similarity.kmeans_centroids(emb, n_lists=8)
-    a = similarity.refine_centroids(emb, seeds, iters=1)
-    b = similarity.refine_centroids(emb, seeds, iters=1)
-    assert a == b  # bit-equal: same file set, same split config
-    c = similarity.refine_centroids(emb.repartition(7), seeds, iters=1)
-    assert np.allclose(np.array(a), np.array(c), rtol=1e-9, atol=1e-9)
-
-
-def test_trained_centroids_cached_per_corpus_and_params(spark, sf_dir, monkeypatch):
-    emb = load_table(spark, sf_dir, "embeddings")
-    similarity.clear_centroid_cache()
-    trainings = []
-    orig = similarity.kmeans_centroids
-
-    def counting(*a, **k):
-        trainings.append(1)
-        return orig(*a, **k)
-
-    monkeypatch.setattr(similarity, "kmeans_centroids", counting)
-    a = similarity.trained_centroids(emb, n_lists=8, refine_iters=1)
-    b = similarity.trained_centroids(emb, n_lists=8, refine_iters=1)
-    assert b == a and b is not a  # cache hit returns an equal COPY
-    assert len(trainings) == 1  # second call trained nothing
-    # mutating a returned table must not poison the cache
-    b[0][0] += 1e9
-    assert similarity.trained_centroids(emb, n_lists=8, refine_iters=1) == a
-    c = similarity.trained_centroids(emb, n_lists=4, refine_iters=1)
-    assert len(c) == 4 and len(trainings) == 2  # params are part of the key
-    # a FILTERED frame over the same parquet files is a different
-    # corpus: inputFiles() alone would collide, the plan hash in the
-    # key must force a retrain
-    similarity.trained_centroids(emb.filter("vec_id < 250"), n_lists=8, refine_iters=1)
-    assert len(trainings) == 3
-    assert similarity.clear_centroid_cache() == 3
+    q = emb.filter("vec_id < 5")
+    exact = sorted(map(tuple, similarity.brute_force_topk(emb, q, k=10).collect()))
+    ivf = similarity.ivf_neighbors(emb, q, k=10, n_lists=8, n_probe=8).collect()
+    assert sorted(map(tuple, ivf)) == exact
+    assert len(exact) == 50

@@ -262,6 +262,14 @@ def test_bench_load_history_takes_min_across_rounds(tmp_path):
     assert floors["knn_ivf"] == 2.68
 
 
+def test_bench_load_history_default_is_detail_file():
+    """With no paths, the floors come from BENCH_DETAIL.json alone."""
+    import bench
+
+    floors = bench.load_history()
+    assert floors and floors == bench.load_history([bench.DETAIL_PATH])
+
+
 def test_chaos_retry_hash_identical_under_task_failures():
     """Forced task failures + retries (local[N,4]) must not change any
     output bit: the round-5 double-evaluation class (driver-collected

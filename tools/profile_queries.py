@@ -40,7 +40,7 @@ def main() -> None:
     args = ap.parse_args()
     plan_dir = os.path.join(REPO, "plans", args.round)
 
-    from bench import SECTIONS, _prime_ivf
+    from bench import SECTIONS
     from easy_etl_spark.plans.explain import plan_facts
     from easy_etl_spark.queries import QUERIES
     from easy_etl_spark.session import get_spark, reclaim_blocks, release_caches
@@ -59,8 +59,6 @@ def main() -> None:
                 print(f"warmup {name}: {type(e).__name__}: {e}", file=sys.stderr)
         release_caches()
     spark.read.parquet(os.path.join(args.sf_dir, "lineitem.parquet")).count()
-    if any(n.startswith("knn_ivf") for n in names):
-        _prime_ivf(spark, args.sf_dir)
     if "link_closest_shipdate" in names:
         QUERIES["link_closest_shipdate"](spark, args.sf_dir)
 

@@ -32,7 +32,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from bench import HEADLINE, HEADLINE_V2, _prime_ivf  # noqa: E402
+from bench import HEADLINE, HEADLINE_V2  # noqa: E402
 
 DEFAULT_DIRS = [
     "/root/testdata/sf0.01",
@@ -76,8 +76,6 @@ def run_rung(d: str, names: list[str] | None = None) -> dict[str, float | None]:
         except Exception:
             pass
     release_caches()
-    if any(n.startswith("knn_ivf") for n in names):
-        _prime_ivf(spark, d)
 
     out: dict[str, float | None] = {}
     for name in names:
