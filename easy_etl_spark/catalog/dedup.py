@@ -1,7 +1,7 @@
 """Dedup and curation family: exact, n-gram, MinHash/LSH, SimHash,
-containment, substring-span and CDC-chunk dedup, clustering, corpus
-curation, decontamination, source budgets and leakage-safe splits
-(operators.dedup and operators.curation).
+containment, prefix-filtered, substring-span and CDC-chunk dedup,
+clustering, corpus curation, decontamination, source budgets and
+leakage-safe splits (operators.dedup and operators.curation).
 
 ``dedup_simhash`` hashes with xxhash64, which DuckDB cannot replay, and
 registers rows-only; its md5 twin ``dedup_simhash_md5`` is
@@ -10,17 +10,21 @@ oracle-checked.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup
 from ..operators.curation import cap_sources_by_budget, decontaminate, dsir_select
 from ..operators.curation import curate_corpus as _curate
 from ..operators.dedup import (
+    _index_sizes,
+    _jaccard,
+    _scored_pairs,
     _shingle_index,
     array_shingles,
     cdc_chunk_dedup,
     duplicate_substring_spans,
+    prefix_filtered_jaccard_pairs,
 )
 from ..operators.sampling import md5_uniform
 from ..operators.textops import tokens
@@ -320,9 +324,7 @@ def dedup_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-derived 32-bit twin of the xxhash64 simhash, recomputed
     bit-for-bit by the DuckDB oracle — turning the simhash family from
     rows-only into value-hash-checked."""
-    from ..operators.dedup import md5_simhash32
-
-    return md5_simhash32(load_table(spark, sf_dir, "documents"))
+    return dedup.md5_simhash32(load_table(spark, sf_dir, "documents"))
 
 
 @register(
@@ -352,9 +354,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     |A∩B| / min(|A|,|B|) ≥ 0.9 — catches excerpts and boilerplate
     wrappers whose symmetric Jaccard stays tiny. Same inverted-index
     self-join posture as dedup_ngram_jaccard."""
-    from ..operators import dedup as D
-
-    return D.containment_pairs(load_table(spark, sf_dir, "documents"), threshold=0.9)
+    return dedup.containment_pairs(load_table(spark, sf_dir, "documents"), threshold=0.9)
 
 
 # ----------------------------------------------------------------------
@@ -646,12 +646,14 @@ def dedup_pair_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
     The dedup family says WHICH pairs merge; this is the merge-queue
     view that says WHY.
 
-    Scale: identical inverted-index pair generation as the Jaccard
-    dedup (min() rides the same aggregate — no extra pass for the
-    sample)."""
+    Scale: the pairs come from an index self-join on the shingle, not
+    the in-row pair expansion of dedup.ngram_jaccard_pairs, because
+    the sample shingle must ride the pair aggregate as min() and the
+    expansion does not carry the shingle into its pair rows. Scoring
+    is the shared dedup verifier."""
     docs = load_table(spark, sf_dir, "documents")
     idx = _shingle_index(docs, "text", "doc_id", 3)
-    sizes = idx.groupBy("__id").agg(F.count(F.lit(1)).alias("n"))
+    sizes = _index_sizes(idx)
     a, b = idx.alias("a"), idx.alias("b")
     inter = (
         a.join(
@@ -665,19 +667,14 @@ def dedup_pair_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min(F.col("a.__sh")).alias("sample_shingle"),
         )
     )
-    sa = sizes.select(F.col("__id").alias("id_a"), F.col("n").alias("size_a"))
-    sb = sizes.select(F.col("__id").alias("id_b"), F.col("n").alias("size_b"))
-    jac = F.round(
-        F.col("n_shared")
-        / (F.col("size_a") + F.col("size_b") - F.col("n_shared")),
-        4,
-    )
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= 0.8)
-        .select(
+    return _scored_pairs(
+        inter,
+        sizes.select(F.col("__id").alias("id_a"), F.col("__n").alias("size_a")),
+        sizes.select(F.col("__id").alias("id_b"), F.col("__n").alias("size_b")),
+        _jaccard,
+        "jaccard",
+        0.8,
+        out=(
             "id_a",
             "id_b",
             "n_shared",
@@ -685,7 +682,7 @@ def dedup_pair_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("size_b").cast("bigint").alias("size_b"),
             "jaccard",
             "sample_shingle",
-        )
+        ),
     )
 
 
@@ -932,88 +929,16 @@ def _prefix_join_oracle() -> str:
     """
 
 
-def prefix_filtered_jaccard_pairs(
-    docs: DataFrame,
-    threshold_bp: int = PF_BP,
-    k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Exact Jaccard-threshold pairs via prefix filtering: shingles are
-    canonically ordered by (global frequency asc, shingle asc); a doc
-    with n shingles indexes only its first p = n - ceil(t*n) + 1. Two
-    docs with J >= t share > (1-t)(na+nb)/(1+t) shingles, so their
-    rarest-p prefixes must intersect — candidates come from the
-    prefix-x-prefix join, then exact intersections are computed only
-    for candidates. Returns (id_a, id_b, inter, jaccard_bp).
-
-    Scale: the prefix index is ~(1-t) of the full inverted index and
-    skips the head of the shingle frequency distribution entirely (the
-    rarest shingles are the prefix), so the candidate join avoids the
-    hot buckets that dominate a full index self-join; every stage is
-    an equi-join or keyed window — no all-pairs anywhere."""
-    # the index feeds FOUR consumers (freq, ranking, sizes, both
-    # intersection probes) — cache so tokenize+explode runs once
-    idx = track_cache(dedup._shingle_index(docs, text_col, id_col, k))
-    freq = idx.groupBy("__sh").agg(F.count(F.lit(1)).alias("__df"))
-    ranked = idx.join(freq, "__sh").withColumn(
-        "__rn",
-        F.row_number().over(
-            Window.partitionBy("__id").orderBy("__df", "__sh")
-        ),
-    )
-    sizes = idx.groupBy("__id").agg(F.count(F.lit(1)).alias("__n"))
-    t_num, t_den = threshold_bp, 10000
-    prefix = (
-        ranked.join(sizes, "__id")
-        # p = n - ceil(t*n) + 1, ceil via (t_num*n + t_den-1) DIV t_den
-        .filter(
-            F.col("__rn")
-            <= F.col("__n")
-            - F.expr(f"CAST(({t_num} * __n + {t_den - 1}) DIV {t_den} AS INT)")
-            + 1
-        )
-        .select("__id", "__sh")
-    )
-    a, b = prefix.alias("a"), prefix.alias("b")
-    cand = (
-        a.join(b, (F.col("a.__sh") == F.col("b.__sh")) & (F.col("a.__id") < F.col("b.__id")))
-        .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        .distinct()
-    )
-    ia = idx.select(F.col("__id").alias("id_a"), F.col("__sh").alias("__sha"))
-    ib = idx.select(F.col("__id").alias("id_b"), F.col("__sh").alias("__shb"))
-    inter = (
-        cand.join(ia, "id_a")
-        .join(ib, ["id_b"])
-        .filter(F.col("__sha") == F.col("__shb"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col("__id").alias("id_a"), F.col("__n").alias("__na"))
-    sb = sizes.select(F.col("__id").alias("id_b"), F.col("__n").alias("__nb"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard_bp",
-            F.expr("CAST((10000 * inter) DIV (__na + __nb - inter) AS BIGINT)"),
-        )
-        .filter(F.col("jaccard_bp") >= threshold_bp)
-        .select("id_a", "id_b", F.col("inter").cast("bigint").alias("inter"), "jaccard_bp")
-    )
-
-
 @register("jaccard_prefix_join", _prefix_join_oracle())
 def jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact Jaccard >= 0.8 pairs via PPJoin-style prefix filtering;
     the oracle runs the UNFILTERED quadratic inverted-index join, so a
     hash match proves the prefix filter's no-false-negative theorem on
-    real data (see prefix_filtered_jaccard_pairs for the scale
+    real data (see dedup.prefix_filtered_jaccard_pairs for the scale
     argument; pytest additionally pins candidate-count < full-index
     pair count — the pruning evidence)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return prefix_filtered_jaccard_pairs(docs)
+    return prefix_filtered_jaccard_pairs(docs, threshold_bp=PF_BP)
 
 
 # ----------------------------------------------------------------------

@@ -1,30 +1,55 @@
-"""Deduplication operators: exact, n-gram Jaccard, MinHash+LSH,
-SimHash, and embedding-cosine near-dup.
+"""Deduplication operators: exact, shingle-set (n-gram Jaccard,
+containment, MinHash+LSH, prefix filter, incremental), SimHash, and
+embedding-cosine near-dup.
 
-Training-data-pipeline extensions (no reference counterpart). Scale
-design notes, per operator:
+Training-data-pipeline extensions (no reference counterpart).
+
+Every shingle-set operator is a candidate generator followed by one
+exact verifier (Chaudhuri et al., ICDE 2006: a set-similarity join is
+a candidate step plus a verification step):
+
+  - generators produce (id_a, id_b, |A∩B|) rows:
+      * _pair_intersections: the inverted index grouped by shingle,
+        each group's sorted member list expanded in-row into its
+        (a < b) pairs (ngram_jaccard_pairs, containment_pairs). Cost
+        is Σ bucket², not n²;
+      * MinHash bands: per-doc signatures min(xxhash64(shingle, i)),
+        banded into (band, band_hash) buckets whose members pair up
+        the same way (minhash_lsh_pairs);
+      * the PPJoin prefix: each doc indexes only its rarest
+        n - ceil(t*n) + 1 shingles, and two docs with J >= t must
+        share a prefix shingle (prefix_filtered_jaccard_pairs);
+      * the batch-vs-base join: an arriving batch's index equi-joins
+        the base index on the shingle key, never base × base
+        (incremental_jaccard_dups, incremental_dups_against_index).
+    The MinHash and prefix candidates carry no count yet;
+    _candidate_intersections joins the index per candidate pair to
+    count |A∩B| for candidates only.
+  - _scored_pairs is the one verifier: it joins both set sizes to the
+    intersections, computes the score (_jaccard, rounded to 4 places,
+    or containment, or integer basis points) and keeps pairs at or
+    above the threshold. The dedup_pair_explain query's self-join
+    (which carries a sample shared shingle) goes through it too.
+
+Other operators:
 
   - exact: hash-groupBy on a fingerprint — one shuffle keyed by md5,
-    perfectly balanced (hash keys are uniform), the canonical 100 TB
-    dedup.
-  - n-gram Jaccard: shingle → inverted-index self-join → intersection
-    counts. The join key is the shingle, so cost is Σ bucket², not n².
-    This is the *verifier*; at corpus scale you run it only on LSH
-    candidates.
-  - MinHash+LSH: per-doc signatures via min(xxhash64(shingle, seed_i))
-    — an `explode` + one groupBy; banding turns near-dup search into an
-    equi-join on (band, band_hash), the classic sub-quadratic path.
-  - SimHash: 64 weighted bit-sums per doc (still one groupBy over the
-    exploded token frame); candidates via pigeonhole band join, verify
-    by popcount(xor) ≤ k.
+    perfectly balanced (hash keys are uniform).
+  - SimHash: _bit_vote explodes tokens, sums a ±1 vote per bit of the
+    token hash and packs the signs (64-bit xxhash64 in simhash, 32-bit
+    md5 in md5_simhash32, which DuckDB can replay); candidates via
+    pigeonhole band join, verify by popcount(xor) ≤ k.
   - embedding cosine: exact pairwise restricted by a blocking key; the
     ANN path lives in similarity.py.
 
-Everything is DataFrame-native (explode / groupBy / join / bit ops);
-no Python in the hot path.
+Everything except embedding_dup_pairs is DataFrame-native (explode /
+groupBy / join / bit ops); no Python in the hot path. Ids are generic:
+any orderable id_col type (long or string) works.
 """
 
 from __future__ import annotations
+
+from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -152,6 +177,79 @@ def _pair_intersections(idx: DataFrame) -> DataFrame:
     )
 
 
+def _index_sizes(idx: DataFrame) -> DataFrame:
+    """(__id, __n) shingle-set size per doc of a (__id, __sh) index:
+    index rows are distinct (doc, shingle) pairs."""
+    return idx.groupBy("__id").agg(F.count(F.lit(1)).alias("__n"))
+
+
+def _candidate_intersections(cand: DataFrame, idx: DataFrame) -> DataFrame:
+    """(id_a, id_b, __inter) for the (id_a, id_b) candidate pairs only:
+    |A∩B| via a pair-restricted index join instead of the whole index
+    self-join (candidates are a vanishing fraction of all pairs)."""
+    ia = idx.select(F.col("__id").alias("id_a"), F.col("__sh").alias("__sha"))
+    ib = idx.select(F.col("__id").alias("__idb"), F.col("__sh").alias("__shb"))
+    return (
+        cand.join(ia, "id_a")
+        .join(ib, (F.col("id_b") == F.col("__idb")) & (F.col("__sha") == F.col("__shb")))
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("__inter"))
+    )
+
+
+def _jaccard(inter: Column, na: Column, nb: Column) -> Column:
+    """|A∩B| / |A∪B| rounded to 4 places (the oracles round the same
+    way)."""
+    return F.round(inter / (na + nb - inter), 4)
+
+
+def _containment(inter: Column, na: Column, nb: Column) -> Column:
+    return F.round(inter / F.least(na, nb), 4)
+
+
+def _jaccard_bp(inter: Column, na: Column, nb: Column) -> Column:
+    """Jaccard in integer basis points, floor(10000·|A∩B| / |A∪B|)."""
+    return F.call_function("div", F.lit(10000) * inter, na + nb - inter).cast("bigint")
+
+
+def _sides(sizes: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """A (__id, __n) size frame keyed for both sides of an (id_a, id_b)
+    pair: (id_a, __na) and (id_b, __nb)."""
+    return (
+        sizes.select(F.col("__id").alias("id_a"), F.col("__n").alias("__na")),
+        sizes.select(F.col("__id").alias("id_b"), F.col("__n").alias("__nb")),
+    )
+
+
+def _scored_pairs(
+    inter: DataFrame,
+    sa: DataFrame,
+    sb: DataFrame,
+    score: Callable[[Column, Column, Column], Column],
+    name: str,
+    threshold: float,
+    out: Sequence[str | Column] | None = None,
+) -> DataFrame:
+    """The one exact verifier of every shingle-set operator.
+
+    ``inter`` holds (a, b, intersection, ...) rows from a candidate
+    generator; ``sa`` and ``sb`` hold (a, size) and (b, size). Joins
+    both set sizes on, adds ``name`` = score(intersection, size_a,
+    size_b), keeps rows with ``name`` >= threshold and selects ``out``
+    (default a, b, name). The sizes join back after the pair
+    aggregate, which stays a skinny count: carrying them through that
+    hot aggregate as min() columns measured 2x slower at sf0.1."""
+    a, b, i = inter.columns[:3]
+    na, nb = sa.columns[1], sb.columns[1]
+    return (
+        inter.join(sa, a)
+        .join(sb, b)
+        .withColumn(name, score(F.col(i), F.col(na), F.col(nb)))
+        .filter(F.col(name) >= threshold)
+        .select(*(out or (a, b, name)))
+    )
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.8,
@@ -163,31 +261,41 @@ def ngram_jaccard_pairs(
     index (pairs only materialize for docs sharing ≥1 shingle).
     Returns (id_a, id_b, jaccard) with id_a < id_b.
 
-    Round 11: the index self-join became the in-row pair expansion of
-    _pair_intersections (one index exchange instead of two). The index
-    is deliberately NOT cached: its two consumers (pair groups +
-    per-doc sizes) re-run the tokenize+explode subtree, which a 6-rep
-    same-window bisect measured ~15-20% FASTER than materializing the
-    exploded index into the cache (med 2.61 vs 3.20 s at sf0.1) — and
-    at 100 TB an exploded-inverted-index cache cannot fit memory, so
-    uncached is also the only shape that scales (guide §5)."""
+    The index is deliberately NOT cached: its two consumers (pair
+    groups + per-doc sizes) re-run the tokenize+explode subtree, which
+    a 6-rep same-window bisect measured ~15-20% FASTER than
+    materializing the exploded index into the cache (med 2.61 vs
+    3.20 s at sf0.1) — and at 100 TB an exploded-inverted-index cache
+    cannot fit memory, so uncached is also the only shape that scales."""
     idx = _shingle_index(docs, text_col, id_col, k)
-    sizes = idx.groupBy("__id").agg(F.count(F.lit(1)).alias("__n"))
-    inter = _pair_intersections(idx)
-    sa = sizes.select(F.col("__id").alias("id_a"), F.col("__n").alias("__na"))
-    sb = sizes.select(F.col("__id").alias("id_b"), F.col("__n").alias("__nb"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("__inter") / (F.col("__na") + F.col("__nb") - F.col("__inter")), 4
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    return _scored_pairs(
+        _pair_intersections(idx), *_sides(_index_sizes(idx)), _jaccard, "jaccard", threshold
     )
+
+
+def _batch_vs_base(
+    new: DataFrame,
+    base_idx: DataFrame,
+    base_sizes: DataFrame,
+    threshold: float,
+    k: int,
+    text_col: str,
+    id_col: str,
+) -> DataFrame:
+    """(new_id, base_id, jaccard) of an arriving batch against a base
+    index ``base_idx`` (__bid, __sh) with sizes (base_id, __nb): the
+    batch builds only its own index and equi-joins the base on the
+    shingle key. Batch set sizes come in-row off the docs frame."""
+    ni = _shingle_index(new, text_col, id_col, k).select(
+        F.col("__id").alias("__nid"), "__sh"
+    )
+    inter = (
+        ni.join(base_idx, "__sh")
+        .groupBy(F.col("__nid").alias("new_id"), F.col("__bid").alias("base_id"))
+        .agg(F.count(F.lit(1)).alias("__inter"))
+    )
+    n_sizes = _inrow_shingle_sizes(new, text_col, id_col, k, "new_id", "__nn")
+    return _scored_pairs(inter, n_sizes, base_sizes, _jaccard, "jaccard", threshold)
 
 
 def incremental_jaccard_dups(
@@ -206,41 +314,14 @@ def incremental_jaccard_dups(
     shingle); each arriving batch builds only ITS index and equi-joins
     the base on the shingle key — cost is proportional to the batch,
     not the corpus, and never new×new or base×base. Returns
-    (new_id, base_id, jaccard).
-
-    Round 11 (guide §1.2/§2.3): shingles are distinct IN-ROW
-    (array_shingles), so each doc's set size is size(array_shingles)
-    computed straight off the docs frame — no explode, no groupBy(doc)
-    aggregate, no second tokenize pass per side (the old size branches
-    re-built both indexes: 8 scans total, now 4). The pair aggregate
-    stays a SKINNY count over the intersection stream — carrying the
-    sizes through that hot aggregate as min() columns was measured 2x
-    SLOWER at sf0.1 (wider hash-map rows on the biggest stream in the
-    query), so the sizes join back after it instead.
-    """
+    (new_id, base_id, jaccard). Both sides' set sizes are
+    size(array_shingles) straight off the docs frame: no second
+    tokenize pass, no groupBy(doc)."""
     bi = _shingle_index(base, text_col, id_col, k).select(
-        F.col("__id").alias("__bid"), F.col("__sh").alias("__sh")
-    )
-    ni = _shingle_index(new, text_col, id_col, k).select(
-        F.col("__id").alias("__nid"), F.col("__sh").alias("__sh")
+        F.col("__id").alias("__bid"), "__sh"
     )
     b_sizes = _inrow_shingle_sizes(base, text_col, id_col, k, "base_id", "__nb")
-    n_sizes = _inrow_shingle_sizes(new, text_col, id_col, k, "new_id", "__nn")
-    inter = (
-        ni.join(bi, "__sh")
-        .groupBy(F.col("__nid").alias("new_id"), F.col("__bid").alias("base_id"))
-        .agg(F.count(F.lit(1)).alias("__inter"))
-    )
-    jac = F.round(
-        F.col("__inter") / (F.col("__nn") + F.col("__nb") - F.col("__inter")), 4
-    )
-    return (
-        inter.join(n_sizes, "new_id")
-        .join(b_sizes, "base_id")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "base_id", "jaccard")
-    )
+    return _batch_vs_base(new, bi, b_sizes, threshold, k, text_col, id_col)
 
 
 def containment_pairs(
@@ -255,62 +336,40 @@ def containment_pairs(
     asymmetric near-superset relation (quotes, excerpts, boilerplate
     wrappers) that symmetric Jaccard under-scores: a 50-shingle doc
     fully quoted inside a 5000-shingle doc has Jaccard ≈ 0.01 but
-    containment 1.0. Same inverted-index shape (and 100 TB posture) as
-    ngram_jaccard_pairs, including the round-11 in-row pair expansion
-    (_pair_intersections) and the round-11 uncached index (see the
-    measured bisect note there); only the denominator differs."""
+    containment 1.0. Same generator and uncached index as
+    ngram_jaccard_pairs; only the score differs."""
     idx = _shingle_index(docs, text_col, id_col, k)
-    sizes = idx.groupBy("__id").agg(F.count(F.lit(1)).alias("__n"))
-    inter = _pair_intersections(idx)
-    sa = sizes.select(F.col("__id").alias("id_a"), F.col("__n").alias("__na"))
-    sb = sizes.select(F.col("__id").alias("id_b"), F.col("__n").alias("__nb"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "containment",
-            F.round(F.col("__inter") / F.least(F.col("__na"), F.col("__nb")), 4),
-        )
-        .filter(F.col("containment") >= threshold)
-        .select("id_a", "id_b", "containment")
+    return _scored_pairs(
+        _pair_intersections(idx),
+        *_sides(_index_sizes(idx)),
+        _containment,
+        "containment",
+        threshold,
     )
 
 
-def _signatures_from_index(
-    idx: DataFrame, num_perm: int, id_col: str, with_sizes: bool = False
-) -> DataFrame:
-    # hash the shingle STRING once, then derive the num_perm permutation
-    # hashes from that 8-byte value: xxhash64 over a fixed-width long is
-    # ~an order of magnitude cheaper than re-hashing a ~20-byte string
-    # per permutation, and (hash of independent-seeded hash) is the same
-    # minwise family (recall is pinned by the ==-exact-path pytest)
+def _signatures_from_index(idx: DataFrame, num_perm: int, id_col: str) -> DataFrame:
+    """(id_col, sig, __n): num_perm MinHash values per doc as one array,
+    sig[i] = min over shingles of xxhash64(xxhash64(shingle), i), plus
+    the shingle-set size.
+
+    The shingle STRING is hashed once and the num_perm permutation
+    hashes derive from that 8-byte value: xxhash64 over a fixed-width
+    long is ~an order of magnitude cheaper than re-hashing a ~20-byte
+    string per permutation, and (hash of independent-seeded hash) is
+    the same minwise family (recall is pinned by the ==-exact-path
+    pytest). Codegen'd hash+min aggregates beat interpreted
+    higher-order array expressions ~4x on cold JVMs. Index rows are
+    distinct (doc, shingle) pairs, so the count folded into the same
+    aggregate IS the set size — the verifier needs no extra groupBy."""
     idx = idx.withColumn("__h0", F.xxhash64(F.col("__sh")))
     aggs = [F.min(F.xxhash64(F.col("__h0"), F.lit(i))).alias(f"h{i}") for i in range(num_perm)]
-    if with_sizes:
-        # idx rows are distinct (doc, shingle) pairs, so this count IS
-        # the shingle-set size — folding it here saves the verifier a
-        # whole extra groupBy pass over the index
-        aggs.append(F.count(F.lit(1)).alias("__n"))
-    wide = idx.groupBy(F.col("__id").alias(id_col)).agg(*aggs)
-    keep = [id_col, F.array(*[f"h{i}" for i in range(num_perm)]).alias("sig")]
-    if with_sizes:
-        keep.append(F.col("__n"))
-    return wide.select(*keep)
-
-
-def minhash_signatures(
-    docs: DataFrame, num_perm: int = 32, k: int = 3, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """num_perm MinHash values per doc as one `sig` array column:
-    sig[i] = min over shingles of xxhash64(shingle, i).
-
-    Implementation: explode shingles → num_perm min-aggregates →
-    array-pack. The explode/groupBy pair benchmarked fastest here —
-    codegen'd hash+min aggregates beat interpreted higher-order
-    array expressions ~4× on cold JVMs — and the shuffle it adds is
-    map-side-combined down to docs × num_perm longs, which is the
-    cheap part of a 100 TB dedup."""
-    return _signatures_from_index(_shingle_index(docs, text_col, id_col, k), num_perm, id_col)
+    wide = idx.groupBy(F.col("__id").alias(id_col)).agg(
+        *aggs, F.count(F.lit(1)).alias("__n")
+    )
+    return wide.select(
+        id_col, F.array(*[f"h{i}" for i in range(num_perm)]).alias("sig"), F.col("__n")
+    )
 
 
 def minhash_lsh_pairs(
@@ -324,7 +383,7 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """MinHash + banded LSH candidate generation, then exact Jaccard
     verification of candidates only. Sub-quadratic: candidate pairs
-    come from an equi-join on (band, band_hash).
+    come from the (band, band_hash) buckets.
 
     Banding choice (round 9): the verification stage is exact, so the
     banding's only job is recall AT the verification threshold — its
@@ -345,7 +404,7 @@ def minhash_lsh_pairs(
     a vanishing fraction of the corpus at any scale)."""
     rows_per_band = num_perm // bands
     idx = track_cache(_shingle_index(docs, text_col, id_col, k))
-    sigs = track_cache(_signatures_from_index(idx, num_perm, id_col, with_sizes=True))
+    sigs = track_cache(_signatures_from_index(idx, num_perm, id_col))
     # band hash = xxhash64 of the band's signature slice (arrays hash
     # as a whole); one explode to (id, band, bh) bucket rows
     band_cols = F.transform(
@@ -358,45 +417,83 @@ def minhash_lsh_pairs(
     buckets = sigs.select(F.col(id_col).alias("__id"), F.explode(band_cols).alias("b")).select(
         "__id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
     )
-    # Round 11 (guide §2.3/§2.4): bucket pairs by in-row expansion of
-    # each bucket's sorted member list (the _pair_intersections trick)
-    # — ONE exchange of the docs×bands bucket stream instead of the
-    # two a self-join on (band, bh) pays, same (id_a < id_b) pairs.
-    # Round 12 A/B (VERDICT r11 item 1): interleaved 5-rep sf0.1 +
-    # 13-rep sf1 A/B vs the (band, bh) self-join measured the two
-    # within noise (means within 2.5%, medians flipping between
-    # batches) — the driver's −23% was window inflation; this form is
-    # kept for the better plan (BHJ 10→8, one bucket exchange). The
-    # expansion streams (see _expand_sorted_pairs): a celebrity bucket
-    # can no longer allocate its |ids|²/2 pairs as one in-row array.
+    # bucket pairs by in-row expansion of each bucket's sorted member
+    # list (the _pair_intersections trick): ONE exchange of the
+    # docs×bands bucket stream instead of the two a self-join on
+    # (band, bh) pays, same (id_a < id_b) pairs. An interleaved A/B
+    # against the self-join measured the two within noise (sf0.1 and
+    # sf1); this form has the better plan (BHJ 10→8, one bucket
+    # exchange). The expansion streams (see _expand_sorted_pairs): a
+    # celebrity bucket never allocates its |ids|²/2 pairs as one array.
     cand = _expand_sorted_pairs(
         buckets.groupBy("band", "bh")
         .agg(F.sort_array(F.collect_list("__id")).alias("ids"))
         .filter(F.size("ids") >= 2)
     ).distinct()
-    # verify candidates with exact shingle Jaccard, computed only for
-    # candidate pairs: |A∩B| via a pair-restricted index join. Sizes
-    # ride along on the (already materialized) signature frame.
+    # sizes ride along on the (already materialized) signature frame
     sizes = sigs.select(F.col(id_col).alias("__id"), "__n")
-    ia = idx.select(F.col("__id").alias("id_a"), F.col("__sh").alias("__sha"))
-    ib = idx.select(F.col("__id").alias("__idb"), F.col("__sh").alias("__shb"))
-    inter = (
-        cand.join(ia, "id_a")
-        .join(ib, (F.col("id_b") == F.col("__idb")) & (F.col("__sha") == F.col("__shb")))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("__inter"))
+    return _scored_pairs(
+        _candidate_intersections(cand, idx), *_sides(sizes), _jaccard, "jaccard", threshold
     )
-    sa = sizes.select(F.col("__id").alias("id_a"), F.col("__n").alias("__na"))
-    sb = sizes.select(F.col("__id").alias("id_b"), F.col("__n").alias("__nb"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("__inter") / (F.col("__na") + F.col("__nb") - F.col("__inter")), 4),
+
+
+def prefix_filtered_jaccard_pairs(
+    docs: DataFrame,
+    threshold_bp: int = 8000,
+    k: int = 3,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Exact Jaccard-threshold pairs via prefix filtering: shingles are
+    canonically ordered by (global frequency asc, shingle asc); a doc
+    with n shingles indexes only its first p = n - ceil(t*n) + 1. Two
+    docs with J >= t share > (1-t)(na+nb)/(1+t) shingles, so their
+    rarest-p prefixes must intersect — candidates come from the
+    prefix-x-prefix join, then exact intersections are computed only
+    for candidates. Returns (id_a, id_b, inter, jaccard_bp), the
+    threshold and score in integer basis points.
+
+    Scale: the prefix index is ~(1-t) of the full inverted index and
+    skips the head of the shingle frequency distribution entirely (the
+    rarest shingles are the prefix), so the candidate join avoids the
+    hot buckets that dominate a full index self-join; every stage is
+    an equi-join or keyed window — no all-pairs anywhere."""
+    # the index feeds FOUR consumers (freq, ranking, sizes, both
+    # intersection probes) — cache so tokenize+explode runs once
+    idx = track_cache(_shingle_index(docs, text_col, id_col, k))
+    freq = idx.groupBy("__sh").agg(F.count(F.lit(1)).alias("__df"))
+    ranked = idx.join(freq, "__sh").withColumn(
+        "__rn",
+        F.row_number().over(
+            Window.partitionBy("__id").orderBy("__df", "__sh")
+        ),
+    )
+    sizes = _index_sizes(idx)
+    t_num, t_den = threshold_bp, 10000
+    prefix = (
+        ranked.join(sizes, "__id")
+        # p = n - ceil(t*n) + 1, ceil via (t_num*n + t_den-1) DIV t_den
+        .filter(
+            F.col("__rn")
+            <= F.col("__n")
+            - F.expr(f"CAST(({t_num} * __n + {t_den - 1}) DIV {t_den} AS INT)")
+            + 1
         )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        .select("__id", "__sh")
+    )
+    a, b = prefix.alias("a"), prefix.alias("b")
+    cand = (
+        a.join(b, (F.col("a.__sh") == F.col("b.__sh")) & (F.col("a.__id") < F.col("b.__id")))
+        .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
+        .distinct()
+    )
+    return _scored_pairs(
+        _candidate_intersections(cand, idx),
+        *_sides(sizes),
+        _jaccard_bp,
+        "jaccard_bp",
+        threshold_bp,
+        out=("id_a", "id_b", F.col("__inter").cast("bigint").alias("inter"), "jaccard_bp"),
     )
 
 
@@ -514,32 +611,43 @@ def dedup_survivors(
     return docs.join(losers, id_col, "left_anti")
 
 
-def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """64-bit SimHash per doc: weighted bit-vote over token hashes.
-    Explode tokens (with multiplicity weight) → 64 conditional sums →
-    sign → packed bigint. All codegen'd aggregates."""
+def _bit_vote(
+    docs: DataFrame,
+    hash_of: Callable[[Column], Column],
+    width: int,
+    name: str,
+    text_col: str,
+    id_col: str,
+) -> DataFrame:
+    """(id_col, name) SimHash per doc: explode tokens (with
+    multiplicity weight) → ``width`` ±1 vote sums over the low bits of
+    hash_of(token) → sign → packed bigint (bit 63 packs as the sign
+    bit). All codegen'd aggregates."""
     tok = _fan_out(docs, id_col).select(
         F.col(id_col).alias("__id"), F.explode(tokens(F.col(text_col))).alias("__t")
-    ).withColumn("__h", F.xxhash64("__t"))
+    ).withColumn("__h", hash_of(F.col("__t")))
     votes = [
         F.sum(
             F.when(F.shiftright(F.col("__h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
         ).alias(f"b{b}")
-        for b in range(64)
+        for b in range(width)
     ]
     agg = tok.groupBy("__id").agg(*votes)
-    packed = agg.select(
-        F.col("__id").alias(id_col),
-        F.aggregate(
-            F.array(*[
-                F.when(F.col(f"b{b}") > 0, F.lit(1).cast("long") * F.lit(2 ** b if b < 63 else -(2 ** 63))).otherwise(F.lit(0).cast("long"))
-                for b in range(64)
-            ]),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).alias("simhash"),
+    packed = sum(
+        (
+            F.when(
+                F.col(f"b{b}") > 0, F.lit(-(1 << 63) if b == 63 else 1 << b).cast("long")
+            ).otherwise(F.lit(0).cast("long"))
+            for b in range(width)
+        ),
+        F.lit(0).cast("long"),
     )
-    return packed
+    return agg.select(F.col("__id").alias(id_col), packed.alias(name))
+
+
+def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """64-bit SimHash per doc over xxhash64 token hashes."""
+    return _bit_vote(docs, F.xxhash64, 64, "simhash", text_col, id_col)
 
 
 def simhash_pairs(
@@ -786,27 +894,17 @@ def md5_simhash32(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     """32-bit SimHash whose token hash is md5-derived — the engine-
     portable twin of `simhash` (xxhash64 is Spark-only; md5 is
     bit-identical in Spark, DuckDB, and Python, so an oracle engine
-    can recompute the signature exactly). Same explode → bit-vote →
-    pack shape, half the width; use the 64-bit xxhash version for
-    production throughput and this one where cross-engine
-    reproducibility is the requirement."""
-    tok = _fan_out(docs, id_col).select(
-        F.col(id_col).alias("__id"), F.explode(tokens(F.col(text_col))).alias("__t")
-    ).withColumn(
-        "__h", F.conv(F.substring(F.md5("__t"), 1, 8), 16, 10).cast("bigint")
+    can recompute the signature exactly). Same bit vote, half the
+    width; use the 64-bit xxhash version for production throughput and
+    this one where cross-engine reproducibility is the requirement."""
+    return _bit_vote(
+        docs,
+        lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("bigint"),
+        32,
+        "simhash32",
+        text_col,
+        id_col,
     )
-    votes = [
-        F.sum(
-            F.when(F.shiftright(F.col("__h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"b{b}")
-        for b in range(32)
-    ]
-    agg = tok.groupBy("__id").agg(*votes)
-    packed = sum(
-        (F.when(F.col(f"b{b}") > 0, F.lit(1 << b).cast("long")).otherwise(F.lit(0).cast("long")) for b in range(32)),
-        F.lit(0).cast("long"),
-    )
-    return agg.select(F.col("__id").alias(id_col), packed.alias("simhash32"))
 
 
 def write_shingle_index(
@@ -842,30 +940,11 @@ def incremental_dups_against_index(
     bi = base_index.select(
         F.col("doc_id").alias("__bid"), F.col("shingle").alias("__sh")
     )
-    # the batch side's sizes come in-row off the docs frame (round 11,
-    # same shape as incremental_jaccard_dups — no index rebuild); the
-    # base side is a stored (doc_id, shingle) index, so its sizes
-    # still need one aggregate, but over the index read, not a
-    # tokenize pass
-    ni = _shingle_index(new, text_col, id_col, k).select(
-        F.col("__id").alias("__nid"), F.col("__sh").alias("__sh")
-    )
-    n_sizes = _inrow_shingle_sizes(new, text_col, id_col, k, "new_id", "__nn")
+    # the base side is a stored (doc_id, shingle) index, so its sizes
+    # need one aggregate, but over the index read, not a tokenize pass
     b_sizes = bi.groupBy("__bid").agg(F.count(F.lit(1)).alias("__nb"))
-    inter = (
-        ni.join(bi, "__sh")
-        .groupBy(F.col("__nid").alias("new_id"), F.col("__bid").alias("base_id"))
-        .agg(F.count(F.lit(1)).alias("__inter"))
-    )
-    jac = F.round(
-        F.col("__inter") / (F.col("__nn") + F.col("__nb") - F.col("__inter")), 4
-    )
-    return (
-        inter.join(n_sizes, "new_id")
-        .join(b_sizes.withColumnRenamed("__bid", "base_id"), "base_id")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "base_id", "jaccard")
+    return _batch_vs_base(
+        new, bi, b_sizes.withColumnRenamed("__bid", "base_id"), threshold, k, text_col, id_col
     )
 
 
@@ -900,8 +979,6 @@ def duplicate_substring_spans(
     explode is fanned out across cores first (scan partitioning is
     sized by pre-explode bytes)."""
     from .scale import ensure_min_partitions
-
-    from .textops import tokens
 
     L = min_len
     base = ensure_min_partitions(docs.select(id_col, text_col)).select(
@@ -996,7 +1073,6 @@ def cdc_chunk_dedup(
     the fingerprint key. The token explode is fanned out across cores
     first (pre-explode-bytes scan partitioning, as in gram_novelty)."""
     from .scale import ensure_min_partitions
-    from .textops import tokens
 
     P = 2147483647
     mask = 1 << mask_bits

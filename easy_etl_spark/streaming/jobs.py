@@ -170,19 +170,26 @@ def _has_agg(df: DataFrame) -> bool:
     return stream_rel < 0 or agg < stream_rel
 
 
+def _each_batch(stream_df: DataFrame, checkpoint: str, handle) -> DataStreamWriter:
+    """The foreachBatch writer every ``foreach_batch_*`` job returns:
+    ``handle(batch_df, batch_id)`` runs on each non-empty micro-batch,
+    with the checkpoint and an AvailableNow trigger."""
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            handle(batch_df, batch_id)
+
+    return (
+        stream_df.writeStream.foreachBatch(run)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+    )
+
+
 def foreach_batch_upsert(stream_df: DataFrame, sink, keys: list[str], checkpoint: str) -> DataStreamWriter:
     """Streaming upsert: each micro-batch merges into the target via
     ParquetSink.upsert (Delta MERGE on a real deployment) — reuses the
     batch merge plan inside foreachBatch."""
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.isEmpty():
-            sink.upsert(batch_df, keys)
-
-    return (
-        stream_df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return _each_batch(stream_df, checkpoint, lambda batch_df, _: sink.upsert(batch_df, keys))
 
 
 def foreach_batch_scd2(
@@ -203,8 +210,6 @@ def foreach_batch_scd2(
     from ..operators import scd
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         ts = ts_of_batch(batch_id)
         current = sink.read()
         if current is None:
@@ -215,11 +220,7 @@ def foreach_batch_scd2(
         # read the sink path it replaces
         sink._swap_write(hist)
 
-    return (
-        stream_df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return _each_batch(stream_df, checkpoint, handle)
 
 
 def foreach_batch_apply_changes(
@@ -243,8 +244,6 @@ def foreach_batch_apply_changes(
     from ..operators.scd import apply_changes
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         current = sink.read()
         if current is None:
             current = batch_df.drop(op_col, seq_col).limit(0)
@@ -253,11 +252,7 @@ def foreach_batch_apply_changes(
         # the sink path it replaces
         sink._swap_write(state)
 
-    return (
-        stream_df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return _each_batch(stream_df, checkpoint, handle)
 
 
 def interval_join_stream(
@@ -342,14 +337,13 @@ def foreach_batch_dedup_ingest(
     the corpus (at scale the sink keeps a persisted/bucketed shingle
     index instead of re-deriving it per batch)."""
     from ..operators.dedup import (
+        dedup_survivors,
         duplicate_clusters,
         incremental_jaccard_dups,
         ngram_jaccard_pairs,
     )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         # snapshot the registry so the per-batch release below frees
         # ONLY caches this handler created — the registry is
         # session-global, and a blanket release_caches() would
@@ -358,15 +352,9 @@ def foreach_batch_dedup_ingest(
         from ..session import cache_mark, release_caches
 
         mark = cache_mark()
-        batch = batch_df
         # intra-batch near-dups: keep cluster canonicals (min id)
-        pairs = ngram_jaccard_pairs(batch, threshold=threshold, text_col=text_col, id_col=id_col)
-        losers = (
-            duplicate_clusters(pairs)
-            .filter(F.col("doc_id") != F.col("cluster_id"))
-            .select(F.col("doc_id").alias(id_col))
-        )
-        batch = batch.join(losers, id_col, "left_anti")
+        pairs = ngram_jaccard_pairs(batch_df, threshold=threshold, text_col=text_col, id_col=id_col)
+        batch = dedup_survivors(batch_df, duplicate_clusters(pairs), id_col)
         base = sink.read()
         if base is not None:
             dup_new = incremental_jaccard_dups(
@@ -380,9 +368,7 @@ def foreach_batch_dedup_ingest(
         # stream never accumulates storage
         release_caches(since=mark)
 
-    return stream_df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    ).trigger(availableNow=True)
+    return _each_batch(stream_df, checkpoint, handle)
 
 
 def foreach_batch_image_dedup_ingest(
@@ -409,8 +395,6 @@ def foreach_batch_image_dedup_ingest(
     )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch = batch_df.join(dhash_images(batch_df), id_col)
         # intra-batch: keep the min-id side of every near-dup pair
         pairs = dhash_near_dup_pairs(
@@ -435,6 +419,4 @@ def foreach_batch_image_dedup_ingest(
         if not batch.isEmpty():
             sink.append(batch, safe=True)
 
-    return media_stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    ).trigger(availableNow=True)
+    return _each_batch(media_stream, checkpoint, handle)

@@ -8,6 +8,7 @@ from __future__ import annotations
 import math
 
 import pytest
+from pyspark.sql import functions as F
 
 from easy_etl_spark.operators import dedup, similarity
 from easy_etl_spark.session import load_table
@@ -58,6 +59,46 @@ def test_simhash_near_dups(spark, docs_small):
     assert (1, 2) in pairs  # identical docs have identical simhash
     sigs = {r["doc_id"]: r["simhash"] for r in dedup.simhash(docs_small).collect()}
     assert sigs[1] == sigs[2]
+
+
+def _incremental(docs, index_dir=None):
+    """docs 1-3 are the base corpus, 4-5 the arriving batch."""
+    n = F.regexp_extract(F.col("doc_id").cast("string"), r"(\d+)$", 1).cast("int")
+    base, new = docs.filter(n <= 3), docs.filter(n > 3)
+    if index_dir is None:
+        return dedup.incremental_jaccard_dups(base, new, threshold=0.5)
+    dedup.write_shingle_index(base, index_dir)
+    index = docs.sparkSession.read.parquet(index_dir)
+    return dedup.incremental_dups_against_index(index, new, threshold=0.5)
+
+
+_PAIR_OPS = {
+    "ngram_jaccard_pairs": lambda d, _: dedup.ngram_jaccard_pairs(d, threshold=0.5),
+    "containment_pairs": lambda d, _: dedup.containment_pairs(d, threshold=0.5),
+    "minhash_lsh_pairs": lambda d, _: dedup.minhash_lsh_pairs(d, threshold=0.5),
+    "simhash_pairs": lambda d, _: dedup.simhash_pairs(d, max_hamming=16),
+    "prefix_filtered_jaccard_pairs": lambda d, _: dedup.prefix_filtered_jaccard_pairs(
+        d, threshold_bp=5000
+    ),
+    "incremental_jaccard_dups": lambda d, _: _incremental(d),
+    "incremental_dups_against_index": _incremental,
+}
+
+
+@pytest.mark.parametrize("op", sorted(_PAIR_OPS))
+def test_pair_operators_keep_string_ids(spark, docs_small, tmp_path, op):
+    """id_col is generic: "d<N>" string ids give the same pairs and
+    scores as the long ids N (the ids order the same way)."""
+    as_str = docs_small.select(
+        F.concat(F.lit("d"), F.col("doc_id").cast("string")).alias("doc_id"), "text"
+    )
+    run = _PAIR_OPS[op]
+    want = {
+        (f"d{r[0]}", f"d{r[1]}", *r[2:])
+        for r in run(docs_small, str(tmp_path / "long")).collect()
+    }
+    got = {tuple(r) for r in run(as_str, str(tmp_path / "str")).collect()}
+    assert got == want and want
 
 
 def test_embedding_dup_pairs(spark):
