@@ -54,7 +54,7 @@ from typing import Callable, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import track_cache
+from ..session import plan_size_bytes, track_cache
 from .textops import fingerprint_md5, tokens
 
 
@@ -754,14 +754,7 @@ def embedding_dup_pairs(
 
     import numpy as np
 
-    try:
-        # py4j maps the scala BigInt to a plain int; str() also
-        # covers JavaObject-shaped returns on other Spark builds
-        size = int(str(emb._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-        if size <= 0 or size > (1 << 50):
-            size = None
-    except Exception:
-        size = None
+    size = plan_size_bytes(emb)
     exact_n = emb.select(id_col).count() if size is None else None
 
     if max_pairs is None:
@@ -776,8 +769,8 @@ def embedding_dup_pairs(
             f"(~{est_n:.3g} vectors) exceeds the exact-verifier budget "
             f"max_pairs={max_pairs:.3g}. This operator is O(n^2) by contract "
             "— run it only on candidate subsets. Scale paths: "
-            "similarity.semantic_dedup (IVF-cell-bucketed), "
-            "dedup.minhash_lsh_dup_pairs / lsh_bucketed_neighbors "
+            "similarity.semantic_dedup_int (IVF-cell-bucketed), "
+            "dedup.minhash_lsh_pairs / similarity.lsh_bucketed_neighbors "
             "(banded equi-joins), then verify ONLY those candidates here. "
             "Raise SPARK_GRAFT_EXACT_COSINE_MAX_PAIRS or pass "
             "max_pairs=float('inf') to override deliberately."

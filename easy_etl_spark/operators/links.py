@@ -37,19 +37,25 @@ from pyspark.sql import functions as F
 _ASOF_OPS = {">=", ">", "<=", "<"}
 
 # Surrogate-keyed dimension cache: (dim identity, order key, id col) ->
-# the banded-row-number frame. A dimension is keyed ONCE per session
-# and then serves every link against it — the reference's dims carry a
+# the keyed frame. A dimension is keyed ONCE per session and then
+# serves every link against it — the reference's dims carry a
 # persistent auto-increment id, so re-deriving the surrogate per link
-# call both wastes the banding's two bounded-metadata jobs
-# (localCheckpoint + per-partition-count collect, ~0.3 s fixed
-# overhead each) and mismatches how a conformed dimension deploys.
+# call both wastes the banding's bounded-metadata jobs (range sample,
+# localCheckpoint, per-partition-count collect; ~0.3 s fixed overhead
+# each) and mismatches how a conformed dimension deploys.
 # The key holds both the backing file list AND the semantic plan hash
 # (files alone collide across filters/projections of the same parquet;
-# the hash alone collides across in-place rewrites). Values hold a
-# pinned (localCheckpoint) frame whose blocks survive release_caches()
-# and are GC-reclaimed when evicted here — dim-sized storage, so
-# clear_surrogate_cache() exists for tests and for re-keying after a
-# dimension rewrite in place.
+# the hash alone collides across in-place rewrites). Values are a
+# pinned (localCheckpoint) frame whose ids are a projection of each
+# row's position (operators/ranking.py), so a link reads it as a plain
+# scan: no window, no shuffle. The pin's shuffle-partition count is
+# coalesced (no shuffle) to one read task per ``_ROWS_PER_SCAN_TASK``
+# rows of the total the offsets pass already returns; a dimension-sized
+# frame is then one task per scan instead of one per pinned partition.
+# The blocks survive release_caches() and are GC-reclaimed when
+# evicted here — dim-sized storage, so clear_surrogate_cache() exists
+# for tests and for re-keying after a dimension rewrite in place.
+_ROWS_PER_SCAN_TASK = 1_000_000
 _SURROGATE_CACHE: dict[tuple, DataFrame] = {}
 
 
@@ -68,11 +74,12 @@ def with_surrogate_id(
     (easy_etl/README.md:180). Runs on the banded global-row-number
     primitive (operators/ranking.py): range-partition on the order
     key, per-partition offsets from a bounded numPartitions-row
-    collect, intra-partition window — identical values to
-    ``row_number() OVER (ORDER BY ...)`` with NO single-partition
-    stage, so the same call is safe on a 25-row nation dim and on a
-    billion-row conformed dimension. (The former max_rows guard is
-    gone: there is no single-task bottleneck left to guard against.)
+    collect, each row's id its partition's offset plus its position —
+    identical values to ``row_number() OVER (ORDER BY ...)`` with NO
+    single-partition stage, so the same call is safe on a 25-row
+    nation dim and on a billion-row conformed dimension. (The former
+    max_rows guard is gone: there is no single-task bottleneck left to
+    guard against.)
 
     Keyed frames are served from the module cache on repeat calls for
     the same (dim, order, id_col) — see _SURROGATE_CACHE above.
@@ -93,7 +100,8 @@ def with_surrogate_id(
     )
     hit = _SURROGATE_CACHE.get(key)
     if hit is None:
-        hit = global_row_number(dim, [F.col(c) for c in cols], out_col=id_col)
+        keyed, total = global_row_number(dim, [F.col(c) for c in cols], out_col=id_col, with_total=True)
+        hit = keyed.coalesce(max(1, -(-total // _ROWS_PER_SCAN_TASK)))
         _SURROGATE_CACHE[key] = hit
     return hit
 

@@ -18,8 +18,14 @@ scheme (RDD ``zipWithIndex`` in DataFrame terms), implemented once in
    collected and prefix-combined on the driver IN ``__pid`` ORDER —
    bounded metadata, never data rows — and comes back as a literal
    ``create_map(pid -> prior)[__pid]`` lookup;
-3. each row combines its partition's prior with an intra-partition
-   window PARTITIONED BY ``__pid`` — embarrassingly parallel.
+3. each row combines its partition's prior with its place inside the
+   partition — embarrassingly parallel. For a row number that place is
+   the row's position ``__pos``: the banded partitions are pinned
+   already sorted on the order key, and ``monotonically_increasing_id``
+   is ``(pid << 33) + position``, so ``prior[__pid] + __pos + 1`` is a
+   projection and a consumer reads the pin as a plain scan (no
+   Exchange, Sort or Window). The running sum and max keep an
+   intra-partition window PARTITIONED BY ``__pid``.
 
 Correctness notes:
   - equal keys land in one partition (RangePartitioner binary-searches
@@ -37,10 +43,15 @@ Correctness notes:
     row). localCheckpoint materializes ONE instantiation and truncates
     lineage, so no later event — cache eviction, an intervening
     session.release_caches(), a re-plan — can ever re-draw the
-    boundaries; the blocks are GC-reclaimed when the frame dies;
-  - the offsets are eager on purpose: computing them lazily inside the
-    consuming plan (a broadcast join of the per-partition aggregate)
-    adds jobs to every sink write (15 instead of 12 per upsert).
+    boundaries; the blocks are GC-reclaimed when the frame dies. The
+    pin also fixes each partition's sorted row order, which ``__pos``
+    indexes;
+  - the offsets are a driver collect, not a broadcast join inside the
+    consuming plan: the banded helpers pin anyway, and the collect
+    keeps the prior a literal lookup. The sinks call ``dense_ids`` only
+    for a batch too large to number in one task
+    (``sources.sinks._fresh_ids``); a small batch gets its ids inside
+    the write plan and runs no offsets job at all.
 
 Reference parity: the reference's load step gives every inserted row
 an auto-increment ``id`` (easy_etl/README.md:180) — ``dense_ids`` —
@@ -68,9 +79,18 @@ def _banded(df: DataFrame, order_by: list[Column], num_partitions: int | None):
     # release_caches() between the offsets pass and the consuming
     # action can re-draw boundaries (see module docstring)
     return pin_frame(
-        df.repartitionByRange(num_partitions, *order_by).withColumn(
-            "__pid", F.spark_partition_id()
-        )
+        _positions(df.repartitionByRange(num_partitions, *order_by).sortWithinPartitions(*order_by))
+    )
+
+
+def _positions(df: DataFrame) -> DataFrame:
+    """``df`` with its partition id ``__pid`` and each row's 0-based
+    position ``__pos`` in that partition, in the partition's own row
+    order: ``monotonically_increasing_id`` is ``(pid << 33) + position``,
+    so the position is a projection, not a window."""
+    pid = F.spark_partition_id()
+    return df.withColumn("__pid", pid).withColumn(
+        "__pos", F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33)
     )
 
 
@@ -96,17 +116,13 @@ def _prior(part: DataFrame, value: Column, combine, first):
 
 def dense_ids(df: DataFrame, id_col: str = "id", offset: int = 0) -> DataFrame:
     """Dense BIGINT ids ``offset + 1 ..`` in the frame's own partition
-    order (see the module docstring for the scheme). Requires a
-    deterministic input plan (the frame is evaluated twice);
-    parquet-backed lineage qualifies."""
-    part = df.withColumn("__pid", F.spark_partition_id()).withColumn(
-        "__ord", F.monotonically_increasing_id()
-    )
+    order: ``prior[__pid] + __pos + 1`` (see the module docstring for
+    the scheme). Requires a deterministic input plan (the frame is
+    evaluated twice and its partitions must hold the same rows both
+    times); parquet-backed lineage qualifies."""
+    part = _positions(df)
     start, _ = _prior(part, F.count(F.lit(1)), _add, offset)
-    w = Window.partitionBy("__pid").orderBy("__ord")
-    return part.withColumn(
-        id_col, F.row_number().over(w).cast("long") + start
-    ).select(id_col, *df.columns)
+    return part.withColumn(id_col, start + F.col("__pos") + 1).select(id_col, *df.columns)
 
 
 def global_row_number(
@@ -124,10 +140,7 @@ def global_row_number(
     for free (saves callers a second scan for ``count(*) OVER ()``)."""
     part = _banded(df, order_by, num_partitions)
     start, total = _prior(part, F.count(F.lit(1)), _add, 0)
-    w = Window.partitionBy("__pid").orderBy(*order_by)
-    out = part.withColumn(
-        out_col, F.row_number().over(w).cast("long") + start
-    ).drop("__pid")
+    out = part.withColumn(out_col, start + F.col("__pos") + 1).drop("__pid", "__pos")
     return (out, total) if with_total else out
 
 
@@ -157,7 +170,7 @@ def global_prior_max(
     # greatest() skips NULLs: rows with no intra-partition predecessor
     # still see the cross-partition prefix max
     out = F.greatest(prior, F.max(val_col).over(w))
-    return part.withColumn(out_col, out).drop("__pid")
+    return part.withColumn(out_col, out).drop("__pid", "__pos")
 
 
 def global_running_offset(
@@ -180,4 +193,4 @@ def global_running_offset(
     )
     return part.withColumn(
         out_col, (F.sum(val_col).over(w) - F.col(val_col) + start).cast("long")
-    ).drop("__pid")
+    ).drop("__pid", "__pos")

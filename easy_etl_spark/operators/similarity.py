@@ -648,7 +648,7 @@ def semantic_dedup_int(
 
     import numpy as np
 
-    from ..session import track_cache
+    from ..session import plan_size_bytes, track_cache
 
     # seeds: the n_lists lowest-id vectors, quantized driver-side with
     # the same floor(x·1e6 + 0.5) double arithmetic (bounded collect;
@@ -704,14 +704,7 @@ def semantic_dedup_int(
         # (plan-stats estimate, lazy — same trick as embedding_dup_pairs)
         need = max(1.0, 4.0 * parallelism / n_lists)
         b_cpu = math.ceil((math.sqrt(1.0 + 8.0 * need) - 1.0) / 2.0)
-        try:
-            size = int(
-                str(emb._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-            )
-            if size <= 0 or size > (1 << 50):
-                size = None
-        except Exception:
-            size = None
+        size = plan_size_bytes(emb)
         b_bytes = (
             1 if size is None else max(1, math.ceil(size / n_lists / (8 << 20)))
         )

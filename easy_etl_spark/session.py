@@ -278,6 +278,23 @@ def pin_frame(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
+def plan_size_bytes(df: DataFrame) -> int | None:
+    """Catalyst's size estimate of ``df``'s optimized plan: a
+    DRIVER-SIDE statistic (file splits × compression factor), so reading
+    it runs no job and scans nothing. ``None`` when the estimate is
+    unusable: non-file lineage (an in-memory or JDBC frame) reports the
+    8 EiB default."""
+    from py4j.protocol import Py4JError
+
+    try:
+        # py4j maps the scala BigInt to a plain int; str() also covers
+        # JavaObject-shaped returns on other Spark builds
+        size = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    except (AttributeError, ValueError, Py4JError):
+        return None
+    return size if 0 < size <= (1 << 50) else None
+
+
 def reclaim_blocks(spark: SparkSession | None = None) -> None:
     """Promptly reclaim storage blocks of DEAD checkpointed frames.
 

@@ -16,18 +16,29 @@ module-level functions every sink (ParquetSink, JdbcSink,
 TransactionalParquetSink, DeltaTableSink) builds its load from:
 
   - ``ids_past_max``: dense surrogate ids past the target's max id;
-  - ``keyed_changes``: the incoming rows with their ids resolved —
-    matched rows carry the target's id, inserts get fresh ids;
+  - ``keyed_changes``: the incoming rows with their ids resolved by one
+    ``src ⟕ id_map`` join with a hit flag — matched rows carry the
+    target's id, inserts get fresh ids;
   - ``append_state`` / ``upsert_state``: the full new table state,
     ``target ⟕anti src ∪ changes`` for an upsert (the logical plan a
     Delta MERGE compiles to), with ``ensure`` and drop-sync applied.
+
+Building a state runs no Spark job when the batch is small: fresh ids
+are ``max(id) + rank`` inside the write plan, the max a broadcast
+one-row aggregate and the rank a ``row_number`` in
+``monotonically_increasing_id`` order (``_fresh_ids``). That rank runs
+in one task, so it is gated on Catalyst's job-free size estimate of the
+batch against the session's broadcast threshold (``_fits_one_task``);
+a larger batch, or one whose size is unknown (an in-memory or JDBC
+frame), pays the eager ``max(id)`` and ``dense_ids`` offsets instead.
+The load is then one write action over one lazy plan.
 
 Each sink keeps only its storage commit (directory swap, JDBC rename,
 commit-log claim, Delta MERGE); the interface is format-agnostic on
 purpose.
 
 Scale notes: the anti-join shuffles on the upsert keys — that is the
-unavoidable shuffle of any merge. Surrogate ids come from
+unavoidable shuffle of any merge. Ids past the gate come from
 ``operators.ranking.dense_ids`` (re-exported here), whose module
 docstring holds the account of the partition-offset scheme.
 """
@@ -38,37 +49,75 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.ranking import dense_ids
+from ..session import plan_size_bytes
+
+
+def _fits_one_task(df: DataFrame) -> bool:
+    """Whether Catalyst's job-free size estimate of ``df`` is within the
+    session's broadcast threshold, the size the engine already moves
+    through one task. A plan whose estimate is unusable does not fit,
+    nor does any plan when broadcasting is off (threshold -1)."""
+    size = plan_size_bytes(df)
+    threshold = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return size is not None and size <= threshold
+
+
+def _fresh_ids(df: DataFrame, current: DataFrame | None, id_col: str, in_plan: bool) -> DataFrame:
+    """``df`` with dense ``id_col`` values ``max(current.id) + 1 ..``.
+
+    ``in_plan`` numbers the rows inside the consuming plan: the max is
+    a one-row aggregate cross-joined in by broadcast, the rank a
+    ``row_number`` in ``monotonically_increasing_id`` order. That window
+    runs in one task, so callers pass ``in_plan`` only for a frame that
+    ``_fits_one_task``. Otherwise the max is read eagerly and
+    ``dense_ids`` numbers the rows in their own partitions."""
+    has_ids = current is not None and id_col in current.columns
+    if not in_plan:
+        offset = (current.agg(F.max(id_col)).first()[0] or 0) if has_ids else 0
+        return dense_ids(df, id_col, offset)
+    cols = df.columns
+    rank = F.row_number().over(Window.orderBy(F.monotonically_increasing_id()))
+    if has_ids:
+        top = current.agg(F.coalesce(F.max(id_col), F.lit(0)).alias("__top"))
+        df = df.crossJoin(F.broadcast(top))
+        rank = rank + F.col("__top")
+    return df.withColumn(id_col, rank.cast("long")).select(id_col, *cols)
 
 
 def ids_past_max(df: DataFrame, current: DataFrame | None, id_col: str = "id") -> DataFrame:
     """``df`` with dense ``id_col`` values continuing past the target's
     max id (reference parity: auto-increment ``id``, README.md:180). A
-    frame that already carries ``id_col`` keeps its own ids, and the
-    ``max(id)`` job runs only when fresh ids are actually needed."""
+    frame that already carries ``id_col`` keeps its own ids. A frame
+    that ``_fits_one_task`` is numbered inside the consuming plan, so
+    building the new state runs no job; a larger one pays the eager
+    ``max(id)`` and ``dense_ids`` offsets (``_fresh_ids``)."""
     if id_col in df.columns:
         return df
-    offset = 0
-    if current is not None and id_col in current.columns:
-        offset = current.agg(F.max(id_col)).first()[0] or 0
-    return dense_ids(df, id_col, offset)
+    return _fresh_ids(df, current, id_col, _fits_one_task(df))
 
 
 def keyed_changes(current: DataFrame, df: DataFrame, keys: list[str], id_col: str = "id") -> DataFrame:
     """The incoming rows of a keyed merge with their surrogate ids
-    resolved: matched rows carry the target's id (first match per
-    key), inserts get dense ids past the current max. When ``id_col``
-    is itself a key, the incoming ids are authoritative and kept."""
+    resolved, from one ``src ⟕ id_map`` join with a hit flag: matched
+    rows carry the target's first (lowest) id for their key, inserts
+    get dense ids past the current max (``_fresh_ids``, gated on the
+    batch's size). NULL keys never match, so their rows are inserts.
+    When ``id_col`` is itself a key, the incoming ids are authoritative
+    and kept."""
     if id_col in keys:
         return df
     src = df.drop(id_col) if id_col in df.columns else df
-    id_map = current.select(id_col, *keys).dropDuplicates(keys)
-    matched = src.join(id_map, on=keys, how="inner")
-    inserts = ids_past_max(src.join(current.select(*keys), on=keys, how="left_anti"), current, id_col)
-    return matched.unionByName(inserts, allowMissingColumns=True)
+    id_map = current.groupBy(*keys).agg(F.min(id_col).alias(id_col), F.lit(True).alias("__hit"))
+    joined = src.join(id_map, on=keys, how="left")
+    hit = F.col("__hit").isNotNull()
+    inserts = joined.filter(~hit).drop("__hit", id_col)
+    return joined.filter(hit).drop("__hit").unionByName(
+        _fresh_ids(inserts, current, id_col, _fits_one_task(src))
+    )
 
 
 def append_state(

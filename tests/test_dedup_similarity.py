@@ -6,6 +6,7 @@ paths on the driver's documents/embeddings tables.
 from __future__ import annotations
 
 import math
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -111,6 +112,21 @@ def test_embedding_dup_pairs(spark):
     pairs = {(r["id_a"], r["id_b"]): r["cosine"] for r in
              dedup.embedding_dup_pairs(emb, threshold=0.9).collect()}
     assert set(pairs) == {(1, 2)} and pairs[(1, 2)] > 0.99
+
+
+def test_embedding_dup_pairs_budget_error_names_real_scale_paths(spark):
+    """Over the pair budget the operator refuses before any job, and
+    every ``module.name`` scale path its message cites exists."""
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0, 0.0]) for i in range(10)], "vec_id long, embedding array<float>"
+    )
+    with pytest.raises(ValueError, match="exceeds the exact-verifier budget") as err:
+        dedup.embedding_dup_pairs(emb, threshold=0.9, max_pairs=1)
+    modules = {"dedup": dedup, "similarity": similarity}
+    cited = re.findall(r"\b(dedup|similarity)\.(\w+)", str(err.value))
+    assert len(cited) == 3, cited
+    for mod, name in cited:
+        assert callable(getattr(modules[mod], name, None)), f"{mod}.{name}"
 
 
 def test_embedding_dup_pairs_no_driver_collect(spark, monkeypatch):

@@ -208,3 +208,52 @@ def test_sink_contract_append_then_keyed_and_id_keyed_upsert(
     assert _rows(sink, "id", "k", "v") == [
         (1, 1, "a"), (2, 2, "B"), (3, 3, "C"), (4, 4, "d")
     ]
+
+
+def _parquet_batch(spark, tmp_path_factory, rows, schema):
+    """A file-backed batch: its plan carries a size estimate, so it is
+    numbered inside the write plan when small (an in-memory frame has
+    none and always takes the eager path)."""
+    path = str(tmp_path_factory.mktemp("batch") / "b")
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+@pytest.mark.parametrize("kind", ["parquet", "txn", "jdbc"])
+def test_sink_contract_id_edges(spark, tmp_path_factory, kind):
+    sink = _contract_sink(kind, spark, tmp_path_factory)
+    # a target with id gaps (max 9, three rows) and a duplicate key (k=1)
+    sink.append(spark.createDataFrame([(1, 1, "a"), (5, 1, "b"), (9, 2, "c")], "id long, k int, v string"))
+    sink.upsert(
+        _parquet_batch(
+            spark, tmp_path_factory,
+            [(1, "A"), (3, "d"), (None, "n1"), (None, "n2"), (4, "e"), (4, "f")], "k int, v string",
+        ),
+        ["k"],
+    )
+    rows = _rows(sink, "id", "k", "v")
+    # the duplicated key takes its first id; the untouched row keeps its id
+    assert [r for r in rows if r[0] <= 9] == [(1, 1, "A"), (9, 2, "c")]
+    # inserts start past max(id), not past the row count; NULL keys never
+    # match, and duplicate new keys in one batch each get their own id
+    inserts = [r for r in rows if r[0] > 9]
+    assert sorted(r[0] for r in inserts) == [10, 11, 12, 13, 14]
+    assert sorted((r[1] is None, r[1] or 0, r[2]) for r in inserts) == [
+        (False, 3, "d"), (False, 4, "e"), (False, 4, "f"), (True, 0, "n1"), (True, 0, "n2")
+    ]
+    # a batch above the size gate (here: no broadcast threshold at all)
+    # is numbered by the eager dense_ids path and stays dense
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "-1")
+    try:
+        sink.upsert(
+            _parquet_batch(spark, tmp_path_factory, [(2, "C"), (6, "g"), (None, "n3")], "k int, v string"),
+            ["k"],
+        )
+    finally:
+        spark.conf.set(conf, old)
+    rows = _rows(sink, "id", "k", "v")
+    assert (9, 2, "C") in rows
+    assert sorted(r[0] for r in rows) == [1, 9, 10, 11, 12, 13, 14, 15, 16]
+    assert {r[2] for r in rows if r[0] > 14} == {"g", "n3"}

@@ -129,3 +129,22 @@ def test_banded_rank_deterministic_on_large_raw_scan(spark, tmp_path):
         outs.append(got)
         release_caches()
     assert outs[0] == outs[1], "rank assignment drifted between invocations"
+
+
+def test_surrogate_consumer_reads_the_pin_as_a_scan(spark, tmp_path):
+    """Keyed-dimension ids are positions in the pinned partitions: a
+    consumer of ``with_surrogate_id`` plans no Window and no
+    ``Exchange hashpartitioning(__pid)`` over the pinned scan, and reads
+    a dimension-sized pin in one coalesced task."""
+    from easy_etl_spark.operators.links import clear_surrogate_cache, with_surrogate_id
+
+    path = str(tmp_path / "dim")
+    spark.range(300).selectExpr("id * 7 % 300 AS k", "concat('v', id) AS v").write.parquet(path)
+    clear_surrogate_cache()
+    keyed = with_surrogate_id(spark.read.parquet(path), "k")
+    consumer = keyed.groupBy("v").agg(F.min("id").alias("id"))
+    plan = consumer._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan and "hashpartitioning(__pid" not in plan
+    assert keyed.rdd.getNumPartitions() == 1
+    assert sorted((r.k, r.id) for r in keyed.collect()) == [(k, k + 1) for k in range(300)]
+    clear_surrogate_cache()

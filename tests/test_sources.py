@@ -122,3 +122,28 @@ def test_compact_shrinks_files_preserves_values(spark, tmp_path):
     sink.compact(target_rows_per_file=40)  # ceil(100/40) = 3
     assert len(sink.data_files()) == 3
     assert sorted(r.id for r in sink.read().collect()) == before
+
+
+def test_sink_states_build_without_jobs(spark, tmp_path):
+    """Below the size gate a load's new table state is one lazy plan:
+    building ``upsert_state`` / ``append_state`` runs no Spark job."""
+    from easy_etl_spark.sources.sinks import ParquetSink, append_state, upsert_state
+
+    sink = ParquetSink(spark, str(tmp_path / "t"))
+    sink.append(spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"))
+    current = sink.read()
+    spark.createDataFrame([(2, "B"), (3, "c")], "k int, v string").write.parquet(str(tmp_path / "b"))
+    batch = spark.read.parquet(str(tmp_path / "b"))  # file-backed: sized below the gate
+    sc = spark.sparkContext
+    sc.setJobGroup("sink-state-build", "build only")
+    try:
+        states = [upsert_state(current, batch, ["k"]), append_state(current, batch)]
+        jobs = sc.statusTracker().getJobIdsForGroup("sink-state-build")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []
+    assert sorted(tuple(r) for r in states[0].select("id", "k", "v").collect()) == [
+        (1, 1, "a"), (2, 2, "B"), (3, 3, "c")
+    ]
+    assert sorted(r["id"] for r in states[1].collect()) == [1, 2, 3, 4]
