@@ -12,13 +12,31 @@ partition counts at 100 TB), small broadcast threshold (dims region/
 nation/supplier/part/customer are genuinely small; facts never
 broadcast), and file-split sizing left to Spark's defaults so scans
 parallelize by HDFS/S3 block.
+
+Table resolution: every engine parquet read (``load_table``, the sinks'
+reads, the streaming source's static schema, ``file_scan``) goes through
+``read_parquet``, which skips Spark's schema-inference job when what
+that inference reads is unchanged. With ``mergeSchema`` off Spark infers
+from the footer of one data file, the partition-directory names and a
+few session confs (``_INFER_CONFS``), so the inferred ``StructType`` is
+remembered under exactly that key: the set of per-file footer
+signatures (Parquet schema text plus key-value metadata, read once per
+(file, size, mtime_ns) with ``pyarrow.parquet.read_metadata``), the set
+of partition-directory relpaths and the conf values. The path is not
+part of the key. Plain inference runs, and nothing is remembered, when
+the footers differ, a ``_metadata`` / ``_common_metadata`` summary file
+is present, the path is not local, or the walk raises. Visible files
+follow Spark's rules (``_hidden``).
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: All driver-provided tables (TESTDATA.md).
 TABLES = (
@@ -117,30 +135,194 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-_NANO_TS_CACHE: dict[str, tuple[str, ...]] = {}
+#: Session confs Spark's parquet schema inference reads: the footer
+#: type mapping, the partition-value typing, and the merge switch.
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.session.timeZone",
+)
+
+#: Table roots and schemas remembered; the least recently used goes first.
+_MEMO_CAP = 256
 
 
-def _nano_ts_columns(path: str) -> tuple[str, ...]:
-    """Columns stored as parquet timestamp[ns] (read by Spark as long
-    under nanosAsLong). Inspected once per path via pyarrow footer —
-    a metadata read, no data scan."""
-    if path not in _NANO_TS_CACHE:
-        import pyarrow.dataset as ds
-        import pyarrow.types as pat
+class _Footer(NamedTuple):
+    size: int
+    mtime_ns: int
+    #: sha256 of the Parquet schema text and the key-value metadata
+    sig: str
+    #: columns the footer stores as timestamp[ns] (Arrow's view)
+    nanos: tuple[str, ...]
 
-        schema = ds.dataset(path, format="parquet").schema
-        _NANO_TS_CACHE[path] = tuple(
-            f.name for f in schema if pat.is_timestamp(f.type) and f.type.unit == "ns"
-        )
-    return _NANO_TS_CACHE[path]
+
+#: table root -> {relpath: _Footer} of the files it held at its last
+#: walk; each walk replaces the root's entry, so only files that still
+#: exist are kept
+_FOOTERS: dict[str, dict[str, _Footer]] = {}
+#: inference key (_schema_key) -> the StructType Spark inferred for it
+_SCHEMAS: dict[tuple, StructType] = {}
+_MEMO_LOCK = threading.Lock()
+
+
+def _remember(memo: dict, key, value) -> None:
+    """Put ``key`` last in ``memo``, evicting from the front past the cap."""
+    with _MEMO_LOCK:
+        memo.pop(key, None)
+        memo[key] = value
+        while len(memo) > _MEMO_CAP:
+            del memo[next(iter(memo))]
+
+
+#: Parquet summary files: Spark reads its schema from them when present
+_SUMMARY_FILES = ("_common_metadata", "_metadata")
+
+
+def _hidden(name: str) -> bool:
+    """Spark's ``InMemoryFileIndex.shouldFilterOutPathName`` for names
+    other than the summary files: names starting with ``.`` or ``_``
+    (but ``_`` names holding ``=`` are partition dirs) and
+    ``._COPYING_`` files are not part of the table."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _footer(file: str, st: os.stat_result) -> _Footer:
+    import hashlib
+
+    import pyarrow.parquet as pq
+    import pyarrow.types as pat
+
+    md = pq.read_metadata(file)
+    # str(ParquetSchema)'s first line is the object's address; the
+    # Parquet types stay distinct here (INT96 and INT64 nanos are both
+    # timestamp[ns] in Arrow, but Spark reads them differently)
+    text = str(md.schema).split("\n", 1)[1]
+    meta = repr(sorted((md.metadata or {}).items()))
+    return _Footer(
+        st.st_size,
+        st.st_mtime_ns,
+        hashlib.sha256(f"{text}\0{meta}".encode()).hexdigest(),
+        tuple(
+            f.name
+            for f in md.schema.to_arrow_schema()
+            if pat.is_timestamp(f.type) and f.type.unit == "ns"
+        ),
+    )
+
+
+def _footers(path: str) -> list[tuple[str, _Footer]] | None:
+    """Visible files of the local table at ``path`` with their footers,
+    sorted by relative path (Spark's order); None when Spark's inference
+    is not a function of them alone: a non-local or glob path, or a
+    ``_metadata`` / ``_common_metadata`` summary file. A footer is read
+    once per (file, size, mtime_ns)."""
+    if "://" in path or any(c in path for c in "*?[{\\"):
+        return None
+    path = os.path.abspath(path)
+    if os.path.isfile(path):
+        root, files = os.path.dirname(path), [(os.path.basename(path), os.stat(path))]
+    else:
+        root, files, todo = path, [], [""]
+        while todo:
+            rel = todo.pop()
+            with os.scandir(os.path.join(root, rel)) as it:
+                for e in it:
+                    if e.name.startswith(_SUMMARY_FILES):
+                        return None
+                    if _hidden(e.name):
+                        continue
+                    r = os.path.join(rel, e.name)
+                    if e.is_dir():
+                        todo.append(r)
+                    else:
+                        files.append((r, e.stat()))
+    known = _FOOTERS.get(path, {})
+    memo = {}
+    for rel, st in sorted(files):
+        f = known.get(rel)
+        if f is None or (f.size, f.mtime_ns) != (st.st_size, st.st_mtime_ns):
+            f = _footer(os.path.join(root, rel), st)
+        memo[rel] = f
+    _remember(_FOOTERS, path, memo)
+    return list(memo.items())
+
+
+def _schema_key(spark: SparkSession, footers) -> tuple | None:
+    """What Spark's schema inference (mergeSchema off) reads: the footer
+    of one data file, the partition-directory names and a few confs.
+    None when the files' footers differ (Spark's choice then depends on
+    which file sorts first) or there is no file."""
+    sigs = {f.sig for _, f in footers}
+    if len(sigs) != 1:
+        return None
+    dirs = frozenset(os.path.dirname(rel) for rel, _ in footers) - {""}
+    return (sigs.pop(), dirs, tuple(spark.conf.get(k, None) for k in _INFER_CONFS))
+
+
+def _arrow_nanos(path: str) -> tuple[str, ...]:
+    import pyarrow.dataset as ds
+    import pyarrow.types as pat
+
+    schema = ds.dataset(path, format="parquet").schema
+    return tuple(f.name for f in schema if pat.is_timestamp(f.type) and f.type.unit == "ns")
+
+
+def _resolve(spark: SparkSession, path: str) -> tuple[DataFrame, list | None]:
+    """``read_parquet`` plus the table's footers (``_footers``)."""
+    try:
+        footers = _footers(path)
+        key = _schema_key(spark, footers) if footers else None
+    except Exception:
+        # resolving only saves a job: on any failure Spark's own read
+        # below runs, and raises its own error if the table is unreadable
+        footers = key = None
+    schema = _SCHEMAS.get(key) if key is not None else None
+    if schema is not None:
+        _remember(_SCHEMAS, key, schema)
+        df = spark.read.schema(schema).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        if key is not None:
+            _remember(_SCHEMAS, key, df.schema)
+    return df, footers
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """The engine's one parquet table read: ``spark.read.parquet(path)``
+    without the schema-inference job when what that inference reads is
+    unchanged. The inferred ``StructType`` is remembered under
+    (footer signature, partition-directory relpaths, inference confs),
+    not under the path, so a table rewritten with the same schema, a
+    growing directory and each new same-shaped batch file all reuse it
+    through ``spark.read.schema(...)``. Plain inference runs, and
+    nothing is remembered, when the files' footers differ, a summary
+    file is present, the path is not local, or the walk raises."""
+    return _resolve(spark, path)[0]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar parquet scan — Catalyst prunes columns & pushes filters.
 
+    The table is resolved by ``read_parquet``: a table whose files'
+    footers, partition directories and inference confs match a schema
+    Spark already inferred (from any path) is read with that schema and
+    runs no job; differing footers, summary files, a non-local path or
+    a failed walk fall back to Spark's own inference.
+
     Nanosecond timestamp columns come back as long (session conf
     nanosAsLong) and are converted to micro timestamps here; the
-    integer floor-division matches DuckDB's ns→us semantics.
+    integer floor-division matches DuckDB's ns→us semantics. Which
+    columns those are is read from the same footers, so a path
+    rewritten from micros to nanos is converted.
     """
     from pyspark.sql import functions as F
 
@@ -155,10 +337,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     path = table_path(sf_dir, name)
-    df = spark.read.parquet(path)
+    df, footers = _resolve(spark, path)
     from pyspark.sql import types as _T
 
-    for c in _nano_ts_columns(path):
+    # Spark reads the first file's footer, so its nanosecond columns are
+    # the table's (when the footers differ, Spark's pick is that file too)
+    for c in footers[0][1].nanos if footers else _arrow_nanos(path):
         # Guard on the Spark-read dtype: INT96 files also report ns in
         # the pyarrow footer but Spark reads them as TIMESTAMP already.
         if not isinstance(df.schema[c].dataType, _T.LongType):

@@ -24,6 +24,8 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import read_parquet
+
 
 def resolve_sql(sql: str) -> str:
     """``*.sql`` path → file contents; anything else verbatim
@@ -62,6 +64,8 @@ def file_scan(spark: SparkSession, path: str, fmt: str | None = None, **options:
     if fmt is None:
         ext = os.path.splitext(path)[1].lstrip(".").lower()
         fmt = {"pq": "parquet", "txt": "text"}.get(ext, ext or "parquet")
+    if fmt == "parquet" and not options:
+        return read_parquet(spark, path)
     reader = spark.read
     if fmt == "csv":
         options.setdefault("header", "true")

@@ -53,7 +53,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.ranking import dense_ids
-from ..session import plan_size_bytes
+from ..session import plan_size_bytes, read_parquet
 
 
 def _fits_one_task(df: DataFrame) -> bool:
@@ -246,10 +246,10 @@ class ParquetSink:
                 raise ValueError(
                     f"version {version} not retained (have {self.versions()})"
                 )
-            return self.spark.read.parquet(p)
+            return read_parquet(self.spark, p)
         if not self.exists():
             return None
-        return self.spark.read.parquet(self.path)
+        return read_parquet(self.spark, self.path)
 
     def columns(self) -> list[str]:
         cur = self.read()
@@ -373,7 +373,7 @@ class ParquetSink:
         rewrites are the unavoidable cost of purging history."""
         for v in self.versions():
             p = self._version_path(v)
-            snap = self.spark.read.parquet(p)
+            snap = read_parquet(self.spark, p)
             if snap.filter(hit).isEmpty():
                 continue
             keep = snap.filter(~hit)

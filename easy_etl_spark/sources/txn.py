@@ -55,6 +55,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import read_parquet
 from .sinks import append_state, compaction_input, upsert_state
 
 
@@ -192,7 +193,7 @@ class TransactionalParquetSink:
         if v not in self.versions():
             raise ValueError(f"version {v} not committed (have {self.versions()})")
         rec = self._commit_record(v)
-        return self.spark.read.parquet(os.path.join(self.path, rec["dir"]))
+        return read_parquet(self.spark, os.path.join(self.path, rec["dir"]))
 
     # -- writes ------------------------------------------------------
     def _stage(self, df: DataFrame) -> str:

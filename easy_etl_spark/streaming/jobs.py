@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
+from ..session import read_parquet
 from .windows import _dec_sum
 
 
@@ -34,8 +35,7 @@ def read_events_stream(
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if schema is None:
-        static = spark.read.parquet(path)
-        schema = static.schema
+        schema = read_parquet(spark, path).schema
     reader = spark.readStream.schema(schema)
     for k, v in (options or {}).items():
         reader = reader.option(k, v)

@@ -24,6 +24,7 @@ import pytest
 import easy_etl_spark
 from easy_etl_spark.plans.explain import plan_facts
 from easy_etl_spark.queries import QUERIES
+from easy_etl_spark.session import TABLES, load_table, table_path
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -51,6 +52,52 @@ SKIP = {
 # stay empty.
 GLOBAL_SORT_OK: set[str] = set()
 
+# Queries whose construction still runs Spark jobs, measured at sf0.001
+# with every table's schema already resolved. They are eager driver
+# round trips: banded ranking (pin + offsets collect), iterative graph
+# and text loops, and scalars collected into the plan (ROADMAP 3(b),
+# 6). This list may only shrink; a query leaves it when its build runs
+# no job.
+BUILD_JOBS_OK = {
+    "association_rules",
+    "bfs_hop_histogram",
+    "boilerplate_trigrams",
+    "bpe_encode_stats",
+    "bpe_merges",
+    "classifier_eval",
+    "conversion_latency",
+    "corpus_build_report",
+    "curate_corpus",
+    "dedup_clusters",
+    "equi_depth_histogram",
+    "incremental_watermark",
+    "k_center_coreset",
+    "kaplan_meier_retention",
+    "knn_ivf",
+    "knn_ivf_int",
+    "knn_pq_int",
+    "ks_two_sample",
+    "leakage_safe_splits",
+    "link_closest_shipdate",
+    "link_customer_nation",
+    "logrank_test",
+    "mann_whitney_u",
+    "pagerank_top20",
+    "pareto_revenue_deciles",
+    "pca_project_2d",
+    "quantile_normalize_values",
+    "range_join_binned",
+    "semantic_dedup",
+    "sequence_packing",
+    "skyline_parts",
+    "snm_candidate_pairs",
+    "spearman_rho",
+    "temperature_mix",
+    "tfidf_keywords",
+    "vocab_coverage_curve",
+    "vocab_encode",
+}
+
 
 def _global_sorts(df) -> int:
     """Count Exchange SinglePartition nodes whose parent (within the
@@ -66,16 +113,42 @@ def _global_sorts(df) -> int:
 
 
 @pytest.fixture(scope="module")
-def all_dfs(spark, sf_dir):
-    out = {}
+def built(spark, sf_dir):
+    """Every registered query's DataFrame, and the Spark jobs building it
+    ran (each query in its own job group). The resolver has seen every
+    table first, so no query pays a table's first schema inference."""
+    for t in TABLES:
+        if os.path.exists(table_path(sf_dir, t)):
+            load_table(spark, sf_dir, t)
+    sc = spark.sparkContext
+    dfs, jobs = {}, {}
     for name, fn in QUERIES.items():
         if name in SKIP:
             continue
+        group = f"build:{name}"
+        sc.setJobGroup(group, "construction only")
         try:
-            out[name] = fn(spark, sf_dir)
+            dfs[name] = fn(spark, sf_dir)
         except Exception as e:  # pragma: no cover — surface which query broke
             pytest.fail(f"{name}: plan construction failed: {e}")
-    return out
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    return dfs, jobs
+
+
+@pytest.fixture(scope="module")
+def all_dfs(built):
+    return built[0]
+
+
+def test_queries_build_without_jobs(built):
+    """Building a query is driver-side planning: a Spark job during
+    construction is an eager round trip the plan could carry instead."""
+    jobs = built[1]
+    offenders = {n: k for n, k in jobs.items() if k and n not in BUILD_JOBS_OK}
+    assert not offenders, f"queries running jobs while built: {offenders}"
 
 
 def test_no_cartesian_product_anywhere(all_dfs):
